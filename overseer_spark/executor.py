@@ -108,23 +108,21 @@ class Executor:
         self.error_sink = error_sink
         self.current_job: Job | None = None
 
-    def handleable(self, ready_ids: list[str]) -> list[Job]:
-        """Hydrate + keep jobs whose type has a handler (worker.clj:14-22).
-        NB at scale this is a broadcast semi-join on the jobs DataFrame, not
-        N point lookups — see Worker.detect."""
-        jobs = (self.store.job_info(i) for i in ready_ids)
-        return [j for j in jobs if j is not None and j.type in self.handlers]
+    def ready_ids(self) -> list[str]:
+        """Sorted ids of ready jobs whose type has a handler (worker.clj:14-22).
+        The type filter runs inside the store's ready scan (R12)."""
+        return self.store.jobs_ready(types=frozenset(self.handlers))
 
-    def tick(self, ready: list[Job] | None = None) -> int | None:
-        """One scheduling step; returns the finished job's status, or None
-        if nothing ran (empty queue or lost reservation race)."""
+    def tick(self, ready: list[str] | None = None) -> int | None:
+        """One scheduling step over the ready ids; returns the finished
+        job's status, or None if nothing ran (empty queue or lost
+        reservation race)."""
         if ready is None:
-            ready = self.handleable(self.store.jobs_ready())
+            ready = self.ready_ids()
         if not ready:
             time.sleep(min(self.sleep_time, 0.01))
             return None
-        job = self.rng.choice(ready)
-        reserved = self.store.reserve_job(job.id)
+        reserved = self.store.reserve_job(self.rng.choice(ready))
         if reserved is None:
             return None  # lost the race to another worker
         self.current_job = reserved
@@ -137,7 +135,7 @@ class Executor:
         """Drain the queue: loop until no job is ready. Single-process
         convenience used by tests and ``api.run_pipeline``."""
         for _ in range(max_ticks):
-            ready = self.handleable(self.store.jobs_ready())
+            ready = self.ready_ids()
             if not ready:
                 return
             self.tick(ready)

@@ -24,14 +24,21 @@ from pyspark.sql import functions as F
 from overseer_spark.core import STATUS_FINISHED, STATUS_STARTED, STATUS_UNSTARTED
 
 
-def ready_jobs(jobs: DataFrame, deps: DataFrame, limit: int | None = None) -> DataFrame:
+def ready_jobs(
+    jobs: DataFrame,
+    deps: DataFrame,
+    limit: int | None = None,
+    types: Iterable[str] | None = None,
+) -> DataFrame:
     """Unstarted jobs whose every dependency is finished (R3/Q31).
 
     ``blocked = deps ⋉ (jobs where status != finished on dep_id)``;
     ``ready = unstarted ▷ blocked`` (anti-join). Equivalent to the
     reference's NOT IN subquery (overseer/store/jdbc.clj:230-242) but with
     explicit semi/anti joins, which Catalyst plans without a correlated
-    subquery and AQE broadcasts.
+    subquery and AQE broadcasts. ``types`` keeps only jobs of those types
+    (the R12 handleable filter), pushed onto the unstarted side before the
+    anti-join; None leaves the plan unchanged.
     """
     unfinished = jobs.filter(F.col("status") != STATUS_FINISHED).select(
         F.col("id").alias("dep_id")
@@ -39,11 +46,12 @@ def ready_jobs(jobs: DataFrame, deps: DataFrame, limit: int | None = None) -> Da
     blocked = (
         deps.join(unfinished, "dep_id", "left_semi").select("job_id").distinct()
     )
-    ready = (
-        jobs.filter(F.col("status") == STATUS_UNSTARTED)
-        .join(blocked, jobs["id"] == blocked["job_id"], "left_anti")
-        .select("id")
-    )
+    unstarted = jobs.filter(F.col("status") == STATUS_UNSTARTED)
+    if types is not None:
+        unstarted = unstarted.filter(F.col("type").isin(sorted(types)))
+    ready = unstarted.join(
+        blocked, jobs["id"] == blocked["job_id"], "left_anti"
+    ).select("id")
     return ready.limit(limit) if limit else ready
 
 

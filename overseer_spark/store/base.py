@@ -13,12 +13,15 @@ with the same semantics contract:
   overseer/store/jdbc.clj:214-221).
 - ``jobs_ready`` / ``jobs_dead`` may bound their result size
   (overseer/core.clj:145-152).
+- ``jobs_ready(types=...)`` keeps only jobs whose type is in ``types``
+  (the R12 handleable filter, overseer/worker.clj:14-22), applied inside
+  the backend's ready scan and before ``limit``.
 """
 
 from __future__ import annotations
 
 import abc
-from typing import Any, Mapping
+from typing import AbstractSet, Any, Mapping
 
 from overseer_spark.core import Job, JobGraph
 
@@ -65,8 +68,11 @@ class Store(abc.ABC):
         """Abort job + all transitive dependents (R11 over the R5 closure)."""
 
     @abc.abstractmethod
-    def jobs_ready(self, limit: int | None = None) -> list[str]:
-        """Unstarted jobs whose deps are all finished (R3)."""
+    def jobs_ready(
+        self, limit: int | None = None, types: AbstractSet[str] | None = None
+    ) -> list[str]:
+        """Sorted ids of unstarted jobs whose deps are all finished (R3);
+        with ``types``, only jobs of those types (R12)."""
 
     @abc.abstractmethod
     def jobs_dead(self, threshold: int, limit: int | None = None) -> list[str]:

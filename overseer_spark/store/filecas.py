@@ -39,7 +39,7 @@ import json
 import os
 import time
 import uuid
-from typing import Any, Iterable, Mapping
+from typing import AbstractSet, Any, Iterable, Mapping
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -99,6 +99,10 @@ class FileCASStore(Store):
         self.fsync = fsync
         self._jobs_dir = os.path.join(path, "jobs")
         self._deps_dir = os.path.join(path, "dependencies")
+        # job id -> (newest version file name seen, its parsed payload).
+        # Version files are immutable and compact() deletes only superseded
+        # ones, so a payload is stale exactly when a newer name appears.
+        self._seen: dict[str, tuple[str, dict]] = {}
 
     # -- file protocol ----------------------------------------------------
 
@@ -128,17 +132,26 @@ class FileCASStore(Store):
             os.unlink(tmp)
 
     def _latest(self, job_id: str) -> dict | None:
+        """The job's newest payload. Lists the job directory and parses the
+        newest version file only if this handle has not parsed it before;
+        callers get the cached dict and must not mutate it."""
         jdir = os.path.join(self._jobs_dir, job_id)
         try:
-            versions = [
-                n for n in os.listdir(jdir) if n.startswith("v") and n.endswith(".json")
-            ]
+            newest = max(
+                (n for n in os.listdir(jdir) if n.startswith("v") and n.endswith(".json")),
+                default=None,
+            )
         except FileNotFoundError:
             return None
-        if not versions:
+        if newest is None:
             return None
-        with open(os.path.join(jdir, max(versions))) as f:
-            return json.load(f)
+        seen = self._seen.get(job_id)
+        if seen is not None and seen[0] == newest:
+            return seen[1]
+        with open(os.path.join(jdir, newest)) as f:
+            cur = json.load(f)
+        self._seen[job_id] = (newest, cur)
+        return cur
 
     @staticmethod
     def _to_job(p: Mapping[str, Any]) -> Job:
@@ -342,11 +355,13 @@ class FileCASStore(Store):
         except Exception:
             return self.spark.createDataFrame([], schema=DEPENDENCIES_SCHEMA)
 
-    def jobs_ready(self, limit: int | None = None) -> list[str]:
+    def jobs_ready(
+        self, limit: int | None = None, types: AbstractSet[str] | None = None
+    ) -> list[str]:
         if self.spark is not None:
             from overseer_spark.operators.scheduling import ready_jobs
 
-            df = ready_jobs(self.jobs_df(), self.deps_df(), limit)
+            df = ready_jobs(self.jobs_df(), self.deps_df(), limit, types)
             return sorted(r["id"] for r in df.collect())
         # Spark-less worker path: same truth table computed in-driver
         latest = self._all_latest()
@@ -355,7 +370,9 @@ class FileCASStore(Store):
         ready = sorted(
             p["id"]
             for p in latest
-            if p["status"] == STATUS_UNSTARTED and p["id"] not in blocked
+            if p["status"] == STATUS_UNSTARTED
+            and p["id"] not in blocked
+            and (types is None or p["type"] in types)
         )
         return ready[:limit] if limit else ready
 

@@ -73,7 +73,7 @@ import json
 import os
 import time
 import uuid
-from typing import Any, Mapping, Protocol
+from typing import AbstractSet, Any, Mapping, Protocol
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -686,11 +686,13 @@ class ManifestCASStore(Store):
         rows = [{"job_id": a, "dep_id": b} for a, b in self._replay().edges]
         return self.spark.createDataFrame(rows, schema=DEPENDENCIES_SCHEMA)
 
-    def jobs_ready(self, limit: int | None = None) -> list[str]:
+    def jobs_ready(
+        self, limit: int | None = None, types: AbstractSet[str] | None = None
+    ) -> list[str]:
         if self.spark is not None:
             from overseer_spark.operators.scheduling import ready_jobs
 
-            df = ready_jobs(self.jobs_df(), self.deps_df(), limit)
+            df = ready_jobs(self.jobs_df(), self.deps_df(), limit, types)
             return sorted(r["id"] for r in df.collect())
         state = self._replay()
         unfinished = {
@@ -700,7 +702,9 @@ class ManifestCASStore(Store):
         ready = sorted(
             i
             for i, p in state.jobs.items()
-            if p["status"] == STATUS_UNSTARTED and i not in blocked
+            if p["status"] == STATUS_UNSTARTED
+            and i not in blocked
+            and (types is None or p["type"] in types)
         )
         return ready[:limit] if limit else ready
 

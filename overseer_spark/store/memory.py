@@ -11,7 +11,7 @@ from __future__ import annotations
 import threading
 import time
 from dataclasses import replace
-from typing import Any, Mapping
+from typing import AbstractSet, Any, Mapping
 
 from overseer_spark.core import (
     STATUS_FINISHED,
@@ -110,7 +110,9 @@ class MemoryStore(Store):
             job = self._jobs.get(job_id)
             return replace(job) if job is not None else None
 
-    def jobs_ready(self, limit: int | None = None) -> list[str]:
+    def jobs_ready(
+        self, limit: int | None = None, types: AbstractSet[str] | None = None
+    ) -> list[str]:
         with self._lock:
             unfinished = {
                 jid for jid, j in self._jobs.items() if j.status != STATUS_FINISHED
@@ -119,7 +121,9 @@ class MemoryStore(Store):
             ready = sorted(
                 jid
                 for jid, j in self._jobs.items()
-                if j.status == STATUS_UNSTARTED and jid not in blocked
+                if j.status == STATUS_UNSTARTED
+                and jid not in blocked
+                and (types is None or j.type in types)
             )
             return ready[:limit] if limit else ready
 

@@ -39,7 +39,7 @@ import os
 import threading
 import time
 from dataclasses import replace
-from typing import Any, Mapping
+from typing import AbstractSet, Any, Mapping
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -353,8 +353,10 @@ class SparkLogStore(Store):
             job = self._current(job_id)
             return replace(job) if job is not None else None
 
-    def jobs_ready(self, limit: int | None = None) -> list[str]:
-        df = ready_jobs(self.jobs_df(), self.deps_df(), limit)
+    def jobs_ready(
+        self, limit: int | None = None, types: AbstractSet[str] | None = None
+    ) -> list[str]:
+        df = ready_jobs(self.jobs_df(), self.deps_df(), limit, types)
         return sorted(r["id"] for r in df.collect())
 
     def jobs_dead(self, threshold: int, limit: int | None = None) -> list[str]:

@@ -42,7 +42,7 @@ import json
 import sqlite3
 import threading
 import time
-from typing import Any, Mapping
+from typing import AbstractSet, Any, Mapping
 
 from overseer_spark.core import (
     STATUS_ABORTED,
@@ -267,16 +267,23 @@ class SqliteStore(Store):
         ).fetchone()
         return _row_to_job(row) if row is not None else None
 
-    def jobs_ready(self, limit: int | None = None) -> list[str]:
+    def jobs_ready(
+        self, limit: int | None = None, types: AbstractSet[str] | None = None
+    ) -> list[str]:
         # NOT IN anti-join over unfinished dependencies (jdbc.clj:233-246)
         sql = """SELECT id FROM overseer_jobs
                  WHERE status = ?
                    AND id NOT IN (
                      SELECT d.job_id FROM overseer_dependencies d
                      JOIN overseer_jobs j ON j.id = d.dep_id
-                     WHERE j.status != ?)
-                 ORDER BY id"""
+                     WHERE j.status != ?)"""
         params: tuple = (STATUS_UNSTARTED, STATUS_FINISHED)
+        if types is not None:
+            if not types:
+                return []
+            sql += f" AND type IN ({','.join('?' for _ in types)})"
+            params = params + tuple(sorted(types))
+        sql += " ORDER BY id"
         if limit is not None:
             sql += " LIMIT ?"
             params = params + (limit,)

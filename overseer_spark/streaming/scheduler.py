@@ -61,7 +61,7 @@ class StreamingWorker:
             self._monitor_pass()
         ran = 0
         while True:
-            ready = self.executor.handleable(self.store.jobs_ready())
+            ready = self.executor.ready_ids()
             if not ready:
                 break
             if self.executor.tick(ready) is not None:

@@ -37,7 +37,7 @@ class Worker:
             self.config.rand_seed,
             self.config.error_sink,
         )
-        self._ready_cache: list = []
+        self._ready_cache: list[str] = []
         self._cache_lock = threading.Lock()
         self._stop = threading.Event()
         self._threads: list[threading.Thread] = []
@@ -49,7 +49,7 @@ class Worker:
         shared cache (worker.clj:30-36)."""
         while not self._stop.is_set():
             try:
-                ready = self.executor.handleable(self.store.jobs_ready())
+                ready = self.executor.ready_ids()
                 with self._cache_lock:
                     self._ready_cache = ready
             except Exception:
@@ -65,10 +65,10 @@ class Worker:
             if not ready:
                 self._stop.wait(self.config.sleep_time)
                 continue
-            job = self.executor.rng.choice(ready)
+            job_id = self.executor.rng.choice(ready)
             with self._cache_lock:
-                self._ready_cache = [j for j in self._ready_cache if j.id != job.id]
-            reserved = self.store.reserve_job(job.id)
+                self._ready_cache = [i for i in self._ready_cache if i != job_id]
+            reserved = self.store.reserve_job(job_id)
             if reserved is None:
                 continue  # lost race to another worker
             self.executor.current_job = reserved
@@ -77,7 +77,7 @@ class Worker:
 
                 run_job(self.store, self.handlers, reserved)
             except Exception:
-                log.exception("executor loop error running %s", job.id)
+                log.exception("executor loop error running %s", job_id)
             finally:
                 self.executor.current_job = None
 

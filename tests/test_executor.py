@@ -206,3 +206,92 @@ def test_worker_loops_end_to_end():
         worker.stop()
     assert done == ["a", "b"]
     assert store.job_info(next(iter(store._jobs))).status == STATUS_FINISHED
+
+
+# -- tick cost + pick order: one ready scan per tick, no per-id hydration ---
+
+
+class CountingStore:
+    """Delegates to a store and counts calls per protocol method."""
+
+    def __init__(self, store):
+        self._store = store
+        self.calls: dict[str, int] = {}
+
+    def __getattr__(self, name):
+        attr = getattr(self._store, name)
+        if not callable(attr):
+            return attr
+
+        def counted(*args, **kwargs):
+            self.calls[name] = self.calls.get(name, 0) + 1
+            return attr(*args, **kwargs)
+
+        return counted
+
+
+def test_tick_is_one_ready_scan_and_no_hydration():
+    """One tick over 100 ready jobs: a single type-filtered ``jobs_ready``,
+    zero ``job_info`` point reads, one reservation, one finish."""
+    store = CountingStore(MemoryStore())
+    store.transact_graph(graph_of(*((f"j{i:03d}", []) for i in range(100))))
+    store.calls.clear()
+    handlers = {f"t-j{i:03d}": (lambda job: None) for i in range(100)}
+    assert Executor(store, handlers, rand_seed=3).tick() == STATUS_FINISHED
+    assert store.calls == {"jobs_ready": 1, "reserve_job": 1, "finish_job": 1}
+
+
+def test_drain_never_reserves_unhandled_type():
+    """A job no handler takes is never reserved and stays unstarted."""
+    store = CountingStore(MemoryStore())
+    store.transact_graph(graph_of(("a", []), ("b", ["a"]), ("orphan", [])))
+    Executor(store, {"t-a": lambda j: None, "t-b": lambda j: None}).run_until_complete()
+    assert store.calls["reserve_job"] == store.calls["finish_job"] == 2
+    assert "job_info" not in store.calls
+    assert store.job_info("b").status == STATUS_FINISHED
+    assert store.job_info("orphan").status == STATUS_UNSTARTED
+
+
+def _layered_graph():
+    """Four layers of six handled jobs, plus unhandled ``skip`` jobs whose
+    ids sort among them."""
+    pairs = []
+    for layer in range(4):
+        for i in range(6):
+            deps = [f"L{layer - 1}-{(i + k) % 6}" for k in (0, 1)] if layer else []
+            pairs.append((f"L{layer}-{i}", deps))
+        pairs.append((f"L{layer}-skip", []))
+    g = graph_of(*pairs)
+    for n, job in enumerate(g.jobs):
+        job.type = "skip" if job.id.endswith("skip") else ("extract", "load")[n % 2]
+    return g
+
+
+@pytest.mark.parametrize("seed", [0, 7, 12345])
+def test_seeded_pick_order_matches_hydrating_loop(seed):
+    """``rand_seed`` determinism: the executor runs jobs in the order the
+    former hydrate-then-filter loop picked them — ``rng.choice`` over the
+    sorted ids' hydrated jobs whose type has a handler."""
+    import random
+
+    order: list[str] = []
+    handlers = {"extract": lambda j: order.append(j.id), "load": lambda j: order.append(j.id)}
+    store = MemoryStore()
+    store.transact_graph(_layered_graph())
+    Executor(store, handlers, rand_seed=seed).run_until_complete()
+
+    ref = MemoryStore()
+    ref.transact_graph(_layered_graph())
+    rng = random.Random(seed)
+    expected: list[str] = []
+    while True:
+        jobs = (ref.job_info(i) for i in ref.jobs_ready())
+        ready = [j for j in jobs if j is not None and j.type in handlers]
+        if not ready:
+            break
+        job = rng.choice(ready)
+        ref.reserve_job(job.id)
+        ref.finish_job(job.id)
+        expected.append(job.id)
+    assert order == expected
+    assert len(order) == 24

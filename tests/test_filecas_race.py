@@ -14,6 +14,7 @@ import multiprocessing as mp
 import os
 
 from overseer_spark.core import (
+    STATUS_ABORTED,
     STATUS_FINISHED,
     STATUS_STARTED,
     STATUS_UNSTARTED,
@@ -215,3 +216,65 @@ def test_kill9_mid_publish_leaves_store_consistent(tmp_path):
     after = store.job_info("j1")
     assert after.status == STATUS_FINISHED
     assert after.lock_version == before + 1
+
+
+def test_cached_reads_follow_another_handles_writes(tmp_path):
+    """A handle's parsed-version cache never serves stale state: handle A
+    warms its cache, handle B then drives every transition (with a compact
+    in between), and after each step A reads exactly what a fresh handle
+    reads. Mutating a Job A returned does not leak into A's next read."""
+    path = str(tmp_path / "cas")
+    a = FileCASStore(None, path)
+    a.install()
+    a.transact_graph(
+        JobGraph(
+            jobs=[
+                Job(id="p", type="t", args={"k": [1]}),
+                Job(id="q", type="t"),
+                Job(id="r", type="t"),
+                Job(id="s", type="t"),
+                Job(id="child", type="t"),
+            ],
+            edges=[("child", "s")],
+        )
+    )
+    b = FileCASStore(None, path)
+    ids = ["child", "p", "q", "r", "s"]
+
+    def check():
+        fresh = FileCASStore(None, path)
+        assert [a.job_info(i) for i in ids] == [fresh.job_info(i) for i in ids]
+        assert a.jobs_ready() == fresh.jobs_ready()
+        for status in range(5):
+            assert a.jobs_with_status(status) == fresh.jobs_with_status(status)
+
+    assert a.jobs_ready() == ["p", "q", "r", "s"]  # warm A's cache
+    steps = [
+        lambda: b.reserve_job("p"),
+        lambda: b.heartbeat_job("p"),
+        lambda: b.finish_job("p"),
+        b.compact,
+        lambda: b.reserve_job("q"),
+        lambda: b.fail_job("q", {"reason": "boom"}),
+        lambda: b.reserve_job("r"),
+        lambda: b.reset_job("r"),
+        b.compact,
+        lambda: b.abort_job("s"),
+    ]
+    for step in steps:
+        step()
+        check()
+    assert a.job_info("p").status == STATUS_FINISHED
+    assert a.job_info("q").failure == {"reason": "boom"}
+    assert a.job_info("r").status == STATUS_UNSTARTED
+    assert a.job_info("r").lock_version == 2
+    assert a.job_info("child").status == STATUS_ABORTED
+
+    job = a.job_info("p")
+    job.args["k"].append(2)
+    job.status = STATUS_STARTED
+    a.job_info("q").failure["reason"] = "mutated"
+    assert a.job_info("p").args == {"k": [1]}
+    assert a.job_info("p").status == STATUS_FINISHED
+    assert a.job_info("q").failure == {"reason": "boom"}
+    check()

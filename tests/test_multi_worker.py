@@ -131,7 +131,7 @@ def _drain_with_executor(path: str, barrier, out):
     barrier.wait()
     idle_rounds = 0
     while idle_rounds < 3:
-        ready = ex.handleable(store.jobs_ready())
+        ready = ex.ready_ids()
         if not ready:
             # another process may still be mid-job; only stop once no job
             # is unstarted or started

@@ -23,28 +23,51 @@ from overseer_spark.store.base import IllegalTransition
 from overseer_spark.store.memory import MemoryStore
 
 
-@pytest.fixture(params=["memory", "sparklog", "filecas", "manifest", "sqlite"])
-def store(request, spark, tmp_path):
-    if request.param == "memory":
+def _make_store(kind, spark, tmp_path):
+    """A fresh installed store; a ``-nospark`` suffix builds the Spark-less
+    worker handle of that backend."""
+    attached = None if kind.endswith("-nospark") else spark
+    if kind == "memory":
         s = MemoryStore()
-    elif request.param == "sqlite":
+    elif kind == "sqlite":
         from overseer_spark.store.sqlite import SqliteStore
 
         s = SqliteStore(str(tmp_path / "store.db"))
-    elif request.param == "filecas":
+    elif kind.startswith("filecas"):
         from overseer_spark.store.filecas import FileCASStore
 
-        s = FileCASStore(spark, str(tmp_path / "store"))
-    elif request.param == "manifest":
+        s = FileCASStore(attached, str(tmp_path / "store"))
+    elif kind.startswith("manifest"):
         from overseer_spark.store.manifest import ManifestCASStore
 
-        s = ManifestCASStore(spark, str(tmp_path / "store"))
+        s = ManifestCASStore(attached, str(tmp_path / "store"))
     else:
         from overseer_spark.store.sparklog import SparkLogStore
 
         s = SparkLogStore(spark, str(tmp_path / "store"))
     s.install()
     return s
+
+
+@pytest.fixture(params=["memory", "sparklog", "filecas", "manifest", "sqlite"])
+def store(request, spark, tmp_path):
+    return _make_store(request.param, spark, tmp_path)
+
+
+@pytest.fixture(
+    params=[
+        "memory",
+        "sqlite",
+        "filecas",
+        "filecas-nospark",
+        "manifest",
+        "manifest-nospark",
+        "sparklog",
+    ]
+)
+def any_store(request, spark, tmp_path):
+    """Every backend, including each CAS store's Spark-less read path."""
+    return _make_store(request.param, spark, tmp_path)
 
 
 def graph_of(*pairs, args=None):
@@ -133,7 +156,9 @@ def test_heartbeat_updates(store):
 
 # -- ready set truth table (datomic_test.clj:14-64 / FIXTURES.md §B) -------
 
-def test_ready_set_truth_table(store):
+def test_ready_set_truth_table(any_store):
+    """R3 truth table; with ``types`` (R12, run inside the ready scan) the
+    same table restricted to those types, filtered before ``limit``."""
     g = graph_of(
         ("j-unstarted-nodeps", []),
         ("j-started", []),
@@ -143,12 +168,22 @@ def test_ready_set_truth_table(store):
         ("j-dep-mixed", ["j-unstarted-nodeps", "j-finished"]),
         ("j-aborted", []),
     )
-    store.transact_graph(g)
-    store.reserve_job("j-started")
-    store.reserve_job("j-finished")
-    store.finish_job("j-finished")
-    store.abort_job("j-aborted")
-    assert store.jobs_ready() == ["j-dep-finished", "j-unstarted-nodeps"]
+    any_store.transact_graph(g)
+    any_store.reserve_job("j-started")
+    any_store.reserve_job("j-finished")
+    any_store.finish_job("j-finished")
+    any_store.abort_job("j-aborted")
+    ready = ["j-dep-finished", "j-unstarted-nodeps"]
+    assert any_store.jobs_ready() == ready
+    assert any_store.jobs_ready(types=frozenset(j.type for j in g.jobs)) == ready
+    # one ready type, two types that are not ready, one no job has
+    mixed = {"t-j-dep-finished", "t-j-started", "t-j-dep-mixed", "t-no-such-type"}
+    assert any_store.jobs_ready(types=mixed) == ["j-dep-finished"]
+    # limit-then-filter would keep the first ready id, j-dep-finished
+    assert any_store.jobs_ready(limit=1, types={"t-j-unstarted-nodeps"}) == [
+        "j-unstarted-nodeps"
+    ]
+    assert any_store.jobs_ready(types=frozenset()) == []
 
 
 def test_ready_set_limit(store):
