@@ -89,9 +89,15 @@ def run_job(
 
 
 class Executor:
-    """The scheduler tick loop (executor.clj:62-78): pick a *random* ready
-    job (contention spreading, executor.clj:69), CAS-reserve (skip on lost
-    race), run."""
+    """The scheduler tick loop (executor.clj:62-78): pop a *random* job from
+    the ready snapshot (contention spreading, executor.clj:69-72),
+    CAS-reserve it (skip on a lost race), run it.
+
+    The snapshot is the sorted, type-filtered id list of the last ready
+    scan; the tick rescans only when it is empty, so a drain costs one
+    scan per snapshot, not one per job. An id that went stale in the
+    meantime (another worker reserved it) loses its reservation, a cheap
+    point read; the store's CAS keeps every job exactly-once."""
 
     def __init__(
         self,
@@ -107,22 +113,36 @@ class Executor:
         self.rng = random.Random(rand_seed)
         self.error_sink = error_sink
         self.current_job: Job | None = None
+        self._ready: list[str] = []
 
     def ready_ids(self) -> list[str]:
         """Sorted ids of ready jobs whose type has a handler (worker.clj:14-22).
         The type filter runs inside the store's ready scan (R12)."""
         return self.store.jobs_ready(types=frozenset(self.handlers))
 
-    def tick(self, ready: list[str] | None = None) -> int | None:
-        """One scheduling step over the ready ids; returns the finished
-        job's status, or None if nothing ran (empty queue or lost
+    def refresh(self) -> list[str]:
+        """Replace the ready snapshot with a fresh scan (the detector pass,
+        worker.clj:30-36) and return it."""
+        self._ready = ready = self.ready_ids()
+        return ready
+
+    def has_ready(self) -> bool:
+        """Whether the snapshot holds an id; an empty one is rescanned first."""
+        return bool(self._ready or self.refresh())
+
+    def tick(self) -> int | None:
+        """One scheduling step: pop a random id from the ready snapshot
+        (rescanning if it is empty), reserve it and run it. Returns the
+        job's final status, or None if nothing ran (empty queue or lost
         reservation race)."""
-        if ready is None:
-            ready = self.ready_ids()
+        # bind once: Worker's detector thread may swap in a new snapshot
+        ready = self._ready or self.refresh()
         if not ready:
             time.sleep(min(self.sleep_time, 0.01))
             return None
-        reserved = self.store.reserve_job(self.rng.choice(ready))
+        job_id = self.rng.choice(ready)
+        ready.remove(job_id)
+        reserved = self.store.reserve_job(job_id)
         if reserved is None:
             return None  # lost the race to another worker
         self.current_job = reserved
@@ -132,11 +152,10 @@ class Executor:
             self.current_job = None
 
     def run_until_complete(self, max_ticks: int = 100_000) -> None:
-        """Drain the queue: loop until no job is ready. Single-process
-        convenience used by tests and ``api.run_pipeline``."""
+        """Drain the queue: tick until a rescan finds no ready job.
+        Single-process convenience used by tests and ``api.run_pipeline``."""
         for _ in range(max_ticks):
-            ready = self.ready_ids()
-            if not ready:
+            if not self.has_ready():
                 return
-            self.tick(ready)
+            self.tick()
         raise RuntimeError("run_until_complete: exceeded max_ticks")

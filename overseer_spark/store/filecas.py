@@ -103,6 +103,9 @@ class FileCASStore(Store):
         # Version files are immutable and compact() deletes only superseded
         # ones, so a payload is stale exactly when a newer name appears.
         self._seen: dict[str, tuple[str, dict]] = {}
+        # dependency file name -> its parsed edges. The files are
+        # content-addressed (g-<sha>.json) and never rewritten.
+        self._edge_files: dict[str, list[tuple[str, str]]] = {}
 
     # -- file protocol ----------------------------------------------------
 
@@ -305,11 +308,13 @@ class FileCASStore(Store):
         for name in files:
             if name.startswith("."):
                 continue
-            with open(os.path.join(self._deps_dir, name)) as f:
-                for line in f:
-                    if line.strip():
-                        e = json.loads(line)
-                        edges.append((e["job_id"], e["dep_id"]))
+            parsed = self._edge_files.get(name)
+            if parsed is None:
+                with open(os.path.join(self._deps_dir, name)) as f:
+                    rows = [json.loads(line) for line in f if line.strip()]
+                parsed = [(e["job_id"], e["dep_id"]) for e in rows]
+                self._edge_files[name] = parsed
+            edges.extend(parsed)
         return edges
 
     def jobs_with_status(self, status: int) -> list[str]:

@@ -40,7 +40,11 @@ state every ``checkpoint_every`` commits, Delta-style, so replay cost is
 O(checkpoint_every), not O(history); ``compact()`` additionally deletes
 log entries already covered by the newest checkpoint. Readers that race
 ``compact()`` and hit a deleted entry simply re-list and retry from the
-newest checkpoint.
+newest checkpoint. A handle caches its last replayed head state, and head
+replays list the log only from that cached head onward
+(``ConditionalWriter.list(prefix, start_after=)``, S3 ``StartAfter``/GCS
+``startOffset``), as Delta readers list from a known version: a commit
+costs O(delta), not O(log length).
 
 Local emulation caveat: a real object-store PUT is atomic — a key either
 holds the complete body or does not exist. The filesystem test double
@@ -68,6 +72,7 @@ conditional writes; only the DataFrame read surface requires ``spark``.
 
 from __future__ import annotations
 
+import bisect
 import hashlib
 import json
 import os
@@ -101,7 +106,11 @@ class ConditionalWriter(Protocol):
 
     def put_if_absent(self, key: str, data: bytes) -> bool: ...
     def get(self, key: str) -> bytes | None: ...
-    def list(self, prefix: str) -> list[str]: ...
+    def list(self, prefix: str, start_after: str | None = None) -> list[str]:
+        """Sorted keys under ``prefix``; with ``start_after``, only keys
+        sorting after it (S3 ``StartAfter``, GCS ``startOffset``)."""
+        ...
+
     def delete(self, key: str) -> None: ...
     def rename_away(self, key: str, dest: str) -> bool: ...
     def age_seconds(self, key: str) -> float | None: ...
@@ -146,12 +155,15 @@ class LocalConditionalWriter:
         except FileNotFoundError:
             return None
 
-    def list(self, prefix: str) -> list[str]:
+    def list(self, prefix: str, start_after: str | None = None) -> list[str]:
         try:
             names = os.listdir(self._p(prefix))
         except FileNotFoundError:
             return []
-        return sorted(f"{prefix}/{n}" for n in names)
+        keys = sorted(f"{prefix}/{n}" for n in names)
+        if start_after is not None:
+            keys = keys[bisect.bisect_right(keys, start_after) :]
+        return keys
 
     def delete(self, key: str) -> None:
         try:
@@ -244,6 +256,14 @@ class _State:
                 self.jobs[a["id"]] = nxt
         return True
 
+    def copy(self) -> "_State":
+        """Shallow copy: ``apply`` replaces payload dicts, never mutates them."""
+        s = _State()
+        s.version = self.version
+        s.jobs = dict(self.jobs)
+        s.edges = list(self.edges)
+        return s
+
     def snapshot(self) -> dict:
         return {
             "version": self.version,
@@ -287,15 +307,14 @@ class ManifestCASStore(Store):
             path, fsync=fsync
         )
         self._writer_id = uuid.uuid4().hex
-        # incremental-replay cache: snapshot of the last replayed head
-        # state; head replays list the log but only READ entries newer
-        # than the cache (object-store GETs are the expensive part).
-        # _cache_head_crc pins the crc of the newest entry the cache
-        # applied so reuse can detect a quarantine-and-rewrite of that
-        # slot (TOCTOU: a slow writer's torn entry can be quarantined by
-        # another reader AFTER we read it whole and cached it).
-        self._cache_snap: dict | None = None
-        self._cache_head_crc: str | None = None
+        # incremental-replay cache: (last replayed head state, crc of the
+        # newest entry it applied). Head replays list and read only keys
+        # from the cached head onward. The crc lets reuse detect a
+        # quarantine-and-rewrite of the head slot (TOCTOU: a slow writer's
+        # torn entry can be quarantined by another reader AFTER we read it
+        # whole and cached it). One attribute, so threads sharing a handle
+        # always see a matching pair; the cached state is never mutated.
+        self._cache: tuple[_State, str | None] | None = None
 
     # -- commit log --------------------------------------------------------
 
@@ -310,10 +329,19 @@ class ManifestCASStore(Store):
     def _ckpt_key(self, version: int) -> str:
         return f"{self.LOG}/{version:0{_ENTRY_W}d}.ckpt.json"
 
-    def _scan_log(self) -> tuple[list[int], list[int]]:
-        """(sorted entry versions, sorted checkpoint versions)."""
+    @property
+    def _cache_head_crc(self) -> str | None:
+        cache = self._cache
+        return cache[1] if cache is not None else None
+
+    def _scan_log(self, from_version: int = -1) -> tuple[list[int], list[int]]:
+        """(sorted entry versions, sorted checkpoint versions), listing only
+        keys at or after ``from_version`` when it is a real version."""
+        start_after = (
+            f"{self.LOG}/{from_version:0{_ENTRY_W}d}" if from_version >= 0 else None
+        )  # a bare version sorts just before its own .ckpt.json and .json
         entries, ckpts = [], []
-        for key in self.client.list(self.LOG):
+        for key in self.client.list(self.LOG, start_after=start_after):
             name = key.rsplit("/", 1)[-1]
             if name.endswith(".ckpt.json"):
                 ckpts.append(int(name[: -len(".ckpt.json")]))
@@ -358,53 +386,49 @@ class ManifestCASStore(Store):
 
         Head replays (``upto=None``) are incremental: entries are
         immutable once validly committed, so the previous replayed state
-        is a correct prefix and only entries newer than the cache are
-        fetched — a poll loop costs one LIST + one head-verification GET
-        (``_cache_valid``) plus the delta, not O(history) GETs. Any
-        inconsistency (gap from compaction, a quarantined slot, a head
-        crc mismatch) drops the cache and restarts from the newest
-        checkpoint."""
-        use_cache = upto is None
-        for attempt in range(_MAX_RETRIES):
-            all_entries, all_ckpts = self._scan_log()
-            entries, ckpts = all_entries, all_ckpts
-            if upto is not None:
-                entries = [v for v in entries if v <= upto]
-                ckpts = [v for v in ckpts if v <= upto]
-                if (all_entries or all_ckpts) and not (
-                    ckpts or (entries and entries[0] == 0)
-                ):
-                    # history at/below `upto` is gone (compacted past it):
-                    # raise rather than silently replaying to empty state
-                    raise TimeTravelUnavailable(
-                        f"version {upto} not available for time travel: "
-                        f"history retained from version "
-                        f"{min(all_ckpts + all_entries)} onward"
-                    )
-            state = _State()
-            if use_cache and self._cache_snap is not None:
-                state = _State.from_snapshot(self._cache_snap)
-                if state.version > (entries[-1] if entries else -1):
-                    # log truncated below the cache (foreign compact with
-                    # a newer checkpoint we haven't applied) — rebuild
-                    state = _State()
-                elif not self._cache_valid(state.version, entries, ckpts):
+        is a correct prefix and only keys from the cached head onward are
+        listed and read — a poll loop costs one LIST from the head + one
+        head-verification GET (``_cache_valid``) plus the delta, not
+        O(history). Any inconsistency (gap from compaction, a quarantined
+        slot, a head crc mismatch) drops the cache and retries from a full
+        listing.
+
+        The returned state may be the cached one: callers must not
+        mutate it."""
+        for _ in range(_MAX_RETRIES):
+            cache = self._cache if upto is None else None  # one read per replay
+            state, head_crc = _State(), None
+            if cache is not None:
+                entries, ckpts = self._scan_log(cache[0].version)
+                if not self._cache_valid(cache, entries, ckpts):
                     # the cached head entry was quarantined (and possibly
                     # rewritten by a new proposer) after we applied it —
-                    # the cache is a wrong prefix; rebuild from scratch
-                    self._cache_snap = None
-                    self._cache_head_crc = None
-                    state = _State()
-            head_crc = (
-                self._cache_head_crc if state.version >= 0 else None
-            )  # only a cache-sourced prefix carries a pinned head crc
+                    # the cache is a wrong prefix; relist in full
+                    self._cache = None
+                    continue
+                state, head_crc = cache
+            else:
+                entries, ckpts = all_entries, all_ckpts = self._scan_log()
+                if upto is not None:
+                    entries = [v for v in entries if v <= upto]
+                    ckpts = [v for v in ckpts if v <= upto]
+                    if (all_entries or all_ckpts) and not (
+                        ckpts or (entries and entries[0] == 0)
+                    ):
+                        # history at/below `upto` is gone (compacted past
+                        # it): raise rather than silently replaying to
+                        # empty state
+                        raise TimeTravelUnavailable(
+                            f"version {upto} not available for time travel: "
+                            f"history retained from version "
+                            f"{min(all_ckpts + all_entries)} onward"
+                        )
             if state.version < 0 and ckpts:
                 data = self.client.get(self._ckpt_key(ckpts[-1]))
-                if data is not None:
-                    snap = _decode_entry(data)
-                    if snap is not None:
-                        state = _State.from_snapshot(snap)
-                        head_crc = None  # checkpoint states are fence-verified
+                snap = _decode_entry(data) if data is not None else None
+                if snap is not None:
+                    state = _State.from_snapshot(snap)
+                    head_crc = None  # checkpoint states are fence-verified
             restart = False
             for v in entries:
                 if v <= state.version:
@@ -422,22 +446,25 @@ class ManifestCASStore(Store):
                     # re-list, so retry
                     restart = True
                     break
+                if cache is not None and state is cache[0]:
+                    state = state.copy()  # the cached state stays immutable
                 state.apply(entry)
                 state.version = v
                 head_crc = _entry_crc(entry)
+            if ckpts and ckpts[-1] > state.version:
+                # compact() truncated the log past the cached head: the
+                # newest checkpoint holds commits this replay lacks
+                restart = True
             if not restart:
-                if use_cache:
-                    self._cache_snap = state.snapshot()
-                    self._cache_head_crc = head_crc
-                    # hand back a private copy so callers can't mutate
-                    # the cached prefix
-                    return _State.from_snapshot(self._cache_snap)
+                if upto is None:
+                    self._cache = (state, head_crc)
                 return state
-            self._cache_snap = None  # cache may straddle the anomaly
-            self._cache_head_crc = None
+            self._cache = None  # cache may straddle the anomaly
         raise RuntimeError("manifest replay livelock: log churning")
 
-    def _cache_valid(self, version: int, entries: list[int], ckpts: list[int]) -> bool:
+    def _cache_valid(
+        self, cache: tuple[_State, str | None], entries: list[int], ckpts: list[int]
+    ) -> bool:
         """Re-verify the cached prefix's head slot before reusing it.
 
         The TOCTOU this closes: under the local emulation a torn entry
@@ -448,14 +475,16 @@ class ManifestCASStore(Store):
         version-N prefix.  One GET of the head slot per cached replay
         re-verifies the applied entry's crc; any mismatch (or a vanished
         slot not superseded by a checkpoint) drops the cache."""
-        if version < 0 or self._cache_head_crc is None:
+        state, head_crc = cache
+        version = state.version
+        if version < 0 or head_crc is None:
             return True
         if version not in entries:
             # entry gone: fine only if a checkpoint at/after it covers it
             # (compaction); a bare disappearance means quarantine
             return any(c >= version for c in ckpts)
         entry = self._read_entry(version)
-        return entry is not None and _entry_crc(entry) == self._cache_head_crc
+        return entry is not None and _entry_crc(entry) == head_crc
 
     def _maybe_checkpoint(self, state: _State) -> None:
         if state.version >= 0 and (state.version + 1) % self.checkpoint_every == 0:
@@ -488,7 +517,7 @@ class ManifestCASStore(Store):
             }
             # self-check: the entry must apply on the state it was built
             # from — guards builder bugs from ever burning a log slot
-            probe = _State.from_snapshot(state.snapshot())
+            probe = state.copy()
             if not probe.apply(entry):
                 raise RuntimeError("commit builder produced an inapplicable entry")
             probe.version = state.version + 1
@@ -499,6 +528,7 @@ class ManifestCASStore(Store):
             fence = self._read_entry(probe.version)
             if fence is None or fence.get("writer") != self._writer_id:
                 continue  # quarantined + reclaimed: we lost, retry
+            self._cache = (probe, _entry_crc(fence))  # the next replay starts here
             self._maybe_checkpoint(probe)
             return entry, state
         raise RuntimeError(f"commit livelock after {_MAX_RETRIES} tries")

@@ -50,21 +50,22 @@ class StreamingWorker:
         self.jobs_per_tick = jobs_per_tick
         self.checkpoint_dir = checkpoint_dir
         self.executor = Executor(
-            store, handlers, self.config.sleep_time, self.config.rand_seed
+            store,
+            handlers,
+            self.config.sleep_time,
+            self.config.rand_seed,
+            self.config.error_sink,
         )
         self.query = None
 
     def _tick(self, _batch_df, batch_id: int) -> None:
-        """One micro-batch = one monitor pass + one detector pass + run
-        of the ready set."""
+        """One micro-batch = one monitor pass, then executor ticks until a
+        rescan of the ready snapshot finds nothing (or ``jobs_per_tick``)."""
         if self.config.heartbeat.enabled:
             self._monitor_pass()
         ran = 0
-        while True:
-            ready = self.executor.ready_ids()
-            if not ready:
-                break
-            if self.executor.tick(ready) is not None:
+        while self.executor.has_ready():
+            if self.executor.tick() is not None:
                 ran += 1
             if self.jobs_per_tick and ran >= self.jobs_per_tick:
                 break

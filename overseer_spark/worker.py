@@ -37,49 +37,33 @@ class Worker:
             self.config.rand_seed,
             self.config.error_sink,
         )
-        self._ready_cache: list[str] = []
-        self._cache_lock = threading.Lock()
         self._stop = threading.Event()
         self._threads: list[threading.Thread] = []
 
     # -- the four loops ----------------------------------------------------
 
     def _detector_loop(self) -> None:
-        """Every detector_sleep_time: recompute the ready set into the
-        shared cache (worker.clj:30-36)."""
+        """Every detector_sleep_time: refresh the executor's ready snapshot
+        (worker.clj:30-36)."""
         while not self._stop.is_set():
             try:
-                ready = self.executor.ready_ids()
-                with self._cache_lock:
-                    self._ready_cache = ready
+                self.executor.refresh()
             except Exception:
                 log.exception("detector loop error")
             self._stop.wait(self.config.detector_sleep_time)
 
     def _executor_loop(self) -> None:
-        """Pop from the cached ready set; idle-backoff when empty
-        (executor.clj:62-87)."""
+        """Tick while the ready snapshot holds ids; idle-backoff when a
+        rescan finds none (executor.clj:62-87)."""
         while not self._stop.is_set():
-            with self._cache_lock:
-                ready = list(self._ready_cache)
-            if not ready:
-                self._stop.wait(self.config.sleep_time)
-                continue
-            job_id = self.executor.rng.choice(ready)
-            with self._cache_lock:
-                self._ready_cache = [i for i in self._ready_cache if i != job_id]
-            reserved = self.store.reserve_job(job_id)
-            if reserved is None:
-                continue  # lost race to another worker
-            self.executor.current_job = reserved
             try:
-                from overseer_spark.executor import run_job
-
-                run_job(self.store, self.handlers, reserved)
+                if not self.executor.has_ready():
+                    self._stop.wait(self.config.sleep_time)
+                    continue
+                self.executor.tick()
             except Exception:
-                log.exception("executor loop error running %s", job_id)
-            finally:
-                self.executor.current_job = None
+                log.exception("executor loop error")
+                self._stop.wait(self.config.sleep_time)
 
     def _heartbeat_loop(self) -> None:
         """Every heartbeat.sleep_time: beat for the in-flight job

@@ -23,6 +23,7 @@ from overseer_spark.core import (
     STATUS_ABORTED,
     STATUS_FAILED,
     STATUS_FINISHED,
+    STATUS_STARTED,
     STATUS_UNSTARTED,
     Job,
     JobGraph,
@@ -128,6 +129,44 @@ def test_run_pipeline_threads_config_sink():
     assert store.job_info("ok").status == STATUS_FINISHED
     assert store.job_info("no").status == STATUS_FAILED
     assert [p["job_id"] for p in seen] == ["no"]
+
+
+def test_started_worker_threads_config_sink():
+    """A long-running ``api.start`` worker delivers job failures to
+    ``Config.error_sink`` too, not only ``run_pipeline``."""
+    store = MemoryStore()
+    store.install()
+    store.transact_graph(
+        JobGraph(
+            jobs=[Job(id="ok", type="good"), Job(id="no", type="bad")],
+            edges=[],
+        )
+    )
+    seen = []
+    cfg = Config(
+        detector_sleep_time=0.05,
+        sleep_time=0.05,
+        heartbeat=HeartbeatConfig(enabled=False),
+        error_sink=seen.append,
+    )
+    handlers = {
+        "good": lambda job: None,
+        "bad": lambda job: (_ for _ in ()).throw(ValueError("nope")),
+    }
+    worker = api.start(store, handlers, cfg)
+    try:
+        deadline = time.time() + 10
+        while time.time() < deadline and (
+            store.jobs_with_status(STATUS_UNSTARTED)
+            or store.jobs_with_status(STATUS_STARTED)
+        ):
+            time.sleep(0.02)
+    finally:
+        worker.stop()
+    assert store.job_info("ok").status == STATUS_FINISHED
+    assert store.job_info("no").status == STATUS_FAILED
+    assert [p["job_id"] for p in seen] == ["no"]
+    assert seen[0]["failure"]["message"] == "nope"
 
 
 def test_monitor_fatal_path_reports_then_shuts_down():

@@ -208,7 +208,7 @@ def test_worker_loops_end_to_end():
     assert store.job_info(next(iter(store._jobs))).status == STATUS_FINISHED
 
 
-# -- tick cost + pick order: one ready scan per tick, no per-id hydration ---
+# -- tick cost + pick order: one ready scan per snapshot, no hydration -----
 
 
 class CountingStore:
@@ -270,8 +270,10 @@ def _layered_graph():
 @pytest.mark.parametrize("seed", [0, 7, 12345])
 def test_seeded_pick_order_matches_hydrating_loop(seed):
     """``rand_seed`` determinism: the executor runs jobs in the order the
-    former hydrate-then-filter loop picked them — ``rng.choice`` over the
-    sorted ids' hydrated jobs whose type has a handler."""
+    reference's loop picks them (executor.clj:69-72, worker.clj:14-36): a
+    detector pass hydrates the ready ids and keeps the handled ones, then
+    each tick takes ``rng.choice`` from that cache and removes it; the
+    cache is refilled only when it is empty."""
     import random
 
     order: list[str] = []
@@ -284,14 +286,118 @@ def test_seeded_pick_order_matches_hydrating_loop(seed):
     ref.transact_graph(_layered_graph())
     rng = random.Random(seed)
     expected: list[str] = []
+    cache: list[str] = []
     while True:
-        jobs = (ref.job_info(i) for i in ref.jobs_ready())
-        ready = [j for j in jobs if j is not None and j.type in handlers]
-        if not ready:
-            break
-        job = rng.choice(ready)
-        ref.reserve_job(job.id)
-        ref.finish_job(job.id)
-        expected.append(job.id)
+        if not cache:
+            jobs = (ref.job_info(i) for i in ref.jobs_ready())
+            cache = [j.id for j in jobs if j is not None and j.type in handlers]
+            if not cache:
+                break
+        job_id = rng.choice(cache)
+        cache.remove(job_id)
+        if ref.reserve_job(job_id) is None:
+            continue
+        ref.finish_job(job_id)
+        expected.append(job_id)
     assert order == expected
     assert len(order) == 24
+
+
+def test_ticks_pop_one_snapshot():
+    """k ticks over a 100-wide ready layer share one ``jobs_ready`` scan;
+    the tick after the snapshot empties rescans."""
+    store = CountingStore(MemoryStore())
+    store.transact_graph(graph_of(*((f"j{i:03d}", []) for i in range(100))))
+    store.calls.clear()
+    handlers = {f"t-j{i:03d}": (lambda job: None) for i in range(100)}
+    ex = Executor(store, handlers, rand_seed=5)
+    for _ in range(100):
+        assert ex.tick() == STATUS_FINISHED
+    assert store.calls == {"jobs_ready": 1, "reserve_job": 100, "finish_job": 100}
+    assert ex.tick() is None  # empty snapshot: one rescan, nothing ready
+    assert store.calls["jobs_ready"] == 2
+
+
+def test_stale_snapshots_never_run_a_job_twice(tmp_path):
+    """Two executors on one FileCAS store, each holding a full snapshot
+    that the other makes stale: every job runs exactly once, the losing
+    pops cost a reservation and nothing else."""
+    from overseer_spark.store.filecas import FileCASStore
+
+    path = str(tmp_path / "cas")
+    setup = FileCASStore(None, path)
+    setup.install()
+    setup.transact_graph(graph_of(*((f"j{i:02d}", []) for i in range(40))))
+    runs: list[str] = []
+    handlers = {f"t-j{i:02d}": (lambda job: runs.append(job.id)) for i in range(40)}
+    stores = [CountingStore(FileCASStore(None, path)) for _ in range(2)]
+    exs = [Executor(s, handlers, sleep_time=0.0, rand_seed=i) for i, s in enumerate(stores)]
+    for ex in exs:
+        assert len(ex.refresh()) == 40
+    while any(ex._ready for ex in exs):
+        for ex in exs:
+            if ex._ready:
+                ex.tick()
+    assert sorted(runs) == sorted(set(runs)) == [f"j{i:02d}" for i in range(40)]
+    assert sum(s.calls["reserve_job"] for s in stores) == 80  # 40 lost races
+    assert all(s.calls["jobs_ready"] == 1 for s in stores)
+    assert all(setup.job_info(j).status == STATUS_FINISHED for j in runs)
+
+
+def test_run_until_complete_rescans_chain():
+    """A chain is drained one job per snapshot: each emptied snapshot is
+    rescanned, and the final empty rescan ends the drain."""
+    store = CountingStore(MemoryStore())
+    store.transact_graph(graph_of(*((f"c{i}", [f"c{i - 1}"] if i else []) for i in range(5))))
+    order: list[str] = []
+    handlers = {f"t-c{i}": (lambda job: order.append(job.id)) for i in range(5)}
+    Executor(store, handlers).run_until_complete()
+    assert order == [f"c{i}" for i in range(5)]
+    assert store.calls["jobs_ready"] == 6
+
+
+def test_threads_sharing_handle_and_snapshots_run_each_job_once(tmp_path):
+    """Worker's sharing, stressed: six executor threads on one
+    ManifestCASStore handle (one replay cache) while a detector thread
+    keeps swapping in fresh snapshots, with a tiny switch interval. Every
+    job runs exactly once."""
+    import sys
+    import threading
+
+    from overseer_spark.store.manifest import ManifestCASStore
+
+    store = ManifestCASStore(None, str(tmp_path / "manifest"))
+    store.install()
+    ids = [f"j{i:03d}" for i in range(120)]
+    store.transact_graph(graph_of(*((i, []) for i in ids)))
+    runs: list[str] = []
+    handlers = {f"t-{i}": (lambda job: runs.append(job.id)) for i in ids}
+    exs = [Executor(store, handlers, sleep_time=0.0, rand_seed=n) for n in range(6)]
+    stop = threading.Event()
+
+    def drain(ex):
+        while ex.has_ready():
+            ex.tick()
+
+    def detect():
+        while not stop.is_set():
+            for ex in exs:
+                ex.refresh()
+
+    threads = [threading.Thread(target=drain, args=(ex,)) for ex in exs]
+    detector = threading.Thread(target=detect)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in [detector, *threads]:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+        stop.set()
+        detector.join(timeout=30)
+    finally:
+        stop.set()
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in [detector, *threads])
+    assert sorted(runs) == ids
+    assert store.jobs_with_status(STATUS_FINISHED) == ids

@@ -278,3 +278,29 @@ def test_cached_reads_follow_another_handles_writes(tmp_path):
     assert a.job_info("p").status == STATUS_FINISHED
     assert a.job_info("q").failure == {"reason": "boom"}
     check()
+
+
+def test_warm_handle_sees_later_graphs(tmp_path):
+    """The parsed dependency-file cache never hides a graph: a handle that
+    already parsed one graph's edges sees a second graph another handle
+    transacts later, in both ``jobs_ready`` and ``dependents``."""
+    path = str(tmp_path / "cas")
+    a = FileCASStore(None, path)
+    a.install()
+    a.transact_graph(
+        JobGraph(jobs=[Job(id="x", type="t"), Job(id="y", type="t")], edges=[("y", "x")])
+    )
+    assert a.jobs_ready() == ["x"]
+    assert a.dependents("x") == {"y"}  # edges of the first graph now cached
+
+    b = FileCASStore(None, path)
+    b.transact_graph(
+        JobGraph(
+            jobs=[Job(id="m", type="t"), Job(id="n", type="t"), Job(id="o", type="t")],
+            edges=[("n", "m"), ("o", "n")],
+        )
+    )
+    fresh = FileCASStore(None, path)
+    assert a.jobs_ready() == fresh.jobs_ready() == ["m", "x"]
+    assert a.dependents("x") == fresh.dependents("x") == {"y"}
+    assert a.dependents("m") == fresh.dependents("m") == {"n", "o"}

@@ -378,3 +378,80 @@ def test_cached_head_quarantine_rewrite_drops_cache(tmp_path):
     # and a subsequent incremental reuse of the (now-correct) cache is
     # stable: same state, no spurious drops
     assert a.job_info("a").heartbeat == 424242
+
+
+def _same_state(a: ManifestCASStore, path: str) -> None:
+    warm, fresh = a._replay(), ManifestCASStore(None, path)._replay()
+    assert (warm.version, warm.jobs, warm.edges) == (
+        fresh.version,
+        fresh.jobs,
+        fresh.edges,
+    )
+
+
+def test_warm_handle_replay_follows_other_handles(tmp_path):
+    """O(delta) head replays never drift: after each of handle B's
+    reserve, heartbeat, finish, compact() (also one that truncates the log
+    past A's cached head) and a quarantine-and-rewrite of B's newest slot,
+    warm handle A replays exactly the state a fresh handle replays from a
+    full listing."""
+    from overseer_spark.store.manifest import _encode_entry
+
+    path = str(tmp_path / "store")
+    a = ManifestCASStore(None, path, checkpoint_every=4)
+    a.install()
+    a.transact_graph(_graph(["p", "q", "r"], [("r", "q")]))
+    b = ManifestCASStore(None, path, checkpoint_every=4)
+    _same_state(a, path)  # warm A's cache
+
+    def rewrite_head():
+        v = b.current_version()
+        assert b.client.rename_away(b._entry_key(v), "_log/.quarantine-test")
+        lv = b._replay(upto=v - 1).jobs["p"]["lock_version"]
+        entry = {
+            "v": v,
+            "writer": "someone-else",
+            "ts": 1,
+            "actions": [
+                {"op": "cas", "id": "p", "expect": lv, "set": {"heartbeat": 7}}
+            ],
+        }
+        assert b.client.put_if_absent(b._entry_key(v), _encode_entry(entry))
+
+    steps = [
+        lambda: b.reserve_job("p"),
+        lambda: b.heartbeat_job("p"),
+        lambda: b.finish_job("p"),
+        b.compact,
+        lambda: b.reserve_job("q"),
+        lambda: b.finish_job("q"),
+        rewrite_head,
+        lambda: (b.reserve_job("r"), b.heartbeat_job("r"), b.compact()),
+    ]
+    for step in steps:
+        step()
+        _same_state(a, path)
+    assert a.job_info("p").status == STATUS_FINISHED
+    assert a.jobs_ready() == []
+
+
+def test_local_writer_list_start_after(tmp_path):
+    """``list(prefix, start_after=)`` returns the sorted keys strictly
+    after ``start_after`` — S3 ``StartAfter`` semantics."""
+    from overseer_spark.store.manifest import LocalConditionalWriter
+
+    w = LocalConditionalWriter(str(tmp_path))
+    w.ensure_root("_log")
+    names = ["00000000000000000003.json", "00000000000000000003.ckpt.json",
+             "00000000000000000002.json", "00000000000000000004.json",
+             ".quarantine-1-x"]
+    for n in names:
+        assert w.put_if_absent(f"_log/{n}", b"{}")
+    assert w.list("_log") == sorted(f"_log/{n}" for n in names)
+    assert w.list("_log", start_after="_log/00000000000000000003") == [
+        "_log/00000000000000000003.ckpt.json",
+        "_log/00000000000000000003.json",
+        "_log/00000000000000000004.json",
+    ]
+    assert w.list("_log", start_after="_log/00000000000000000004.json") == []
+    assert w.list("missing", start_after="x") == []

@@ -131,8 +131,7 @@ def _drain_with_executor(path: str, barrier, out):
     barrier.wait()
     idle_rounds = 0
     while idle_rounds < 3:
-        ready = ex.ready_ids()
-        if not ready:
+        if not ex.has_ready():
             # another process may still be mid-job; only stop once no job
             # is unstarted or started
             if not store.jobs_with_status(
@@ -142,7 +141,7 @@ def _drain_with_executor(path: str, barrier, out):
             time.sleep(0.02)
             continue
         idle_rounds = 0
-        ex.tick(ready)
+        ex.tick()
     out.put(won)
 
 
