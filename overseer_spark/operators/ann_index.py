@@ -22,6 +22,9 @@ physical access path changes.
 
 from __future__ import annotations
 
+import threading
+from collections import OrderedDict
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -44,8 +47,6 @@ def build_ivf_index(
     centroids.select(
         F.col(id_col).alias("cell"), F.col(vec_col)
     ).write.mode("overwrite").parquet(f"{path}/centroids")
-    # a rebuild at the same path must not serve stale memoized centroids
-    forget_ivf_centroids(path)
     assigned = assign_cells(corpus, n_cells, id_col, vec_col, centroids)
     # co-locate per cell: ONE file per cell directory from day one (the
     # probe cost model is "list only the probed cell dirs"), instead of
@@ -55,35 +56,26 @@ def build_ivf_index(
     ).parquet(f"{path}/vectors")
 
 
-_IVF_CENTROIDS_MEMO: dict = {}
-_IVF_CENTROIDS_MEMO_MAX = 512
-
-
-def forget_ivf_centroids(path: str) -> None:
-    """Drop memoized centroid frames for ``path`` (any session) — call
-    when an index directory is deleted (per-call clone cleanup) or its
-    centroids are rewritten (build_ivf_index does this itself)."""
-    for key in [k for k in _IVF_CENTROIDS_MEMO if k[1] == path]:
-        _IVF_CENTROIDS_MEMO.pop(key, None)
-
-
 def _ivf_centroids(spark: SparkSession, path: str):
-    """(centroids frame, centroid count) memoized per (SparkContext,
-    path) — the IVF twin of _graph_index_meta (r13, guide §1.2 count
-    the actions): centroids are IMMUTABLE for an index directory's life
-    (only build_ivf_index writes them; append/delete/compact/upsert
-    never touch them — centroid drift is a documented rebuild decision),
-    yet every append paid a fresh schema-inference read plus a 2-job
-    count (assign_cells' estep="auto" sizing) and every probe another
-    inference read — ~0.3-0.6 s of per-call fixed cost on the streaming
-    ingest path."""
-    key = (spark.sparkContext.applicationId, path)
-    if key not in _IVF_CENTROIDS_MEMO:
-        if len(_IVF_CENTROIDS_MEMO) >= _IVF_CENTROIDS_MEMO_MAX:
-            _IVF_CENTROIDS_MEMO.clear()
-        df = spark.read.parquet(f"{path}/centroids")
-        _IVF_CENTROIDS_MEMO[key] = (df, df.count())
-    return _IVF_CENTROIDS_MEMO[key]
+    """(centroids frame, centroid count) of the index at ``path``, through
+    the index-part memo (see _index_part). Only the builders write
+    ``{path}/centroids``; append/upsert/delete/compact never touch it
+    (centroid drift is a rebuild decision). Memoizing saves every append
+    a schema-inference read plus the 2-job count that assign_cells'
+    estep="auto" sizing would run, and every probe another inference
+    read.
+
+    The frame is a local checkpoint of the rows, not a file scan: Spark
+    matches cached plans by a scan's root path, not its files, so a
+    probe set cached by an earlier probe would otherwise be reused for
+    centroids rewritten at the same path. A checkpointed frame is new
+    for each load, and each load is a new fingerprint."""
+
+    def load(part_dir):
+        df = spark.read.parquet(part_dir).localCheckpoint(eager=False)
+        return df, df.count()
+
+    return _index_part(spark, f"{path}/centroids", load)
 
 
 def probed_cells(
@@ -127,19 +119,96 @@ def _hadoop_fs(spark: SparkSession, path: str):
     return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
 
 
-def _tombstone_files(spark: SparkSession, path: str):
-    """(fs, [Path]) of the index's current tombstone DATA files (hidden /
-    marker files excluded). The file list — not just the directory — is
-    the unit compact_ivf_index snapshots, so deletes appended while a
-    compaction is rewriting are never swept away with the folded ones."""
-    fs, tomb_dir = _hadoop_fs(spark, f"{path}/tombstones")
-    if not fs.exists(tomb_dir):
+def _data_files(spark: SparkSession, dir_path: str):
+    """(fs, [FileStatus]) of the DATA files directly under ``dir_path``
+    (hidden and marker files excluded); a missing directory lists as
+    empty."""
+    fs, d = _hadoop_fs(spark, dir_path)
+    if not fs.exists(d):
         return fs, []
     return fs, [
-        st.getPath()
-        for st in fs.listStatus(tomb_dir)
+        st
+        for st in fs.listStatus(d)
         if not st.getPath().getName().startswith(("_", "."))
     ]
+
+
+# Index-part memo: key -> loaded value, least recently used first. The
+# lock makes the get/insert/evict sequence safe for foreachBatch ingest,
+# which runs on the streaming query's own thread.
+_INDEX_PARTS: OrderedDict = OrderedDict()
+_INDEX_PARTS_MAX = 512
+_INDEX_PARTS_LOCK = threading.Lock()
+
+
+def _index_part(spark: SparkSession, part_dir: str, load):
+    """``load(part_dir)``, memoized per (applicationId, part_dir,
+    fingerprint), where the fingerprint is the sorted (name, length) of
+    the data files in ``part_dir``, listed through the path's own Hadoop
+    FileSystem (no Spark job). Spark part-file names carry the writing
+    job's UUID, so any rewrite of the directory, by a package builder or
+    by any other writer or process, changes the key, and a copied index
+    has a new path: nothing needs to evict an entry for correctness.
+    Stale keys age out of the bounded LRU."""
+    _, files = _data_files(spark, part_dir)
+    key = (
+        spark.sparkContext.applicationId,
+        part_dir,
+        tuple(sorted((st.getPath().getName(), st.getLen()) for st in files)),
+    )
+    with _INDEX_PARTS_LOCK:
+        if key in _INDEX_PARTS:
+            _INDEX_PARTS.move_to_end(key)
+            return _INDEX_PARTS[key]
+    value = load(part_dir)  # outside the lock: loads run Spark jobs
+    with _INDEX_PARTS_LOCK:
+        _INDEX_PARTS[key] = value
+        while len(_INDEX_PARTS) > _INDEX_PARTS_MAX:
+            _INDEX_PARTS.popitem(last=False)
+    return value
+
+
+def _tombstone_files(spark: SparkSession, path: str):
+    """(fs, [Path]) of the index's current tombstone DATA files. The file
+    list — not just the directory — is the unit compact_ivf_index
+    snapshots, so deletes appended while a compaction is rewriting are
+    never swept away with the folded ones."""
+    fs, files = _data_files(spark, f"{path}/tombstones")
+    return fs, [st.getPath() for st in files]
+
+
+def _read_tombstones(spark: SparkSession, tomb_files, id_col: str):
+    """The distinct ``id_col`` values of the given tombstone files."""
+    return (
+        spark.read.parquet(*[p.toString() for p in tomb_files])
+        .select(id_col)
+        .distinct()
+    )
+
+
+def _drop_from_tombstones(spark: SparkSession, path: str, id_col: str, ids):
+    """Remove ``ids`` from the index's tombstone set, so a re-written id
+    is not masked by a tombstone of its old row. Snapshot discipline:
+    the replacement set is written BEFORE the snapshotted files are
+    removed, so a crash in between leaves only already-superseded
+    duplicate tombstones. An all-ids-dropped set writes nothing (a 0-row
+    part file would make _tombstones return a pointless empty set
+    instead of None). repartition(1), not coalesce(1): see
+    delete_from_ivf_index."""
+    fs, tomb_files = _tombstone_files(spark, path)
+    if not tomb_files:
+        return
+    tomb = spark.read.parquet(*[p.toString() for p in tomb_files])
+    if tomb.filter(F.col(id_col).isin(ids)).count() == 0:
+        return
+    remaining = eager_cache(tomb.filter(~F.col(id_col).isin(ids)).distinct())
+    if remaining.limit(1).count() > 0:
+        remaining.repartition(1).write.mode("append").parquet(
+            f"{path}/tombstones"
+        )
+    for p in tomb_files:
+        fs.delete(p, False)
+    remaining.unpersist()
 
 
 def _tombstones(spark: SparkSession, path: str, id_col: str):
@@ -148,13 +217,7 @@ def _tombstones(spark: SparkSession, path: str, id_col: str):
     FileSystem of ``path`` itself, matching how delete_from_ivf_index
     writes."""
     _, files = _tombstone_files(spark, path)
-    if not files:
-        return None
-    return (
-        spark.read.parquet(*[p.toString() for p in files])
-        .select(id_col)
-        .distinct()
-    )
+    return _read_tombstones(spark, files, id_col) if files else None
 
 
 def _swap_in(spark: SparkSession, current: str, tmp_out: str, old: str) -> None:
@@ -404,15 +467,10 @@ def graph_index_file_counts(spark: SparkSession, path: str) -> dict:
     triggers force-compaction under sustained insert ingest
     (streaming/ingest.py graph mode; the graph twin of
     max_files_per_cell). One directory listing each, no data read."""
-    out = {}
-    for name in ("qv", "edges"):
-        fs, d = _hadoop_fs(spark, f"{path}/{name}")
-        out[name] = sum(
-            1
-            for st in fs.listStatus(d)
-            if not st.getPath().getName().startswith(("_", "."))
-        )
-    return out
+    return {
+        name: len(_data_files(spark, f"{path}/{name}")[1])
+        for name in ("qv", "edges")
+    }
 
 
 def upsert_into_ivf_index(
@@ -501,24 +559,7 @@ def upsert_into_ivf_index(
     )
     # LAST: unmask the batch's ids (resurrection) — see the docstring's
     # crash-ordering argument (ADVICE r11)
-    fs_t, tomb_files = _tombstone_files(spark, path)
-    if tomb_files:
-        tomb = spark.read.parquet(*[p.toString() for p in tomb_files])
-        if tomb.filter(F.col(id_col).isin(id_list)).count() > 0:
-            remaining = eager_cache(
-                tomb.filter(~F.col(id_col).isin(id_list)).distinct()
-            )
-            if remaining.limit(1).count() > 0:
-                # snapshot discipline: replacement written BEFORE the
-                # snapshotted files go; an all-ids-resurrected set writes
-                # nothing (a 0-row part file would make _tombstones
-                # return a pointless empty set instead of None)
-                remaining.coalesce(1).write.mode("append").parquet(
-                    f"{path}/tombstones"
-                )
-            for p in tomb_files:
-                fs_t.delete(p, False)
-            remaining.unpersist()
+    _drop_from_tombstones(spark, path, id_col, id_list)
     return {"n_rewritten_cells": len(cells)}
 
 
@@ -586,11 +627,7 @@ def compact_ivf_index(
     _, tomb_files = _tombstone_files(spark, path)
     df = spark.read.parquet(vectors)
     if tomb_files:
-        tomb = (
-            spark.read.parquet(*[p.toString() for p in tomb_files])
-            .select(id_col)
-            .distinct()
-        )
+        tomb = _read_tombstones(spark, tomb_files, id_col)
         df = df.join(eager_cache(tomb), id_col, "left_anti")
     plan = compact_partitioned(spark, vectors, tmp_out, ["cell"], df=df)
     _swap_in(spark, vectors, tmp_out, f"{path}/vectors__old")
@@ -623,38 +660,19 @@ def _register_bucketed_edges(
     return tbl
 
 
-_GRAPH_META_MEMO: dict = {}
-# ADVICE r12: per-call index clones add one memo entry per tmp path; the
-# entries were never evicted, so the dict grew across a long session and
-# a (mkdtemp-improbable) path reuse without build would serve stale meta.
-# Cleanup paths call forget_graph_index_meta on rmtree; the size bound is
-# the belt-and-braces backstop for callers that don't.
-_GRAPH_META_MEMO_MAX = 512
-
-
-def forget_graph_index_meta(path: str) -> None:
-    """Drop memoized meta rows for ``path`` (any session) — call when an
-    index directory is deleted (per-call clone cleanup)."""
-    for key in [k for k in _GRAPH_META_MEMO if k[1] == path]:
-        _GRAPH_META_MEMO.pop(key, None)
-
-
 def _graph_index_meta(spark: SparkSession, path: str) -> dict:
     """The index's meta row as a dict — tolerant of pre-r12 indexes
-    whose meta lacks the bucketed-edge columns. Memoized per
-    (SparkContext, path): the row is IMMUTABLE for the life of an index
-    directory (only build_graph_index writes it, and it refreshes the
-    memo), while every serve/insert/compact consulted it with its own
-    1-row Spark read — a fixed per-call job the ingest entries paid
-    5-7× per run (r12)."""
-    key = (spark.sparkContext.applicationId, path)
-    if key not in _GRAPH_META_MEMO:
-        if len(_GRAPH_META_MEMO) >= _GRAPH_META_MEMO_MAX:
-            _GRAPH_META_MEMO.clear()  # cheap 1-row re-reads, bounded dict
-        row = spark.read.parquet(f"{path}/meta").first().asDict()
+    whose meta lacks the bucketed-edge columns — through the index-part
+    memo (see _index_part). Only build_graph_index writes
+    ``{path}/meta``; without the memo every serve/insert/compact paid
+    its own 1-row Spark read."""
+
+    def load(part_dir):
+        row = spark.read.parquet(part_dir).first().asDict()
         row.setdefault("edges_buckets", None)
-        _GRAPH_META_MEMO[key] = row
-    return _GRAPH_META_MEMO[key]
+        return row
+
+    return _index_part(spark, f"{path}/meta", load)
 
 
 def build_graph_index(
@@ -765,8 +783,6 @@ def build_graph_index(
         [(hub_cap, int(tree_depth), bucket_edges)],
         "hub_cap int, tree_depth int, edges_buckets int",
     ).write.mode("overwrite").parquet(f"{path}/meta")
-    # a rebuild at the same path must not serve the stale memoized row
-    _GRAPH_META_MEMO.pop((spark.sparkContext.applicationId, path), None)
 
 
 def graph_index_topk(
@@ -906,20 +922,7 @@ def insert_into_graph_index(
                 f"insert_into_graph_index: {clash} batch id(s) already have "
                 "physical rows — delete + compact before re-inserting an id"
             )
-        fs_t, tomb_files = _tombstone_files(spark, path)
-        if tomb_files:
-            tomb = spark.read.parquet(*[p.toString() for p in tomb_files])
-            if tomb.filter(F.col("vec_id").isin(id_list)).count() > 0:
-                remaining = eager_cache(
-                    tomb.filter(~F.col("vec_id").isin(id_list)).distinct()
-                )
-                if remaining.limit(1).count() > 0:
-                    remaining.coalesce(1).write.mode("append").parquet(
-                        f"{path}/tombstones"
-                    )
-                for p in tomb_files:
-                    fs_t.delete(p, False)
-                remaining.unpersist()
+        _drop_from_tombstones(spark, path, "vec_id", id_list)
     nearest = graph_index_topk(
         spark, path,
         queries=nq.select(F.col("vec_id").alias("query_id"), F.col("q").alias("qv")),
@@ -1037,11 +1040,7 @@ def compact_graph_index(
         # lazy cache + captured count (r13, guide §1.2): the count is the
         # first consumer and doubles as the stats value — eager_cache plus
         # the stats' re-count was two extra jobs per compact
-        tomb = (
-            spark.read.parquet(*[p.toString() for p in tomb_files])
-            .select("vec_id")
-            .distinct()
-        ).cache()
+        tomb = _read_tombstones(spark, tomb_files, "vec_id").cache()
         n_deleted = tomb.count()
         dead = tomb.withColumnRenamed("vec_id", "_dead")
         entries = spark.read.parquet(f"{path}/entries")
@@ -1281,8 +1280,6 @@ def build_ivfpq_index(
     centroids.select(
         F.col(id_col).alias("cell"), F.col(vec_col)
     ).write.mode("overwrite").parquet(f"{path}/centroids")
-    # a rebuild at the same path must not serve stale memoized centroids
-    forget_ivf_centroids(path)
     assigned = assign_cells(corpus, n_cells, id_col, vec_col, centroids)
     codes = pq_encode(corpus, books, id_col, vec_col).join(
         assigned.select(id_col, "cell"), id_col

@@ -1,6 +1,8 @@
 from __future__ import annotations
 
 import os
+import queue
+import time
 
 import pytest
 
@@ -31,3 +33,35 @@ def duck():
         )
     yield con
     con.close()
+
+
+def child_results(out, procs, timeout: float) -> list:
+    """One result per child process, read from the multiprocessing queue
+    ``out``, each within ``timeout`` seconds. The queue is polled in
+    short slices; when a child has exited non-zero the test fails at
+    once, naming the child and its exit code, instead of waiting out the
+    timeout for a result that cannot come. The other children are
+    stopped before the failure is raised."""
+    results = []
+    deadline = time.monotonic() + timeout
+    while len(results) < len(procs):
+        # exit codes are read BEFORE the get: a child flushes its queue
+        # writes before it exits, so a result it sent is read below
+        dead = [p for p in procs if p.exitcode not in (None, 0)]
+        try:
+            results.append(out.get(timeout=0.2))
+            deadline = time.monotonic() + timeout
+            continue
+        except queue.Empty:
+            if not dead and time.monotonic() < deadline:
+                continue
+        for p in procs:
+            if p.is_alive():
+                p.terminate()
+                p.join(5)
+        why = ", ".join(
+            f"child {p.name} (pid {p.pid}) exited with code {p.exitcode}"
+            for p in dead
+        ) or f"no result within {timeout:g} s"
+        pytest.fail(f"{len(results)}/{len(procs)} child results: {why}")
+    return results

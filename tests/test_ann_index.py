@@ -1021,3 +1021,211 @@ def test_graph_lifecycle_random_sequence_content_parity(spark, emb):
                     ).count() == 0
     finally:
         shutil.rmtree(d, ignore_errors=True)
+
+
+# --- index-part memo freshness: the memo is keyed by the files on disk,
+# so a rewrite by any writer is served fresh with no eviction call
+
+
+def _empty_index_parts():
+    with AI._INDEX_PARTS_LOCK:
+        AI._INDEX_PARTS.clear()
+
+
+def _probe(spark, emb, path):
+    return _rows(
+        AI.ivf_index_topk(
+            spark, path, emb.filter(F.col("vec_id") < 10), k=5, n_probe=N_PROBE
+        )
+    )
+
+
+def _copy(src, prefix):
+    d = tempfile.mkdtemp(prefix=prefix)
+    shutil.rmtree(d)
+    shutil.copytree(src, d)
+    return d
+
+
+def test_centroids_rewritten_by_another_writer_are_served_fresh(
+    spark, emb, index_path
+):
+    """{path}/centroids rewritten by a plain DataFrame write that calls no
+    package hook is what the next probe serves. The files are written
+    elsewhere and moved in, as another process's write looks to this
+    session (a write through this session would also refresh Spark's
+    cached plans that read the path)."""
+    d = _copy(index_path, "ivf_fresh_centroids_")
+    side = tempfile.mkdtemp(prefix="ivf_rotated_centroids_")
+    try:
+        before = _probe(spark, emb, d)  # memoizes the centroids
+        cents = spark.read.parquet(f"{d}/centroids")
+        rows = sorted(cents.collect(), key=lambda r: r["cell"])
+        rotated = [
+            (r["cell"], rows[(i + 1) % len(rows)]["embedding"])
+            for i, r in enumerate(rows)
+        ]
+        spark.createDataFrame(rotated, cents.schema).write.mode(
+            "overwrite"
+        ).parquet(side)
+        shutil.rmtree(f"{d}/centroids")
+        shutil.copytree(side, f"{d}/centroids")
+        got = _probe(spark, emb, d)
+        assert got != before  # the rotation changed the probed cells
+        _empty_index_parts()
+        assert got == _probe(spark, emb, d)
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+        shutil.rmtree(side, ignore_errors=True)
+
+
+def test_graph_meta_rewritten_by_another_writer_is_served_fresh(
+    spark, emb, graph_index_path
+):
+    """Rewriting a default-layout graph index's meta row with
+    edges_buckets set makes the index a bucketed serving replica: the
+    maintenance calls must refuse it at once, not act on a stale row."""
+    d = _copy(graph_index_path, "graph_fresh_meta_")
+    try:
+        # no tombstones: a no-op compaction that memoizes the meta row
+        assert AI.compact_graph_index(spark, d) == {
+            "n_deleted": 0, "n_bridge_edges": 0,
+        }
+        meta = spark.read.parquet(f"{d}/meta").first()
+        spark.createDataFrame(
+            [(meta["hub_cap"], meta["tree_depth"], 32)],
+            "hub_cap int, tree_depth int, edges_buckets int",
+        ).write.mode("overwrite").parquet(f"{d}/meta")
+        batch = emb.filter(F.col("vec_id") == 0).select(
+            F.lit(100000).cast("long").alias("vec_id"), "embedding"
+        )
+        with pytest.raises(ValueError, match="bucketed serving layout"):
+            AI.insert_into_graph_index(spark, d, batch)
+        with pytest.raises(ValueError, match="bucketed serving layout"):
+            AI.compact_graph_index(spark, d)
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def test_index_replaced_at_same_path_is_served_fresh(spark, emb):
+    """rmtree an index, then put an index over a different corpus at the
+    same path (built elsewhere and copied in, as another process would):
+    probes serve the new index."""
+    d = tempfile.mkdtemp(prefix="ivf_replaced_")
+    other = tempfile.mkdtemp(prefix="ivf_replacement_")
+    try:
+        AI.build_ivf_index(emb.filter(F.col("vec_id") >= 250), d, n_cells=N_CELLS)
+        first = _probe(spark, emb, d)
+        shutil.rmtree(d)
+        AI.build_ivf_index(emb.filter(F.col("vec_id") < 250), other, n_cells=N_CELLS)
+        shutil.copytree(other, d)
+        got = _probe(spark, emb, d)
+        assert got == _probe(spark, emb, other)
+        assert got != first
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+        shutil.rmtree(other, ignore_errors=True)
+
+
+@pytest.fixture(scope="module")
+def ivf_base100(spark, emb):
+    d = tempfile.mkdtemp(prefix="ivf_base100_")
+    AI.build_ivf_index(emb.filter(F.col("vec_id") >= 100), d, n_cells=N_CELLS)
+    yield d
+    shutil.rmtree(d, ignore_errors=True)
+
+
+def _append(spark, emb, d):
+    AI.append_to_ivf_index(
+        emb.filter((F.col("vec_id") >= 10) & (F.col("vec_id") < 100)), d
+    )
+
+
+def _upsert(spark, emb, d):
+    donor = emb.filter(
+        (F.col("vec_id") >= 5) & (F.col("vec_id") < 10)
+    ).select((F.col("vec_id") + 95).alias("vec_id"), "embedding")
+    AI.upsert_into_ivf_index(spark, d, donor)
+
+
+def _delete(spark, emb, d):
+    AI.delete_from_ivf_index(spark, d, range(100, 200))
+
+
+def _delete_compact(spark, emb, d):
+    _delete(spark, emb, d)
+    AI.compact_ivf_index(spark, d)
+
+
+@pytest.mark.parametrize(
+    "op", [_append, _upsert, _delete, _delete_compact],
+    ids=["append", "upsert", "delete", "compact"],
+)
+def test_maintenance_probe_matches_probe_with_memo_emptied(
+    spark, emb, ivf_base100, op
+):
+    """After each in-place writer, a probe through the warm memo equals a
+    probe with the memo emptied."""
+    d = _copy(ivf_base100, "ivf_fresh_op_")
+    try:
+        before = _probe(spark, emb, d)  # warm memo
+        op(spark, emb, d)
+        got = _probe(spark, emb, d)
+        _empty_index_parts()
+        assert got == _probe(spark, emb, d)
+        assert got != before  # the writer changed what the probe serves
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def test_index_part_memo_is_thread_safe_and_bounded(monkeypatch):
+    """Concurrent lookups (foreachBatch ingest runs on the stream's own
+    thread) over more keys than the bound: every lookup returns its own
+    key's value and the memo never exceeds its bound."""
+    import sys
+    import threading
+    from collections import OrderedDict
+    from types import SimpleNamespace
+
+    class _File:
+        def __init__(self, name):
+            self.name = name
+
+        def getPath(self):
+            return self
+
+        def getName(self):
+            return self.name
+
+        def getLen(self):
+            return 1
+
+    monkeypatch.setattr(AI, "_INDEX_PARTS", OrderedDict())
+    monkeypatch.setattr(
+        AI, "_data_files", lambda spark, d: (None, [_File(f"part-{d}")])
+    )
+    spark = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="app"))
+    n_keys = AI._INDEX_PARTS_MAX + 88
+    errors = []
+
+    def worker(seed):
+        try:
+            for i in range(3000):
+                d = f"dir{(seed * 7919 + i * 31) % n_keys}"
+                assert AI._index_part(spark, d, lambda p: ("v", p)) == ("v", d)
+        except BaseException as e:  # noqa: BLE001 — reported below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(s,)) for s in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(old)
+    assert not errors, errors[0]
+    assert len(AI._INDEX_PARTS) == AI._INDEX_PARTS_MAX

@@ -22,6 +22,7 @@ from overseer_spark.core import (
     JobGraph,
 )
 from overseer_spark.store.filecas import FileCASStore
+from tests.conftest import child_results
 
 # spawn, not fork: the parent may hold a JVM-backed SparkSession
 _CTX = mp.get_context("spawn")
@@ -71,7 +72,7 @@ def test_two_process_reserve_exactly_one_wins(tmp_path):
     ]
     for p in procs:
         p.start()
-    results = [out.get(timeout=60) for _ in procs]
+    results = child_results(out, procs, timeout=60)
     for p in procs:
         p.join(timeout=60)
 
@@ -97,7 +98,7 @@ def test_eight_process_reserve_storm(tmp_path):
     ]
     for p in procs:
         p.start()
-    results = [out.get(timeout=120) for _ in procs]
+    results = child_results(out, procs, timeout=120)
     for p in procs:
         p.join(timeout=60)
 
@@ -125,7 +126,7 @@ def test_multi_process_drain_runs_each_job_exactly_once(tmp_path):
     ]
     for p in procs:
         p.start()
-    results = [out.get(timeout=300) for _ in procs]
+    results = child_results(out, procs, timeout=300)
     for p in procs:
         p.join(timeout=120)
 
@@ -150,8 +151,7 @@ def test_concurrent_identical_transact_is_idempotent(tmp_path):
     ]
     for p in procs:
         p.start()
-    for _ in procs:
-        out.get(timeout=60)
+    child_results(out, procs, timeout=60)
     for p in procs:
         p.join(timeout=60)
 

@@ -14,6 +14,9 @@ from __future__ import annotations
 
 import multiprocessing as mp
 import os
+import time
+
+import pytest
 
 from overseer_spark.core import (
     STATUS_FINISHED,
@@ -23,6 +26,7 @@ from overseer_spark.core import (
     JobGraph,
 )
 from overseer_spark.store.manifest import ManifestCASStore, _decode_entry
+from tests.conftest import child_results
 
 _CTX = mp.get_context("spawn")
 
@@ -67,6 +71,24 @@ def _hammer_transitions(path: str, job_id: str):
         store.heartbeat_job(job_id)
 
 
+def _exit_without_result(code: int):
+    os._exit(code)
+
+
+def test_child_results_fails_fast_on_dead_child():
+    """A child that dies before sending its result fails the wait at
+    once, naming its exit code, instead of after the whole timeout."""
+    out = _CTX.Queue()
+    p = _CTX.Process(target=_exit_without_result, args=(3,))
+    p.start()
+    t0 = time.monotonic()
+    with pytest.raises(pytest.fail.Exception, match="exited with code 3"):
+        child_results(out, [p], timeout=300)
+    assert time.monotonic() - t0 < 60
+    p.join(timeout=10)
+    assert p.exitcode == 3
+
+
 def test_two_process_reserve_exactly_one_wins(tmp_path):
     path = str(tmp_path / "cas")
     parent = ManifestCASStore(None, path)
@@ -81,7 +103,7 @@ def test_two_process_reserve_exactly_one_wins(tmp_path):
     ]
     for p in procs:
         p.start()
-    results = [out.get(timeout=60) for _ in procs]
+    results = child_results(out, procs, timeout=60)
     for p in procs:
         p.join(timeout=60)
 
@@ -107,7 +129,7 @@ def test_eight_process_reserve_storm(tmp_path):
     ]
     for p in procs:
         p.start()
-    results = [out.get(timeout=120) for _ in procs]
+    results = child_results(out, procs, timeout=120)
     for p in procs:
         p.join(timeout=60)
 
@@ -135,7 +157,7 @@ def test_multi_process_drain_runs_each_job_exactly_once(tmp_path):
     ]
     for p in procs:
         p.start()
-    results = [out.get(timeout=300) for _ in procs]
+    results = child_results(out, procs, timeout=300)
     for p in procs:
         p.join(timeout=120)
 
@@ -159,8 +181,7 @@ def test_concurrent_identical_transact_is_idempotent(tmp_path):
     ]
     for p in procs:
         p.start()
-    for _ in procs:
-        out.get(timeout=60)
+    child_results(out, procs, timeout=60)
     for p in procs:
         p.join(timeout=60)
 
@@ -231,8 +252,6 @@ def test_compact_checkpoints_and_preserves_state(tmp_path):
 def test_compact_concurrent_with_drain(tmp_path):
     """compact() racing active writers must not lose transitions: run a
     drain in one process while the parent compacts repeatedly."""
-    import time
-
     path = str(tmp_path / "store")
     parent = ManifestCASStore(None, path, checkpoint_every=4)
     parent.install()
@@ -247,7 +266,7 @@ def test_compact_concurrent_with_drain(tmp_path):
     for _ in range(20):
         parent.compact()
         time.sleep(0.02)
-    _, won = out.get(timeout=300)
+    ((_, won),) = child_results(out, [p], timeout=300)
     p.join(timeout=120)
 
     assert sorted(won) == sorted(ids)

@@ -25,6 +25,7 @@ from overseer_spark.core import (
 from overseer_spark.executor import Executor
 from overseer_spark.store.filecas import FileCASStore
 from overseer_spark.store.memory import MemoryStore
+from tests.conftest import child_results
 
 _CTX = mp.get_context("spawn")
 
@@ -163,7 +164,7 @@ def test_four_processes_drain_diamond_exactly_once():
         ]
         for p in procs:
             p.start()
-        results = [out.get(timeout=300) for _ in procs]
+        results = child_results(out, procs, timeout=300)
         for p in procs:
             p.join(timeout=120)
 

@@ -23,6 +23,7 @@ from overseer_spark.core import (
     JobGraph,
 )
 from overseer_spark.store.sqlite import SqliteStore
+from tests.conftest import child_results
 
 _CTX = mp.get_context("spawn")
 
@@ -76,7 +77,7 @@ def test_two_process_reserve_exactly_one_wins(tmp_path):
     ]
     for p in procs:
         p.start()
-    results = [out.get(timeout=60) for _ in procs]
+    results = child_results(out, procs, timeout=60)
     for p in procs:
         p.join(timeout=60)
 
@@ -102,7 +103,7 @@ def test_eight_process_reserve_storm(tmp_path):
     ]
     for p in procs:
         p.start()
-    results = [out.get(timeout=120) for _ in procs]
+    results = child_results(out, procs, timeout=120)
     for p in procs:
         p.join(timeout=120)
     assert sum(r is not None for r in results) == 1
@@ -123,7 +124,7 @@ def test_concurrent_transact_same_graph_idempotent(tmp_path):
     ]
     for p in procs:
         p.start()
-    results = [out.get(timeout=60) for _ in procs]
+    results = child_results(out, procs, timeout=60)
     for p in procs:
         p.join(timeout=60)
 
@@ -157,7 +158,7 @@ def test_multi_process_drain_exactly_once(tmp_path):
     ]
     for p in procs:
         p.start()
-    results = [out.get(timeout=180) for _ in procs]
+    results = child_results(out, procs, timeout=180)
     for p in procs:
         p.join(timeout=180)
 
