@@ -9,6 +9,7 @@ a tiny warmup query first so JVM/codegen startup isn't billed to q01.
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import re
@@ -179,7 +180,26 @@ HEADLINE = [
 ]
 
 
-def main() -> None:
+def parse_args(argv=None) -> argparse.Namespace:
+    """The command line. ``--families a,b`` keeps, as ``headline``, the
+    HEADLINE entries whose name starts with one of the prefixes."""
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument(
+        "--families",
+        type=lambda s: tuple(p for p in s.split(",") if p),
+        help="comma-separated entry-name prefixes (default: every entry)",
+    )
+    ns = ap.parse_args(argv)
+    ns.headline = [
+        n for n in HEADLINE if ns.families is None or n.startswith(ns.families)
+    ]
+    if not ns.headline:
+        ap.error(f"no HEADLINE entry starts with any of {ns.families}")
+    return ns
+
+
+def main(argv=None) -> None:
+    ns = parse_args(argv)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
@@ -188,16 +208,14 @@ def main() -> None:
     # sf0.1 almost nothing is throughput-bound (55/57 queries ran as fast
     # on 8 cores as 32), so optimization targets should be picked on a
     # larger corpus. `--families a,b` keeps only HEADLINE entries whose
-    # name contains one of the substrings; combined with the generated
+    # name starts with one of the prefixes; combined with the generated
     # 10x corpus this is one driver-runnable command:
     #   python tools/gen_scale_data.py --mult 10 --out .bench_sf1
     #   SPARK_GRAFT_SF_DIR=$PWD/.bench_sf1 python bench.py \
-    #       --families ann_graph,ann_ivf,stream,bpe,graph_,near_dup
+    #       --families ann_graph,hard_negative,stream
     # The no-argument invocation (what the driver runs) is unchanged.
-    headline = list(HEADLINE)
-    if "--families" in sys.argv:
-        pats = sys.argv[sys.argv.index("--families") + 1].split(",")
-        headline = [n for n in HEADLINE if any(p in n for p in pats)]
+    headline = ns.headline
+    if ns.families is not None:
         print(f"  families subset: {len(headline)} queries", file=sys.stderr)
 
     from overseer_spark.queries.catalog import CATALOG

@@ -22,15 +22,14 @@ physical access path changes.
 
 from __future__ import annotations
 
-import threading
-from collections import OrderedDict
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from overseer_spark.functions.vectors import cosine_similarity
 from overseer_spark.operators.similarity import assign_cells, trained_centroids
 from overseer_spark.operators.util import eager_cache
+from overseer_spark.session import local_frame
+from overseer_spark.sources.tables import data_files, dir_memo, hadoop_fs
 
 
 def build_ivf_index(
@@ -58,7 +57,7 @@ def build_ivf_index(
 
 def _ivf_centroids(spark: SparkSession, path: str):
     """(centroids frame, centroid count) of the index at ``path``, through
-    the index-part memo (see _index_part). Only the builders write
+    the directory memo (see sources.tables.dir_memo). Only the builders write
     ``{path}/centroids``; append/upsert/delete/compact never touch it
     (centroid drift is a rebuild decision). Memoizing saves every append
     a schema-inference read plus the 2-job count that assign_cells'
@@ -75,7 +74,7 @@ def _ivf_centroids(spark: SparkSession, path: str):
         df = spark.read.parquet(part_dir).localCheckpoint(eager=False)
         return df, df.count()
 
-    return _index_part(spark, f"{path}/centroids", load)
+    return dir_memo(spark, f"{path}/centroids", load)
 
 
 def probed_cells(
@@ -108,72 +107,12 @@ def probed_cells(
     )
 
 
-def _hadoop_fs(spark: SparkSession, path: str):
-    """(FileSystem, Path) for ``path`` via Spark's Hadoop conf — works for
-    any URI scheme the session can write (file://, hdfs://, s3a://), unlike
-    a driver-local ``os.path`` probe, which would silently report "no
-    tombstones" for a remote index and resurrect deleted vectors
-    (ADVICE r10)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
-
-
-def _data_files(spark: SparkSession, dir_path: str):
-    """(fs, [FileStatus]) of the DATA files directly under ``dir_path``
-    (hidden and marker files excluded); a missing directory lists as
-    empty."""
-    fs, d = _hadoop_fs(spark, dir_path)
-    if not fs.exists(d):
-        return fs, []
-    return fs, [
-        st
-        for st in fs.listStatus(d)
-        if not st.getPath().getName().startswith(("_", "."))
-    ]
-
-
-# Index-part memo: key -> loaded value, least recently used first. The
-# lock makes the get/insert/evict sequence safe for foreachBatch ingest,
-# which runs on the streaming query's own thread.
-_INDEX_PARTS: OrderedDict = OrderedDict()
-_INDEX_PARTS_MAX = 512
-_INDEX_PARTS_LOCK = threading.Lock()
-
-
-def _index_part(spark: SparkSession, part_dir: str, load):
-    """``load(part_dir)``, memoized per (applicationId, part_dir,
-    fingerprint), where the fingerprint is the sorted (name, length) of
-    the data files in ``part_dir``, listed through the path's own Hadoop
-    FileSystem (no Spark job). Spark part-file names carry the writing
-    job's UUID, so any rewrite of the directory, by a package builder or
-    by any other writer or process, changes the key, and a copied index
-    has a new path: nothing needs to evict an entry for correctness.
-    Stale keys age out of the bounded LRU."""
-    _, files = _data_files(spark, part_dir)
-    key = (
-        spark.sparkContext.applicationId,
-        part_dir,
-        tuple(sorted((st.getPath().getName(), st.getLen()) for st in files)),
-    )
-    with _INDEX_PARTS_LOCK:
-        if key in _INDEX_PARTS:
-            _INDEX_PARTS.move_to_end(key)
-            return _INDEX_PARTS[key]
-    value = load(part_dir)  # outside the lock: loads run Spark jobs
-    with _INDEX_PARTS_LOCK:
-        _INDEX_PARTS[key] = value
-        while len(_INDEX_PARTS) > _INDEX_PARTS_MAX:
-            _INDEX_PARTS.popitem(last=False)
-    return value
-
-
 def _tombstone_files(spark: SparkSession, path: str):
     """(fs, [Path]) of the index's current tombstone DATA files. The file
     list — not just the directory — is the unit compact_ivf_index
     snapshots, so deletes appended while a compaction is rewriting are
     never swept away with the folded ones."""
-    fs, files = _data_files(spark, f"{path}/tombstones")
+    fs, files = data_files(spark, f"{path}/tombstones")
     return fs, [st.getPath() for st in files]
 
 
@@ -226,7 +165,7 @@ def _swap_in(spark: SparkSession, current: str, tmp_out: str, old: str) -> None:
     ``old`` + ``tmp_out`` for manual restore), but a failed second
     rename restores the original layout before re-raising. Shared by the
     IVF and graph compactors."""
-    fs, cur_path = _hadoop_fs(spark, current)
+    fs, cur_path = hadoop_fs(spark, current)
     jpath = spark._jvm.org.apache.hadoop.fs.Path
     fs.delete(jpath(old), True)
     if not fs.rename(cur_path, jpath(old)):
@@ -246,7 +185,7 @@ def _clear_tombstone_files(spark: SparkSession, path: str, tomb_files) -> None:
     ADVICE r10), then drop the directory only when nothing but write
     markers remains; the final delete is NON-recursive, so it refuses a
     dir a concurrent delete repopulated."""
-    fs, tomb_dir = _hadoop_fs(spark, f"{path}/tombstones")
+    fs, tomb_dir = hadoop_fs(spark, f"{path}/tombstones")
     for p in tomb_files:
         fs.delete(p, False)
     if fs.exists(tomb_dir):
@@ -277,12 +216,17 @@ def ivf_index_topk(
     candidate set before scoring — logical deletion at probe time, the
     same read path FAISS's IDSelector and every LSM store use between
     compactions."""
-    # lazy cache + collect (r13, guide §1.2): the collect below is the
-    # first consumer and materializes the cache in its own job; the only
-    # other consumer (the broadcast into the scored join) runs later in
-    # the final action and hits the populated cache — eager_cache's
-    # separate count() was one extra fixed-cost job per probe
-    qcells = probed_cells(spark, path, queries, n_probe, id_col, vec_col).cache()
+    # lazy local checkpoint + collect (r13, guide §1.2): the collect below
+    # is the first consumer and materializes the checkpoint in its own
+    # job; the only other consumer (the broadcast into the scored join)
+    # runs later in the final action and reads the checkpointed blocks —
+    # an eager count() would be one extra fixed-cost job per probe. A
+    # checkpoint, not .cache(): nothing is left in the CacheManager after
+    # the serve, and no later probe can match this frame's plan by the
+    # index's root path (see _ivf_centroids)
+    qcells = probed_cells(
+        spark, path, queries, n_probe, id_col, vec_col
+    ).localCheckpoint(eager=False)
     cells = [r["cell"] for r in qcells.select("cell").distinct().collect()]
     vectors = spark.read.parquet(f"{path}/vectors").filter(
         F.col("cell").isin(cells)  # static partition pruning at the scan
@@ -448,7 +392,7 @@ def max_files_per_cell(spark: SparkSession, path: str) -> int:
     ingest (streaming/ingest.py vector_ingest_stream). Probed through
     the path's own Hadoop FileSystem (works on any URI scheme); one
     directory listing per cell, no data read."""
-    fs, root = _hadoop_fs(spark, f"{path}/vectors")
+    fs, root = hadoop_fs(spark, f"{path}/vectors")
     mx = 0
     for st in fs.listStatus(root):
         if st.isDirectory():
@@ -468,7 +412,7 @@ def graph_index_file_counts(spark: SparkSession, path: str) -> dict:
     (streaming/ingest.py graph mode; the graph twin of
     max_files_per_cell). One directory listing each, no data read."""
     return {
-        name: len(_data_files(spark, f"{path}/{name}")[1])
+        name: len(data_files(spark, f"{path}/{name}")[1])
         for name in ("qv", "edges")
     }
 
@@ -540,7 +484,7 @@ def upsert_into_ivf_index(
         keep.repartition("cell").write.mode("overwrite").partitionBy(
             "cell"
         ).parquet(f"{path}/vectors__upserting")
-        fs, _ = _hadoop_fs(spark, vectors)
+        fs, _ = hadoop_fs(spark, vectors)
         jpath = spark._jvm.org.apache.hadoop.fs.Path
         for c in cells:
             sub = f"cell={c}"
@@ -577,16 +521,16 @@ def delete_from_ivf_index(
     ids or a 1-column DataFrame (any column name — renamed to
     ``id_col`` on the way in)."""
     if not isinstance(ids, DataFrame):
-        ids = spark.createDataFrame([(int(i),) for i in ids], f"{id_col} long")
+        ids = local_frame(spark, [(int(i),) for i in ids], f"{id_col} long")
     elif len(ids.columns) == 1:
         ids = ids.toDF(id_col)
     # one file per delete batch (r13): a delete-batch-sized relation
     # would otherwise write one file per input slice — more tombstone
     # files for every later probe/compact to list and read. repartition,
-    # NOT coalesce: coalesce(1) folds every upstream slice into ONE task
-    # that pays the per-partition Python-runner roundtrip SERIALLY
-    # (measured 5.8 s for a 100-row 32-slice createDataFrame at
-    # local[32] vs 0.6 s with the 100-row shuffle)
+    # NOT coalesce: coalesce(1) folds every upstream slice of a caller's
+    # id frame into ONE task that runs them SERIALLY (measured 5.8 s for
+    # a 100-row 32-slice pickled-row frame at local[32] vs 0.6 s with the
+    # 100-row shuffle)
     ids.select(id_col).repartition(1).write.mode("append").parquet(
         f"{path}/tombstones"
     )
@@ -628,7 +572,7 @@ def compact_ivf_index(
     df = spark.read.parquet(vectors)
     if tomb_files:
         tomb = _read_tombstones(spark, tomb_files, id_col)
-        df = df.join(eager_cache(tomb), id_col, "left_anti")
+        df = df.join(tomb.localCheckpoint(), id_col, "left_anti")
     plan = compact_partitioned(spark, vectors, tmp_out, ["cell"], df=df)
     _swap_in(spark, vectors, tmp_out, f"{path}/vectors__old")
     _clear_tombstone_files(spark, path, tomb_files)
@@ -662,8 +606,8 @@ def _register_bucketed_edges(
 
 def _graph_index_meta(spark: SparkSession, path: str) -> dict:
     """The index's meta row as a dict — tolerant of pre-r12 indexes
-    whose meta lacks the bucketed-edge columns — through the index-part
-    memo (see _index_part). Only build_graph_index writes
+    whose meta lacks the bucketed-edge columns — through the directory
+    memo (see sources.tables.dir_memo). Only build_graph_index writes
     ``{path}/meta``; without the memo every serve/insert/compact paid
     its own 1-row Spark read."""
 
@@ -672,7 +616,7 @@ def _graph_index_meta(spark: SparkSession, path: str) -> dict:
         row.setdefault("edges_buckets", None)
         return row
 
-    return _index_part(spark, f"{path}/meta", load)
+    return dir_memo(spark, f"{path}/meta", load)
 
 
 def build_graph_index(
@@ -779,7 +723,8 @@ def build_graph_index(
             .saveAsTable(tbl)
         )
     entries.select("node").write.mode("overwrite").parquet(f"{path}/entries")
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(hub_cap, int(tree_depth), bucket_edges)],
         "hub_cap int, tree_depth int, edges_buckets int",
     ).write.mode("overwrite").parquet(f"{path}/meta")
@@ -833,7 +778,11 @@ def graph_index_topk(
         queries = qv.filter(F.col("vec_id").isin(list(query_ids))).select(
             F.col("vec_id").alias("query_id"), F.col("q").alias("qv")
         )
-    queries = eager_cache(queries)
+    # checkpointed, not cached: a cached frame would stay in the
+    # CacheManager after the serve, and a later call at this path after
+    # an out-of-session rewrite would match its plan by the root path
+    # and serve the old index's query vectors (see _ivf_centroids)
+    queries = queries.localCheckpoint()
     tomb = _tombstones(spark, path, "vec_id")
     return graph_beam_topk(
         qv, edges, queries, entries,
@@ -1115,7 +1064,7 @@ def compact_graph_index(
             # ADVICE r12: release the cached (empty) frame before rebinding,
             # or the unpersist loop below releases the fallback instead
             kept_entries.unpersist()
-            kept_entries = spark.createDataFrame([(int(fallback),)], "node long")
+            kept_entries = local_frame(spark, [(int(fallback),)], "node long")
         stats = {
             "n_deleted": n_deleted,
             "n_bridge_edges": n_bridge_edges,
@@ -1168,7 +1117,8 @@ def build_lsh_index(
 
     spark = corpus.sparkSession
     dim = len(corpus.select(vec_col).first()[0])
-    planes_df = spark.createDataFrame(
+    planes_df = local_frame(
+        spark,
         _rp_planes(n_tables, n_planes, dim, seed),
         "table int, bit int, pvec array<double>",
     )
@@ -1210,10 +1160,9 @@ def lsh_index_topk(
     from overseer_spark.operators.similarity import rp_signatures
 
     planes_df = spark.read.parquet(f"{path}/planes")
-    qsig = eager_cache(
-        rp_signatures(queries, F.broadcast(planes_df), id_col, vec_col,
-                      out_id="query_id")
-    )
+    qsig = rp_signatures(
+        queries, F.broadcast(planes_df), id_col, vec_col, out_id="query_id"
+    ).localCheckpoint()  # not cached: see graph_index_topk
     buckets = [
         (r["table"], r["sig"])
         for r in qsig.select("table", "sig").distinct().collect()
@@ -1273,8 +1222,8 @@ def build_ivfpq_index(
         for j in range(books.shape[0])
         for c in range(books.shape[1])
     ]
-    spark.createDataFrame(
-        rows, "j int, c int, cvec array<double>"
+    local_frame(
+        spark, rows, "j int, c int, cvec array<double>"
     ).write.mode("overwrite").parquet(f"{path}/codebooks")
     centroids = eager_cache(trained_centroids(corpus, n_cells, id_col, vec_col))
     centroids.select(
@@ -1324,9 +1273,10 @@ def ivfpq_index_topk(
     from overseer_spark.operators.similarity import _adc_lut_udf  # noqa: PLC0415
 
     books = _load_codebooks(spark, path)
-    qcells = eager_cache(
+    qcells = (
         probed_cells(spark, path, queries, n_probe, id_col, vec_col)
         .select("query_id", "cell")
+        .localCheckpoint()  # not cached: see graph_index_topk
     )
     cells = [r["cell"] for r in qcells.select("cell").distinct().collect()]
     codes = spark.read.parquet(f"{path}/codes").filter(

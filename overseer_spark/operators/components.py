@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from overseer_spark.operators.util import eager_cache
+from overseer_spark.session import local_frame
 
 
 def connected_components(
@@ -73,8 +74,8 @@ def connected_components(
             nodes = {x for r in pairs for x in (r.a, r.b)}
             rows = [(n, find(n)) for n in sorted(nodes)]
             schema_t = e.schema["a"].dataType.simpleString()
-            return spark.createDataFrame(
-                rows, schema=f"node {schema_t}, component {schema_t}"
+            return local_frame(
+                spark, rows, schema=f"node {schema_t}, component {schema_t}"
             )
         if strategy == "local":
             raise ValueError(

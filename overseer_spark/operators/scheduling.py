@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from overseer_spark.core import STATUS_FINISHED, STATUS_STARTED, STATUS_UNSTARTED
+from overseer_spark.session import local_frame
 
 
 def ready_jobs(
@@ -185,9 +186,7 @@ def transitive_dependents(
         frontier = seed_ids.select(F.col(seed_ids.columns[0]).alias("id")).distinct()
     else:
         seed_ids = list(seed_ids)
-        frontier = spark.createDataFrame(
-            [(i,) for i in seed_ids], schema="id string"
-        )
+        frontier = local_frame(spark, [(i,) for i in seed_ids], schema="id string")
     if strategy in ("auto", "local"):
         # size probe: one job, and LocalLimit caps every task at reading
         # cap+1 rows, so this stays cheap over an arbitrarily large edge
@@ -209,9 +208,7 @@ def transitive_dependents(
                 nxt = {j for d in fr for j in adj.get(d, ())} - out - seeds
                 out |= nxt
                 fr = nxt
-            return spark.createDataFrame(
-                [(i,) for i in sorted(out)], schema="id string"
-            )
+            return local_frame(spark, [(i,) for i in sorted(out)], schema="id string")
         if strategy == "local":
             raise ValueError(
                 f"edge table exceeds local_edge_cap={local_edge_cap}; "
@@ -229,7 +226,7 @@ def transitive_dependents(
                 if strategy == "recursive_cte":
                     raise
         visited = frontier  # seeds excluded from result at the end
-        result = spark.createDataFrame([], schema="id string")
+        result = local_frame(spark, [], schema="id string")
         pinned: list[DataFrame] = []  # persisted frontiers awaiting release
         for it in range(max_iterations):
             nxt = direct_dependents(deps, frontier).join(visited, "id", "left_anti")
@@ -347,8 +344,8 @@ def topo_levels(
                 indeg[j] -= 1
                 if indeg[j] == 0:
                     queue.append(j)
-        return spark.createDataFrame(
-            [(i, lvl[i]) for i in sorted(lvl)], schema="id string, level long"
+        return local_frame(
+            spark, [(i, lvl[i]) for i in sorted(lvl)], schema="id string, level long"
         )
     raw_deps = deps
     deps = prepare_edges(deps, skew_mitigation)
@@ -450,8 +447,8 @@ def pagerank(
                 if a in rank:
                     contrib[b] = contrib.get(b, 0.0) + rank[a] / outd[a]
             rank = {i: base + damping * contrib.get(i, 0.0) for i in ids}
-        return spark.createDataFrame(
-            [(i, rank[i]) for i in sorted(ids)], schema="id string, rank double"
+        return local_frame(
+            spark, [(i, rank[i]) for i in sorted(ids)], schema="id string, rank double"
         )
     raw_deps = deps
     deps = prepare_edges(deps, skew_mitigation)
@@ -552,9 +549,7 @@ def detect_cycles(
                 if indeg[j] == 0:
                     queue.append(j)
         stuck = sorted(set(id_list) - emitted)
-        return spark.createDataFrame(
-            [(i,) for i in stuck], schema="id string"
-        )
+        return local_frame(spark, [(i,) for i in stuck], schema="id string")
     ids = jobs.select("id")
     done = ids.join(
         deps.select(F.col("job_id").alias("id")), "id", "left_anti"
@@ -709,8 +704,8 @@ def critical_path(
                 indeg[j] -= 1
                 if indeg[j] == 0:
                     queue.append(j)
-        return spark.createDataFrame(
-            [(i, cp[i]) for i in sorted(cp)], schema="id string, cp long"
+        return local_frame(
+            spark, [(i, cp[i]) for i in sorted(cp)], schema="id string, cp long"
         )
     raw_deps = deps
     deps = prepare_edges(deps, skew_mitigation)

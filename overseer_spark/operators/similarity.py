@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from overseer_spark.functions.vectors import cosine_similarity, l2_norm, vec_dot
 from overseer_spark.operators.util import eager_cache, spread
+from overseer_spark.session import local_frame
 
 
 def _with_norm(df: DataFrame, vec_col: str) -> DataFrame:
@@ -293,9 +294,7 @@ def trained_centroids(
             if len(members):
                 cent[c] = np.round(members.mean(axis=0), round_to)
     out = [(i, [float(x) for x in cent[i]]) for i in range(k)]
-    return spark.createDataFrame(
-        out, f"{id_col} long, {vec_col} array<double>"
-    )
+    return local_frame(spark, out, f"{id_col} long, {vec_col} array<double>")
 
 
 def ivf_topk(
@@ -412,7 +411,8 @@ def rp_lsh_topk(
     exactly what the pytest tripwire does."""
     dim = len(corpus.select(vec_col).first()[0])
     planes_df = F.broadcast(
-        corpus.sparkSession.createDataFrame(
+        local_frame(
+            corpus.sparkSession,
             _rp_planes(n_tables, n_planes, dim, seed),
             "table int, bit int, pvec array<double>",
         )
@@ -555,7 +555,7 @@ def pca_top_component(
         v = -v
     spark = df.sparkSession
     rows = [(i, round(float(v[i]), 6), round(eigval, 4)) for i in range(dim)]
-    return spark.createDataFrame(rows, "i int, loading double, eigval double")
+    return local_frame(spark, rows, "i int, loading double, eigval double")
 
 
 def kmeans_lloyd(
@@ -608,8 +608,8 @@ def kmeans_lloyd(
     ]
 
     def assign(cent):
-        cent_df = spark.createDataFrame(
-            [(i, c) for i, c in enumerate(cent)], "c int, cv array<double>"
+        cent_df = local_frame(
+            spark, [(i, c) for i, c in enumerate(cent)], "c int, cv array<double>"
         )
         d2 = F.aggregate(
             F.zip_with(F.col("_v"), F.col("cv"), lambda x, m: (x - m) * (x - m)),
@@ -792,7 +792,7 @@ def pq_topk(
     spark = corpus.sparkSession
     qrows, _adc = _adc_lut_udf(spark, queries, books, id_col, vec_col)
     codes = pq_encode(corpus, books, id_col, vec_col)
-    qdf = spark.createDataFrame([(r[0],) for r in qrows], "query_id bigint")
+    qdf = local_frame(spark, [(r[0],) for r in qrows], "query_id bigint")
     scored = (
         codes.crossJoin(F.broadcast(qdf))
         .filter(F.col(id_col) != F.col("query_id"))
@@ -916,8 +916,8 @@ def mmr_topk(
                     len(picked),
                 )
             )
-    return spark.createDataFrame(
-        out, f"query_id long, {id_col} long, mmr_score double, rank long"
+    return local_frame(
+        spark, out, f"query_id long, {id_col} long, mmr_score double, rank long"
     )
 
 

@@ -26,6 +26,7 @@ from overseer_spark.operators import scheduling as S
 from overseer_spark.operators import similarity as V
 from overseer_spark.operators import text as TX
 from overseer_spark.queries import fixtures as FX
+from overseer_spark.session import local_frame
 from overseer_spark.sources.tables import load_table
 
 
@@ -2320,7 +2321,7 @@ def layout_pruning_probe(spark, sf):
             )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(out, "scheme string, prunes boolean").orderBy(
+    return local_frame(spark, out, "scheme string, prunes boolean").orderBy(
         "scheme"
     )
 
@@ -4267,7 +4268,7 @@ def cms_term_counts(spark, sf):
         jvm.java.io.ByteArrayInputStream(bytes(sk))
     )
     rows = [(r["term"], int(r["n"]), int(cms.estimateCount(r["term"]))) for r in top]
-    return spark.createDataFrame(rows, "term string, n long, est long").orderBy(
+    return local_frame(spark, rows, "term string, n long, est long").orderBy(
         F.desc("n"), "term"
     )
 
@@ -6823,7 +6824,8 @@ def stream_static_join_counts(spark, sf):
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf)
     )
-    dim = spark.createDataFrame(
+    dim = local_frame(
+        spark,
         [
             ("click", "browse"),
             ("view", "browse"),
@@ -6992,7 +6994,8 @@ def q_observed_metrics(spark, sf):
     )
     observed.write.format("noop").mode("overwrite").save()
     m = obs.get
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(int(m["n_rows"]), int(m["nulls_value"]), int(m["oob_value"]))],
         "n_rows long, nulls_value long, oob_value long",
     )
@@ -10647,7 +10650,8 @@ def q_markov_attribution(spark, sf):
         (s, round(base, 6), round(d, 6), round(d / total, 4))
         for s, d in sorted(effects)
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out, "event_type string, base_conversion double, removal_effect double, credit double"
     )
 
@@ -13087,7 +13091,8 @@ def multimodal_image_dedup_count(spark, sf):
     groups.unpersist()
     n_images = stats["n_images"]
     survivors = n_images - stats["n_clustered"] + stats["n_clusters"]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(n_images, stats["n_clusters"], survivors, n_images - survivors)],
         "n_images long, n_dup_clusters long, n_survivors long, n_dropped long",
     )
@@ -13185,8 +13190,8 @@ def store_time_travel(spark, sf):
                 int(hist.get(2, 0)),  # finished
             )
         )
-    return spark.createDataFrame(
-        rows, "phase string, n_unstarted long, n_finished long"
+    return local_frame(
+        spark, rows, "phase string, n_unstarted long, n_finished long"
     ).orderBy("phase")
 
 
@@ -13250,8 +13255,8 @@ def store_sqlite_fsm_trace(spark, sf):
         j = store.job_info(by_type[t])
         rows.append((t, int(j.status), int(j.lock_version)))
     store.close()
-    return spark.createDataFrame(
-        rows, "job_type string, status int, lock_version int"
+    return local_frame(
+        spark, rows, "job_type string, status int, lock_version int"
     ).orderBy("job_type")
 
 
@@ -13356,8 +13361,8 @@ def store_manifest_time_travel(spark, sf):
             .collect()
         }
         rows.append((phase, int(hist.get(0, 0)), int(hist.get(2, 0))))
-    return spark.createDataFrame(
-        rows, "phase string, n_unstarted long, n_finished long"
+    return local_frame(
+        spark, rows, "phase string, n_unstarted long, n_finished long"
     ).orderBy("phase")
 
 
@@ -14225,8 +14230,8 @@ def embedding_matryoshka_eval(spark, sf):
         approx = cosine_topk(tr, tq, k=10).select("query_id", "vec_id")
         hits = truth.join(approx, ["query_id", "vec_id"]).count()
         rows.append((d, int(n_true), int(hits), round(hits / n_true, 4)))
-    return spark.createDataFrame(
-        rows, "dim int, n_true long, n_hit long, recall_at_10 double"
+    return local_frame(
+        spark, rows, "dim int, n_true long, n_hit long, recall_at_10 double"
     ).orderBy("dim")
 
 
@@ -15287,7 +15292,8 @@ def dedup_lsh_param_plan(spark, sf):
     pre-flight that replaces re-running the full dedup per parameter
     guess. All math is dimension-sized (7 options x 200 grid points);
     the only data touch is one COUNT."""
-    opts = spark.createDataFrame(
+    opts = local_frame(
+        spark,
         [(b, 64 // b) for b in range(1, 65) if 64 % b == 0],
         "b int, r int",
     )
@@ -16981,7 +16987,7 @@ def _session_artifact(spark, sf, tag: str, build) -> str:
     into a fresh temp directory, which is removed at interpreter exit.
     Nothing writes to an artifact after its build — entries that mutate
     an index work on a throwaway _clone_index copy, whose new path gets
-    its own index-part memo entries (ann_index._index_part) — so an
+    its own directory memo entries (sources.tables.dir_memo) — so an
     artifact is never invalidated, and a clearCache() between timed runs
     cannot force a rebuild. The serving and lifecycle entries open on
     these fixtures, which they used to REBUILD from the corpus on every

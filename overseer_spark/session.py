@@ -10,7 +10,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def get_spark(
@@ -56,3 +57,35 @@ def configure_for_oracle(spark: SparkSession) -> SparkSession:
     # type for; read as int64 ns and convert at the source (tables.py).
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema: T.StructType | str) -> DataFrame:
+    """``rows`` (tuples or Rows in ``schema``'s column order, or dicts
+    keyed by column name) as a JVM ``LocalRelation``.
+
+    ``spark.createDataFrame(python_rows)`` parallelizes pickled Python
+    data, so every later action on the frame starts Python workers. A
+    ``pyarrow.Table`` is shipped to the JVM once, as Arrow batches, and
+    the frame then needs no Python process at all; Catalyst can also
+    fold it like any other local relation. ``schema`` is a ``StructType``
+    or a DDL string. Timestamps go through the schema's own
+    ``toInternal``, so naive datetimes mean what they mean to
+    ``createDataFrame``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    rows = [
+        tuple(r.get(n) for n in schema.names) if isinstance(r, dict) else r
+        for r in rows
+    ]
+    columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    arrays = []
+    for values, field, afield in zip(columns, schema.fields, arrow_schema):
+        if isinstance(field.dataType, (T.TimestampType, T.TimestampNTZType)):
+            values = [field.dataType.toInternal(v) for v in values]
+        arrays.append(pa.array(values, type=afield.type))
+    table = pa.Table.from_arrays(arrays, schema=arrow_schema)
+    return spark.createDataFrame(table, schema=schema)

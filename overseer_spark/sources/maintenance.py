@@ -23,12 +23,13 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from overseer_spark.session import local_frame
+from overseer_spark.sources.tables import hadoop_fs
+
 
 def _fs_listing(spark: SparkSession, path: str) -> list[tuple[str, int]]:
     """(file_name, bytes) for every data file under path (recursive)."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, jpath = hadoop_fs(spark, path)
     out: list[tuple[str, int]] = []
     it = fs.listFiles(jpath, True)
     while it.hasNext():
@@ -48,9 +49,7 @@ def file_profile(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFr
         )
         .agg(F.count(F.lit(1)).alias("rows"))
     )
-    sizes = spark.createDataFrame(
-        _fs_listing(spark, path), "file_name string, bytes long"
-    )
+    sizes = local_frame(spark, _fs_listing(spark, path), "file_name string, bytes long")
     return rows.join(sizes, "file_name", "full")
 
 

@@ -55,6 +55,7 @@ from overseer_spark.core import (
     Job,
     JobGraph,
 )
+from overseer_spark.session import local_frame
 from overseer_spark.store.base import IllegalTransition, Store
 
 # On-file payload: args/failure stay JSON-encoded strings (the JOBS_SCHEMA
@@ -349,7 +350,7 @@ class FileCASStore(Store):
         except Exception:
             from overseer_spark.core import JOBS_SCHEMA
 
-            return self.spark.createDataFrame([], schema=JOBS_SCHEMA)
+            return local_frame(self.spark, [], schema=JOBS_SCHEMA)
 
     def deps_df(self) -> DataFrame:
         assert self.spark is not None, "deps_df requires a SparkSession"
@@ -358,7 +359,7 @@ class FileCASStore(Store):
             df.head(1)
             return df
         except Exception:
-            return self.spark.createDataFrame([], schema=DEPENDENCIES_SCHEMA)
+            return local_frame(self.spark, [], schema=DEPENDENCIES_SCHEMA)
 
     def jobs_ready(
         self, limit: int | None = None, types: AbstractSet[str] | None = None

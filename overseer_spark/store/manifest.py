@@ -93,6 +93,7 @@ from overseer_spark.core import (
     Job,
     JobGraph,
 )
+from overseer_spark.session import local_frame
 from overseer_spark.store.base import IllegalTransition, Store
 
 _MAX_RETRIES = 256
@@ -709,12 +710,12 @@ class ManifestCASStore(Store):
             r["created_at"] = _ts(r.get("created_at"))
             r["updated_at"] = _ts(r.get("updated_at"))
             rows.append(r)
-        return self.spark.createDataFrame(rows, schema=JOBS_SCHEMA)
+        return local_frame(self.spark, rows, schema=JOBS_SCHEMA)
 
     def deps_df(self) -> DataFrame:
         assert self.spark is not None, "deps_df requires a SparkSession"
         rows = [{"job_id": a, "dep_id": b} for a, b in self._replay().edges]
-        return self.spark.createDataFrame(rows, schema=DEPENDENCIES_SCHEMA)
+        return local_frame(self.spark, rows, schema=DEPENDENCIES_SCHEMA)
 
     def jobs_ready(
         self, limit: int | None = None, types: AbstractSet[str] | None = None

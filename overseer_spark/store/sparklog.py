@@ -61,6 +61,7 @@ from overseer_spark.operators.scheduling import (
     ready_jobs,
     transitive_dependents,
 )
+from overseer_spark.session import local_frame
 from overseer_spark.store.base import IllegalTransition, Store
 
 LOG_SCHEMA = T.StructType(
@@ -149,7 +150,7 @@ class SparkLogStore(Store):
                 r["created_at"] = now
             rows.append(r)
         (
-            self.spark.createDataFrame(rows, schema=LOG_SCHEMA)
+            local_frame(self.spark, rows, schema=LOG_SCHEMA)
             .coalesce(1)
             .write.mode("append")
             .parquet(self._jobs_log)
@@ -158,7 +159,7 @@ class SparkLogStore(Store):
     def _append_deps(self, edges: list[tuple[str, str]]) -> None:
         rows = [{"job_id": a, "dep_id": b} for a, b in edges]
         (
-            self.spark.createDataFrame(rows, schema=DEPENDENCIES_SCHEMA)
+            local_frame(self.spark, rows, schema=DEPENDENCIES_SCHEMA)
             .coalesce(1)
             .write.mode("append")
             .parquet(self._deps_dir)
@@ -168,7 +169,7 @@ class SparkLogStore(Store):
         try:
             return self.spark.read.schema(LOG_SCHEMA).parquet(self._jobs_log)
         except Exception:
-            return self.spark.createDataFrame([], schema=LOG_SCHEMA)
+            return local_frame(self.spark, [], schema=LOG_SCHEMA)
 
     def jobs_df(self, as_of_seq: int | None = None) -> DataFrame:
         """Current job state: last log row per id.
@@ -202,7 +203,7 @@ class SparkLogStore(Store):
         try:
             return self.spark.read.schema(DEPENDENCIES_SCHEMA).parquet(self._deps_dir)
         except Exception:
-            return self.spark.createDataFrame([], schema=DEPENDENCIES_SCHEMA)
+            return local_frame(self.spark, [], schema=DEPENDENCIES_SCHEMA)
 
     def compact(self) -> None:
         """Fold the log down, keeping the rows analytics need (run

@@ -55,13 +55,44 @@ def child_results(out, procs, timeout: float) -> list:
         except queue.Empty:
             if not dead and time.monotonic() < deadline:
                 continue
-        for p in procs:
-            if p.is_alive():
-                p.terminate()
-                p.join(5)
-        why = ", ".join(
-            f"child {p.name} (pid {p.pid}) exited with code {p.exitcode}"
-            for p in dead
-        ) or f"no result within {timeout:g} s"
-        pytest.fail(f"{len(results)}/{len(procs)} child results: {why}")
+        _fail_children(
+            procs, dead, f"{len(results)}/{len(procs)} child results",
+            f"no result within {timeout:g} s",
+        )
     return results
+
+
+def children_started(events, procs, timeout: float) -> None:
+    """Wait until every child has set its event (``events[i]`` belongs to
+    ``procs[i]``), each within ``timeout`` seconds. The events are polled
+    in short slices; a child that has exited before setting its event
+    fails the test at once, naming the child and its exit code. The
+    other children are stopped before the failure is raised."""
+    deadline = time.monotonic() + timeout
+    for i, e in enumerate(events):
+        while not e.wait(timeout=0.2):
+            dead = [
+                q
+                for f, q in zip(events, procs)
+                if not f.is_set() and q.exitcode is not None
+            ]
+            if dead or time.monotonic() >= deadline:
+                _fail_children(
+                    procs, dead, f"{i}/{len(procs)} children started",
+                    f"no start within {timeout:g} s",
+                )
+        deadline = time.monotonic() + timeout
+
+
+def _fail_children(procs, dead, what: str, idle: str) -> None:
+    """Stop the children that are still running, then fail naming the
+    dead ones (or ``idle`` when none died)."""
+    for p in procs:
+        if p.is_alive():
+            p.terminate()
+            p.join(5)
+    why = ", ".join(
+        f"child {p.name} (pid {p.pid}) exited with code {p.exitcode}"
+        for p in dead
+    ) or idle
+    pytest.fail(f"{what}: {why}")

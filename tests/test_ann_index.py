@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from overseer_spark.operators import ann_index as AI
 from overseer_spark.operators.similarity import ivf_topk
+from overseer_spark.sources import tables
 from tests.conftest import SF_CORRECTNESS
 
 N_CELLS = 16
@@ -1028,8 +1029,8 @@ def test_graph_lifecycle_random_sequence_content_parity(spark, emb):
 
 
 def _empty_index_parts():
-    with AI._INDEX_PARTS_LOCK:
-        AI._INDEX_PARTS.clear()
+    with tables._DIR_MEMO_LOCK:
+        tables._DIR_MEMO.clear()
 
 
 def _probe(spark, emb, path):
@@ -1200,19 +1201,22 @@ def test_index_part_memo_is_thread_safe_and_bounded(monkeypatch):
         def getLen(self):
             return 1
 
-    monkeypatch.setattr(AI, "_INDEX_PARTS", OrderedDict())
+        def getModificationTime(self):
+            return 0
+
+    monkeypatch.setattr(tables, "_DIR_MEMO", OrderedDict())
     monkeypatch.setattr(
-        AI, "_data_files", lambda spark, d: (None, [_File(f"part-{d}")])
+        tables, "data_files", lambda spark, d: (None, [_File(f"part-{d}")])
     )
     spark = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="app"))
-    n_keys = AI._INDEX_PARTS_MAX + 88
+    n_keys = tables._DIR_MEMO_MAX + 88
     errors = []
 
     def worker(seed):
         try:
             for i in range(3000):
                 d = f"dir{(seed * 7919 + i * 31) % n_keys}"
-                assert AI._index_part(spark, d, lambda p: ("v", p)) == ("v", d)
+                assert tables.dir_memo(spark, d, lambda p: ("v", p)) == ("v", d)
         except BaseException as e:  # noqa: BLE001 — reported below
             errors.append(e)
 
@@ -1228,4 +1232,68 @@ def test_index_part_memo_is_thread_safe_and_bounded(monkeypatch):
     finally:
         sys.setswitchinterval(old)
     assert not errors, errors[0]
-    assert len(AI._INDEX_PARTS) == AI._INDEX_PARTS_MAX
+    assert len(tables._DIR_MEMO) == tables._DIR_MEMO_MAX
+
+
+# --- serves leave nothing in the CacheManager: a cached frame outlives
+# the call, and Spark matches a cached file-scan plan by its root path,
+# so a later call at the same path could reuse it after a rewrite
+
+
+def _cache_manager(spark):
+    return spark._jsparkSession.sharedState().cacheManager()
+
+
+def _all_rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_graph_index_replaced_at_same_path_serves_new_query_vectors(
+    spark, emb, graph_index_path
+):
+    """A graph index replaced at the same path (built elsewhere over the
+    same ids with different vectors and copied in, as another process
+    would) serves the new index's query vectors to a ``query_ids``
+    probe."""
+    d = _copy(graph_index_path, "graph_replaced_")
+    other = tempfile.mkdtemp(prefix="graph_replacement_")
+    ids = list(range(8))
+
+    def probe(path):
+        return _all_rows(AI.graph_index_topk(spark, path, query_ids=ids, k=5))
+
+    try:
+        shifted = F.transform("embedding", lambda x: (x + 0.5).cast("float"))
+        AI.build_graph_index(emb.withColumn("embedding", shifted), other)
+        spark.catalog.clearCache()  # what the builds left cached
+        first = probe(d)
+        assert _cache_manager(spark).isEmpty()
+        shutil.rmtree(d)
+        shutil.copytree(other, d)
+        got = probe(d)
+        assert _cache_manager(spark).isEmpty()
+        assert got == probe(other)
+        assert got != first
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+        shutil.rmtree(other, ignore_errors=True)
+
+
+def test_ivf_lsh_ivfpq_serves_and_compaction_leave_nothing_cached(
+    spark, emb, index_path, lsh_index_path, ivfpq_index_path, ivf_base100
+):
+    queries = emb.filter(F.col("vec_id") < 10)
+    d = _copy(ivf_base100, "ivf_uncached_compact_")
+    try:
+        AI.delete_from_ivf_index(spark, d, range(100, 120))
+        spark.catalog.clearCache()
+        for serve in (
+            lambda: _rows(AI.ivf_index_topk(spark, index_path, queries, k=5)),
+            lambda: _all_rows(AI.lsh_index_topk(spark, lsh_index_path, queries, k=5)),
+            lambda: _all_rows(AI.ivfpq_index_topk(spark, ivfpq_index_path, queries, k=5)),
+            lambda: AI.compact_ivf_index(spark, d),
+        ):
+            serve()
+            assert _cache_manager(spark).isEmpty()
+    finally:
+        shutil.rmtree(d, ignore_errors=True)

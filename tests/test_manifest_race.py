@@ -26,7 +26,7 @@ from overseer_spark.core import (
     JobGraph,
 )
 from overseer_spark.store.manifest import ManifestCASStore, _decode_entry
-from tests.conftest import child_results
+from tests.conftest import child_results, children_started
 
 _CTX = mp.get_context("spawn")
 
@@ -84,6 +84,20 @@ def test_child_results_fails_fast_on_dead_child():
     t0 = time.monotonic()
     with pytest.raises(pytest.fail.Exception, match="exited with code 3"):
         child_results(out, [p], timeout=300)
+    assert time.monotonic() - t0 < 60
+    p.join(timeout=10)
+    assert p.exitcode == 3
+
+
+def test_children_started_fails_fast_on_dead_child():
+    """A child that dies before setting its start event fails the wait
+    at once, naming its exit code, instead of after the whole timeout."""
+    started = _CTX.Event()
+    p = _CTX.Process(target=_exit_without_result, args=(3,))
+    p.start()
+    t0 = time.monotonic()
+    with pytest.raises(pytest.fail.Exception, match="exited with code 3"):
+        children_started([started], [p], timeout=300)
     assert time.monotonic() - t0 < 60
     p.join(timeout=10)
     assert p.exitcode == 3

@@ -34,6 +34,7 @@ from overseer_spark.core import (
     JobGraph,
 )
 from overseer_spark.store.filecas import FileCASStore
+from tests.conftest import children_started
 
 _CTX = mp.get_context("spawn")
 
@@ -105,8 +106,7 @@ def test_three_driver_pool_drains_1k_dag_and_recovers_from_kill9(tmp_path):
     ]
     for p in procs:
         p.start()
-    for e in events:
-        assert e.wait(timeout=120), "worker failed to start"
+    children_started(events, procs, timeout=120)
 
     # let the pool get into the drain, then SIGKILL one driver
     time.sleep(2.0)
