@@ -42,7 +42,7 @@ def build_ivf_index(
     """Assign every corpus vector to its nearest centroid and persist,
     partitioned by cell. Training is sample-bounded (trained_centroids);
     the full corpus pays one broadcast O(n·c) E-step + one write."""
-    centroids = eager_cache(trained_centroids(corpus, n_cells, id_col, vec_col))
+    centroids = trained_centroids(corpus, n_cells, id_col, vec_col)
     centroids.select(
         F.col(id_col).alias("cell"), F.col(vec_col)
     ).write.mode("overwrite").parquet(f"{path}/centroids")
@@ -1225,7 +1225,7 @@ def build_ivfpq_index(
     local_frame(
         spark, rows, "j int, c int, cvec array<double>"
     ).write.mode("overwrite").parquet(f"{path}/codebooks")
-    centroids = eager_cache(trained_centroids(corpus, n_cells, id_col, vec_col))
+    centroids = trained_centroids(corpus, n_cells, id_col, vec_col)
     centroids.select(
         F.col(id_col).alias("cell"), F.col(vec_col)
     ).write.mode("overwrite").parquet(f"{path}/centroids")

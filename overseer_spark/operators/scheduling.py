@@ -78,8 +78,16 @@ def direct_dependents(deps: DataFrame, ids: DataFrame) -> DataFrame:
 # same order as AQE's skewedPartitionFactor default (5) with headroom
 _SKEW_FACTOR_THRESHOLD = 8.0
 
+# waves between lineage cuts in the distributed graph loops (and rounds
+# between cuts in pagerank's fixed-round loop)
+_CHECKPOINT_EVERY = 4
 
-def prepare_edges(deps: DataFrame, skew_mitigation: str = "auto") -> DataFrame:
+# wave bound of the fixpoint loops: a cyclic graph never empties the
+# longest-path frontier (see detect_cycles)
+_MAX_WAVES = 1000
+
+
+def prepare_edges(deps: DataFrame) -> DataFrame:
     """Hub-hardening for the wave-join family (closure / topo levels /
     critical path / pagerank). Power-law DAGs have hub nodes with 1e5+
     dependents; the per-wave joins broadcast the (small) frontier, so the
@@ -93,10 +101,7 @@ def prepare_edges(deps: DataFrame, skew_mitigation: str = "auto") -> DataFrame:
     threshold the edge table is round-robin repartitioned — one bounded
     shuffle that spreads every hub's edges across all partitions — and
     cached, since the wave loop re-reads it once per DAG level. Uniform
-    graphs skip the shuffle entirely. ``skew_mitigation="off"`` bypasses
-    the probe (single-wave callers that cannot amortize it)."""
-    if skew_mitigation == "off":
-        return deps
+    graphs skip the shuffle entirely."""
     from overseer_spark.operators.skew import key_skew_factor
 
     if key_skew_factor(deps, "dep_id") <= _SKEW_FACTOR_THRESHOLD:
@@ -105,18 +110,22 @@ def prepare_edges(deps: DataFrame, skew_mitigation: str = "auto") -> DataFrame:
     return deps.repartition(n).persist()
 
 
-def _release_edges(prepared: DataFrame, original: DataFrame) -> None:
-    """Drop the cache :func:`prepare_edges` may have pinned. ``prepared is
-    original`` exactly when no repartition+persist happened; otherwise the
-    wave loop that amortized the cache is over and a long-lived driver must
-    not accumulate one pinned edge copy per skewed-DAG call. Unpersist only
-    drops cached blocks — any still-lazy result recomputes from lineage."""
-    if prepared is not original:
-        prepared.unpersist()
+def _with_prepared_edges(deps: DataFrame, body) -> DataFrame:
+    """``body(prepare_edges(deps))``, then drop the edge cache
+    :func:`prepare_edges` may have pinned: the loop that amortized it is
+    over, and a long-lived driver must not accumulate one pinned edge copy
+    per skewed-DAG call. Unpersist only drops cached blocks — any
+    still-lazy result recomputes from lineage."""
+    prepared = prepare_edges(deps)
+    try:
+        return body(prepared)
+    finally:
+        if prepared is not deps:
+            prepared.unpersist()
 
 
 def _try_local_graph(
-    jobs: DataFrame, deps: DataFrame, cap: int
+    nodes: DataFrame, deps: DataFrame, cap: int
 ) -> tuple[list, list] | None:
     """Bounded probe-and-fetch for the driver-side fast paths: collect at
     most cap+1 rows from EACH of the edge and node tables; None when
@@ -131,31 +140,106 @@ def _try_local_graph(
     the data the local leg needs, so the fast path pays two Spark jobs
     total — the same count as an unprobed collect — instead of the two
     probe counts + two collects it cost before (the dag_pagerank bench
-    regression in r4). ``jobs`` must be pre-projected to the columns the
-    caller wants back (``id`` [+ weight]); edge rows carry
-    (job_id, dep_id)."""
+    regression in r4). ``nodes`` (the jobs, or the closure's seed set)
+    must be pre-projected to the columns the caller wants back (``id``
+    [+ weight]); edge rows are (job_id, dep_id)."""
     edge_rows = deps.select("job_id", "dep_id").limit(cap + 1).collect()
     if len(edge_rows) > cap:
         return None
-    job_rows = jobs.limit(cap + 1).collect()
-    if len(job_rows) > cap:
+    node_rows = nodes.limit(cap + 1).collect()
+    if len(node_rows) > cap:
         return None
-    return job_rows, edge_rows
+    return node_rows, edge_rows
 
 
-def _local_graph_ok(jobs: DataFrame, deps: DataFrame, cap: int) -> bool:
-    """Boolean view of :func:`_try_local_graph` (both tables under cap)."""
-    return _try_local_graph(jobs.select("id"), deps, cap) is not None
+def _kahn_order(ids, edges) -> list:
+    """Kahn's peel, driver-side: the ``ids`` in an order where every job
+    follows all of its deps. An edge ``(job_id, dep_id)`` counts only when
+    its job is in ``ids``. A job on a cycle, behind one, or with a dep
+    that is not in ``ids`` is never peeled and is missing from the order
+    — matching the distributed leg of :func:`detect_cycles`, where such a
+    dep is never done and keeps its dependents blocked."""
+    indeg = dict.fromkeys(ids, 0)
+    out_adj: dict[str, list[str]] = {}
+    for j, d in edges:
+        if j in indeg:
+            indeg[j] += 1
+            out_adj.setdefault(d, []).append(j)
+    order = [i for i, n in indeg.items() if n == 0]
+    for d in order:  # peeled jobs are appended while iterating
+        for j in out_adj.get(d, ()):
+            indeg[j] -= 1
+            if indeg[j] == 0:
+                order.append(j)
+    return order
+
+
+def _longest_paths(w: dict[str, int], edges) -> dict[str, int]:
+    """Driver-side max-plus recurrence ``cp(j) = w(j) + max(cp(dep))``
+    (roots: ``cp = w``), in Kahn order. Same relaxation as the distributed
+    wave loops: a job with any edge is no root, a dep that is no job row
+    is never reached, and a job gets a value once ANY dep has one."""
+    known = [(j, d) for j, d in edges if j in w and d in w]
+    deps_of: dict[str, list[str]] = {}
+    for j, d in known:
+        deps_of.setdefault(j, []).append(d)
+    has_edge = {j for j, _ in edges}
+    cp: dict[str, int] = {}
+    for j in _kahn_order(w, known):
+        reached = [cp[d] for d in deps_of.get(j, ()) if d in cp]
+        if reached or j not in has_edge:
+            cp[j] = w[j] + max(reached, default=0)
+    return cp
+
+
+def _waves(start: DataFrame, step, finish) -> DataFrame:
+    """The level-synchronous fixpoint of every distributed graph leg:
+    ``nxt = step(frontier, acc)`` from ``frontier = acc = start`` until a
+    wave is empty, ``acc ∪= nxt`` each wave; the result is
+    ``finish(acc)``. Iterations = DAG depth, not row count.
+
+    One action per wave: the wave is persisted and counted. Every
+    ``_CHECKPOINT_EVERY`` waves the wave and ``acc`` are
+    local-checkpointed instead, which truncates lineage so plans don't
+    grow with graph depth, and the frontiers persisted since the last cut
+    are released — cached blocks stay O(_CHECKPOINT_EVERY), not
+    O(depth). A result whose lineage still reads persisted frontiers is
+    cut once before they are released, so nothing stays cached."""
+    frontier = acc = start
+    pinned: list[DataFrame] = []  # persisted frontiers awaiting release
+    for wave in range(1, _MAX_WAVES + 1):
+        nxt = step(frontier, acc)
+        if wave % _CHECKPOINT_EVERY == 0:
+            nxt = nxt.localCheckpoint(eager=True)
+            n = nxt.count()
+            if n:
+                acc = acc.union(nxt).localCheckpoint(eager=True)
+            for p in pinned:
+                p.unpersist()
+            pinned.clear()
+        else:
+            nxt = nxt.persist()
+            n = nxt.count()
+            if n:
+                pinned.append(nxt)
+                acc = acc.union(nxt)
+        if n == 0:
+            nxt.unpersist()
+            break
+        frontier = nxt
+    out = finish(acc)
+    if pinned:
+        out = out.localCheckpoint(eager=True)
+        for p in pinned:
+            p.unpersist()
+    return out
 
 
 def transitive_dependents(
     deps: DataFrame,
     seed_ids: Iterable[str] | DataFrame,
-    checkpoint_every: int = 4,
-    max_iterations: int = 1000,
     strategy: str = "auto",
     local_edge_cap: int = 100_000,
-    skew_mitigation: str = "auto",
 ) -> DataFrame:
     """All direct + transitive dependents of the seed jobs (R5/Q33).
 
@@ -166,103 +250,66 @@ def transitive_dependents(
       Python. Job graphs are usually tiny relative to the data they move
       (thousands of edges), and a distributed fixed-point on a small graph
       pays one full job-scheduling round trip *per level* — driver compute
-      is orders of magnitude cheaper. Bounded by ``local_edge_cap``.
+      is orders of magnitude cheaper. Bounded by ``local_edge_cap`` edges
+      and seeds.
     - ``recursive_cte`` (Spark ≥ 4): a single ``WITH RECURSIVE`` plan —
       one job, no Python-driven loop.
     - ``bfs``: iterative semi-join BFS with frontier/visited sets,
       mirroring the reference's loop (overseer/store/jdbc.clj:101-113) but
-      distributed; ``localCheckpoint`` every few iterations truncates
-      lineage so plans don't grow with graph depth. The driver only ever
-      materializes per-iteration *counts* — id sets stay on executors.
-      Use for very deep graphs or engines without recursive CTEs.
+      distributed (:func:`_waves`: periodic ``localCheckpoint`` so plans
+      don't grow with graph depth). The driver only ever materializes
+      per-iteration *counts* — id sets stay on executors. Use for very
+      deep graphs or engines without recursive CTEs.
 
-    ``auto`` probes the edge-table size (one ``take`` of at most
-    ``local_edge_cap + 1`` rows — a few MB even over a huge table) and
-    picks local for small graphs, else the CTE, else BFS — the same
+    ``auto`` fetches at most ``local_edge_cap + 1`` edges and seeds
+    (:func:`_try_local_graph` — a few MB even over a huge table) and
+    picks local when both fit, else the CTE, else BFS — the same
     stats-driven strategy switch Spark itself applies for broadcast joins.
     """
     spark = deps.sparkSession
     if isinstance(seed_ids, DataFrame):
-        frontier = seed_ids.select(F.col(seed_ids.columns[0]).alias("id")).distinct()
+        seeds = seed_ids.select(F.col(seed_ids.columns[0]).alias("id")).distinct()
     else:
-        seed_ids = list(seed_ids)
-        frontier = local_frame(spark, [(i,) for i in seed_ids], schema="id string")
+        seeds = local_frame(spark, [(i,) for i in seed_ids], schema="id string")
     if strategy in ("auto", "local"):
-        # size probe: one job, and LocalLimit caps every task at reading
-        # cap+1 rows, so this stays cheap over an arbitrarily large edge
-        # table (df.take would escalate through several ever-larger scans)
-        edge_df = deps.select("job_id", "dep_id")
-        small = edge_df.limit(local_edge_cap + 1).count() <= local_edge_cap
-        if small:
-            edges = edge_df.collect()
-            if isinstance(seed_ids, DataFrame):
-                seeds = {r[0] for r in frontier.collect()}
-            else:
-                seeds = set(seed_ids)
+        probe = _try_local_graph(seeds, deps, local_edge_cap)
+        if probe is not None:
+            seed_rows, edge_rows = probe
             adj: dict[str, list[str]] = {}
-            for e in edges:
-                adj.setdefault(e.dep_id, []).append(e.job_id)
+            for j, d in edge_rows:
+                adj.setdefault(d, []).append(j)
+            seed_set = {i for (i,) in seed_rows}
             out: set[str] = set()
-            fr = seeds
+            fr = seed_set
             while fr:
-                nxt = {j for d in fr for j in adj.get(d, ())} - out - seeds
-                out |= nxt
-                fr = nxt
+                fr = {j for d in fr for j in adj.get(d, ())} - out - seed_set
+                out |= fr
             return local_frame(spark, [(i,) for i in sorted(out)], schema="id string")
         if strategy == "local":
             raise ValueError(
-                f"edge table exceeds local_edge_cap={local_edge_cap}; "
+                f"edge table or seed set exceeds local_edge_cap={local_edge_cap}; "
                 "use strategy='recursive_cte' or 'bfs'"
             )
+
     # beyond the local cap the graph is big enough for hub skew to
     # matter — measure once, decluster if needed (see prepare_edges)
-    raw_deps = deps
-    deps = prepare_edges(deps, skew_mitigation)
-    try:
+    def closure(edges: DataFrame) -> DataFrame:
         if strategy in ("auto", "recursive_cte"):
             try:
-                return _dependents_recursive_cte(deps, frontier)
+                return _dependents_recursive_cte(edges, seeds)
             except Exception:
                 if strategy == "recursive_cte":
                     raise
-        visited = frontier  # seeds excluded from result at the end
-        result = local_frame(spark, [], schema="id string")
-        pinned: list[DataFrame] = []  # persisted frontiers awaiting release
-        for it in range(max_iterations):
-            nxt = direct_dependents(deps, frontier).join(visited, "id", "left_anti")
-            if checkpoint_every and (it + 1) % checkpoint_every == 0:
-                # truncate lineage so the plan doesn't grow with graph depth
-                nxt = nxt.localCheckpoint(eager=True)
-                n = nxt.count()
-                if n:
-                    result = result.union(nxt).localCheckpoint(eager=True)
-                    visited = visited.union(nxt).localCheckpoint(eager=True)
-                # result/visited lineage is cut past the interim persisted
-                # frontiers — release them so cached blocks stay
-                # O(checkpoint_every), not O(depth) (critical_path pattern)
-                for p in pinned:
-                    p.unpersist()
-                pinned.clear()
-            else:
-                nxt = nxt.persist()
-                n = nxt.count()  # single action per iteration: populates cache
-                if n:
-                    pinned.append(nxt)
-                    result = result.union(nxt)
-                    visited = visited.union(nxt)
-            if n == 0:
-                nxt.unpersist()
-                break
-            frontier = nxt
-        out = result.distinct()
-        if pinned:
-            # cut once so dropping the last frontiers can't force recompute
-            out = out.localCheckpoint(eager=True)
-            for p in pinned:
-                p.unpersist()
-        return out
-    finally:
-        _release_edges(deps, raw_deps)
+        # acc is the visited set, seeds included; they leave at the end
+        return _waves(
+            seeds,
+            lambda frontier, seen: direct_dependents(edges, frontier).join(
+                seen, "id", "left_anti"
+            ),
+            lambda seen: seen.join(seeds, "id", "left_anti"),
+        )
+
+    return _with_prepared_edges(deps, closure)
 
 
 def _dependents_recursive_cte(deps: DataFrame, seeds: DataFrame) -> DataFrame:
@@ -292,9 +339,6 @@ def _dependents_recursive_cte(deps: DataFrame, seeds: DataFrame) -> DataFrame:
 def topo_levels(
     jobs: DataFrame,
     deps: DataFrame,
-    checkpoint_every: int = 4,
-    max_iterations: int = 1000,
-    skew_mitigation: str = "auto",
     strategy: str = "auto",
     local_edge_cap: int = 100_000,
 ) -> DataFrame:
@@ -305,93 +349,43 @@ def topo_levels(
     reference computes nothing like it — workers discover readiness
     incrementally via R3 — but operators want it for capacity planning).
 
-    Iterative level-synchronous propagation, one distributed join per wave:
-    frontier_k = jobs one edge past frontier_{k-1}, keeping the MAX level
-    per job (a diamond's sink must wait for its *longest* incoming path).
-    ``localCheckpoint`` every few waves truncates lineage, same discipline
-    as :func:`transitive_dependents`. Iteration count = DAG depth, not row
-    count — a 100 TB job table with a shallow DAG converges in a handful
-    of passes. Same adaptive switch as :func:`pagerank`: under
-    ``local_edge_cap`` edges the identical Kahn longest-path recurrence
-    runs driver-side (the wave loop is pure scheduling overhead there).
+    Iterative level-synchronous propagation (:func:`_waves`), one
+    distributed join per wave: frontier_k = jobs one edge past
+    frontier_{k-1}, keeping the MAX level per job (a diamond's sink must
+    wait for its *longest* incoming path). Iteration count = DAG depth,
+    not row count — a 100 TB job table with a shallow DAG converges in a
+    handful of passes. Edges whose ``job_id`` is no job row are dropped
+    once, before the loop. Same adaptive switch as :func:`pagerank`:
+    under ``local_edge_cap`` edges and jobs the same longest-path
+    recurrence runs driver-side (:func:`critical_path`'s with unit
+    weights, minus 1) — the wave loop is pure scheduling overhead there.
     """
-    spark = jobs.sparkSession
-    probe = (
-        _try_local_graph(jobs.select("id"), deps, local_edge_cap)
-        if strategy == "auto"
-        else None
-    )
+    ids = jobs.select("id")
+    probe = _try_local_graph(ids, deps, local_edge_cap) if strategy == "auto" else None
     if probe is not None:
         job_rows, edge_rows = probe
-        ids = [r["id"] for r in job_rows]
-        edges = [(r["job_id"], r["dep_id"]) for r in edge_rows]
-        known = set(ids)
-        indeg = {i: 0 for i in ids}
-        out_adj: dict[str, list[str]] = {}
-        for j, d in edges:
-            if j in known:
-                indeg[j] += 1
-                out_adj.setdefault(d, []).append(j)
-        # Kahn order, level(j) = 1 + max(level(dep)) — same max semantics
-        lvl = {i: 0 for i, n in indeg.items() if n == 0}
-        queue = list(lvl)
-        while queue:
-            d = queue.pop()
-            for j in out_adj.get(d, ()):
-                cand = lvl[d] + 1
-                if j not in lvl or cand > lvl[j]:
-                    lvl[j] = cand
-                indeg[j] -= 1
-                if indeg[j] == 0:
-                    queue.append(j)
+        cp = _longest_paths({i: 1 for (i,) in job_rows}, edge_rows)
         return local_frame(
-            spark, [(i, lvl[i]) for i in sorted(lvl)], schema="id string, level long"
+            jobs.sparkSession,
+            [(i, c - 1) for i, c in sorted(cp.items())],
+            schema="id string, level long",
         )
-    raw_deps = deps
-    deps = prepare_edges(deps, skew_mitigation)
-    try:
-        roots = jobs.select("id").join(
-            deps.select(F.col("job_id").alias("id")), "id", "left_anti"
-        )
-        frontier = roots.withColumn("level", F.lit(0).cast("long"))
-        acc = frontier
-        pinned: list[DataFrame] = []  # persisted frontiers awaiting release
-        for it in range(max_iterations):
-            nxt = (
-                deps.join(frontier, deps.dep_id == frontier.id)
+
+    def levels(edges: DataFrame) -> DataFrame:
+        roots = ids.join(edges.select(F.col("job_id").alias("id")), "id", "left_anti")
+        return _waves(
+            roots.withColumn("level", F.lit(0).cast("long")),
+            lambda frontier, _: (
+                edges.join(frontier, edges.dep_id == frontier.id)
                 .select(F.col("job_id").alias("id"), (F.col("level") + 1).alias("level"))
                 .groupBy("id")
                 .agg(F.max("level").alias("level"))
-            )
-            if checkpoint_every and (it + 1) % checkpoint_every == 0:
-                nxt = nxt.localCheckpoint(eager=True)
-                n = nxt.count()
-                if n:
-                    acc = acc.union(nxt).localCheckpoint(eager=True)
-                # acc's lineage is cut — release interim persisted
-                # frontiers (critical_path pattern: cached blocks stay
-                # O(checkpoint_every), not O(depth))
-                for p in pinned:
-                    p.unpersist()
-                pinned.clear()
-            else:
-                nxt = nxt.persist()
-                n = nxt.count()
-                if n:
-                    pinned.append(nxt)
-                    acc = acc.union(nxt)
-            if n == 0:
-                nxt.unpersist()
-                break
-            frontier = nxt
-        out = acc.groupBy("id").agg(F.max("level").cast("long").alias("level"))
-        if pinned:
-            out = out.localCheckpoint(eager=True)
-            for p in pinned:
-                p.unpersist()
-        return out
-    finally:
-        _release_edges(deps, raw_deps)
+            ),
+            lambda acc: acc.groupBy("id").agg(F.max("level").cast("long").alias("level")),
+        )
+
+    known = deps.join(ids.select(F.col("id").alias("job_id")), "job_id", "left_semi")
+    return _with_prepared_edges(known, levels)
 
 
 def pagerank(
@@ -399,8 +393,6 @@ def pagerank(
     deps: DataFrame,
     iterations: int = 10,
     damping: float = 0.85,
-    checkpoint_every: int = 4,
-    skew_mitigation: str = "auto",
     strategy: str = "auto",
     local_edge_cap: int = 100_000,
 ) -> DataFrame:
@@ -413,28 +405,24 @@ def pagerank(
     Same adaptive strategy switch as :func:`transitive_dependents`: job
     graphs are usually tiny relative to the data they move, and a
     10-iteration distributed loop on a 13-node graph pays ~30 Spark jobs
-    of pure scheduling overhead — ``auto`` probes the edge count (one
-    bounded ``limit().count()``) and runs the identical float recurrence
-    driver-side under ``local_edge_cap``. Beyond the cap (``distributed``
-    forces it): each iteration is ONE join (edges × current ranks on the
-    out-node) + one aggregation keyed by the in-node — both shuffles
-    land on the same id-hash partitioning, and AQE broadcasts the rank
-    side while it is dimension-sized. Iteration count is fixed,
-    independent of graph size; ``localCheckpoint`` every few rounds
-    truncates lineage exactly like :func:`topo_levels`.
+    of pure scheduling overhead — ``auto`` fetches at most
+    ``local_edge_cap + 1`` edges and jobs and runs the identical float
+    recurrence driver-side when both fit. Beyond the cap
+    (``distributed`` forces it): each iteration is ONE join (edges ×
+    current ranks on the out-node) + one aggregation keyed by the
+    in-node — both shuffles land on the same id-hash partitioning, and
+    AQE broadcasts the rank side while it is dimension-sized. Iteration
+    count is fixed, independent of graph size; ``localCheckpoint`` every
+    ``_CHECKPOINT_EVERY`` rounds truncates lineage.
     """
     spark = jobs.sparkSession
-    probe = (
-        _try_local_graph(jobs.select("id"), deps, local_edge_cap)
-        if strategy == "auto"
-        else None
-    )
+    nodes = jobs.select("id")
+    probe = _try_local_graph(nodes, deps, local_edge_cap) if strategy == "auto" else None
     if probe is not None:
-        job_rows, edge_rows = probe
-        ids = [r["id"] for r in job_rows]
+        job_rows, edges = probe
+        ids = [i for (i,) in job_rows]
         if not ids:
-            return jobs.select("id").withColumn("rank", F.lit(0.0))
-        edges = [(r["job_id"], r["dep_id"]) for r in edge_rows]
+            return nodes.withColumn("rank", F.lit(0.0))
         outd: dict[str, int] = {}
         for a, _ in edges:
             outd[a] = outd.get(a, 0) + 1
@@ -450,19 +438,17 @@ def pagerank(
         return local_frame(
             spark, [(i, rank[i]) for i in sorted(ids)], schema="id string, rank double"
         )
-    raw_deps = deps
-    deps = prepare_edges(deps, skew_mitigation)
-    try:
-        nodes = jobs.select("id")
+
+    def power_iteration(edges: DataFrame) -> DataFrame:
         n_nodes = nodes.count()
         if n_nodes == 0:
             return nodes.withColumn("rank", F.lit(0.0))
-        out_deg = deps.groupBy("job_id").agg(F.count(F.lit(1)).alias("_outd"))
+        out_deg = edges.groupBy("job_id").agg(F.count(F.lit(1)).alias("_outd"))
         ranks = nodes.withColumn("rank", F.lit(1.0 / n_nodes))
         base = (1.0 - damping) / n_nodes
         for it in range(iterations):
             contribs = (
-                deps.join(ranks, deps.job_id == ranks.id)
+                edges.join(ranks, edges.job_id == ranks.id)
                 .join(out_deg, "job_id")
                 .select(
                     F.col("dep_id").alias("id"),
@@ -477,27 +463,25 @@ def pagerank(
                     "rank"
                 ),
             )
-            if checkpoint_every and (it + 1) % checkpoint_every == 0:
+            if (it + 1) % _CHECKPOINT_EVERY == 0:
                 ranks = ranks.localCheckpoint(eager=True)
-        if deps is not raw_deps:
-            # prepare_edges pinned a declustered edge cache that the
-            # finally-block is about to release: cut the returned plan
-            # loose so later actions reuse materialized ranks instead of
-            # recomputing the whole iteration chain (correct either way —
-            # lineage replays the repartition — but wastefully). NOTE this
-            # one path returns an EAGERLY materialized result; the
-            # uncached path stays lazy like the other graph ops.
+        if edges is not deps:
+            # prepare_edges pinned a declustered edge cache that is about
+            # to be released: cut the returned plan loose so later actions
+            # reuse materialized ranks instead of recomputing the whole
+            # iteration chain (correct either way — lineage replays the
+            # repartition — but wastefully). NOTE this one path returns an
+            # EAGERLY materialized result; the uncached path stays lazy
+            # like the other graph ops.
             ranks = ranks.localCheckpoint(eager=True)
         return ranks
-    finally:
-        _release_edges(deps, raw_deps)
+
+    return _with_prepared_edges(deps, power_iteration)
 
 
 def detect_cycles(
     jobs: DataFrame,
     deps: DataFrame,
-    checkpoint_every: int = 4,
-    max_iterations: int = 1000,
     strategy: str = "auto",
     local_edge_cap: int = 100_000,
 ) -> DataFrame:
@@ -509,69 +493,34 @@ def detect_cycles(
     cycle's members are never ready, never dead — silently stuck forever).
     This is the audit that finds them: iteratively emit jobs whose
     dependencies are ALL emitted (two anti-joins per wave — a node with no
-    un-done dep), until fixpoint; whatever remains can never start = the
-    set of jobs on or downstream-locked by a cycle. Iterations = DAG
-    depth, not row count; lineage truncated on the same cadence as
-    :func:`topo_levels`. Same adaptive switch as :func:`pagerank` —
-    under ``local_edge_cap`` edges the identical Kahn peel runs
-    driver-side. NOTE vs topo_levels: that op's longest-path
-    frontier never terminates on a cyclic graph — this one always does
-    (the fixpoint is monotone and bounded by |jobs|).
+    un-done dep), until fixpoint (:func:`_waves`); whatever remains can
+    never start = the set of jobs on or downstream-locked by a cycle. An
+    unknown ``dep_id`` is never done and keeps its dependents blocked.
+    Iterations = DAG depth, not row count. Same adaptive switch as
+    :func:`pagerank` — under ``local_edge_cap`` edges and jobs the same
+    Kahn peel runs driver-side (:func:`_kahn_order`). NOTE vs
+    topo_levels: that op's longest-path frontier never terminates on a
+    cyclic graph — this one always does (the fixpoint is monotone and
+    bounded by |jobs|).
     """
-    spark = jobs.sparkSession
-    probe = (
-        _try_local_graph(jobs.select("id"), deps, local_edge_cap)
-        if strategy == "auto"
-        else None
-    )
+    ids = jobs.select("id")
+    probe = _try_local_graph(ids, deps, local_edge_cap) if strategy == "auto" else None
     if probe is not None:
         job_rows, edge_rows = probe
-        id_list = [r["id"] for r in job_rows]
-        edges = [(r["job_id"], r["dep_id"]) for r in edge_rows]
-        known = set(id_list)
-        indeg = {i: 0 for i in id_list}
-        out_adj: dict[str, list[str]] = {}
-        for j, d in edges:
-            # d may be a dangling dep (not a job row): it is never emitted,
-            # so indeg[j] stays unsatisfied and j is reported stuck —
-            # matching the distributed leg, where an unknown dep_id is
-            # never in `done` and keeps its dependents blocked forever
-            if j in known:
-                indeg[j] += 1
-                out_adj.setdefault(d, []).append(j)
-        queue = [i for i, n in indeg.items() if n == 0]
-        emitted = set()
-        while queue:
-            d = queue.pop()
-            emitted.add(d)
-            for j in out_adj.get(d, ()):
-                indeg[j] -= 1
-                if indeg[j] == 0:
-                    queue.append(j)
-        stuck = sorted(set(id_list) - emitted)
-        return local_frame(spark, [(i,) for i in stuck], schema="id string")
-    ids = jobs.select("id")
-    done = ids.join(
-        deps.select(F.col("job_id").alias("id")), "id", "left_anti"
-    ).persist()
-    done.count()
-    for it in range(max_iterations):
+        id_list = [i for (i,) in job_rows]
+        stuck = sorted(set(id_list) - set(_kahn_order(id_list, edge_rows)))
+        return local_frame(jobs.sparkSession, [(i,) for i in stuck], schema="id string")
+
+    def newly_done(_frontier: DataFrame, done: DataFrame) -> DataFrame:
         blocked = (
-            deps.join(
-                done.select(F.col("id").alias("dep_id")), "dep_id", "left_anti"
-            )
+            deps.join(done.select(F.col("id").alias("dep_id")), "dep_id", "left_anti")
             .select(F.col("job_id").alias("id"))
             .distinct()
         )
-        newly = ids.join(done, "id", "left_anti").join(blocked, "id", "left_anti")
-        if checkpoint_every and (it + 1) % checkpoint_every == 0:
-            newly = newly.localCheckpoint(eager=True)
-        else:
-            newly = newly.persist()
-        if newly.count() == 0:
-            break
-        done = done.union(newly)
-    return ids.join(done, "id", "left_anti")
+        return ids.join(done, "id", "left_anti").join(blocked, "id", "left_anti")
+
+    roots = ids.join(deps.select(F.col("job_id").alias("id")), "id", "left_anti")
+    return _waves(roots, newly_done, lambda done: ids.join(done, "id", "left_anti"))
 
 
 def job_runtime_stats(log_df: DataFrame) -> DataFrame:
@@ -648,9 +597,6 @@ def critical_path(
     jobs: DataFrame,
     deps: DataFrame,
     weight_col: str = "weight",
-    checkpoint_every: int = 4,
-    max_iterations: int = 1000,
-    skew_mitigation: str = "auto",
     strategy: str = "auto",
     local_edge_cap: int = 100_000,
 ) -> DataFrame:
@@ -662,95 +608,37 @@ def critical_path(
     the bottleneck). ``jobs`` must carry ``weight_col`` (estimated or
     historical runtime, e.g. from job_runtime_stats).
 
-    Same adaptive strategy switch as :func:`pagerank`: ``auto`` probes
-    the edge count and runs the identical max-plus recurrence
-    driver-side under ``local_edge_cap`` (a wave loop on a
-    fixture-sized DAG is pure job-scheduling overhead). Distributed
-    path: same level-synchronous relaxation as :func:`topo_levels` —
-    one distributed join per wave keeping the MAX accumulated weight
-    per job, ``localCheckpoint`` lineage cuts — so iterations = DAG
-    depth. A job may be relaxed in several waves (diamonds); the final
-    groupBy keeps the longest path, which is exactly the estimator's
-    max-plus semiring."""
-    spark = jobs.sparkSession
-    probe = (
-        _try_local_graph(
-            jobs.select("id", F.col(weight_col).cast("long").alias("_w")),
-            deps,
-            local_edge_cap,
-        )
-        if strategy == "auto"
-        else None
-    )
+    Same adaptive strategy switch as :func:`pagerank`: ``auto`` fetches
+    at most ``local_edge_cap + 1`` edges and jobs and runs the identical
+    max-plus recurrence driver-side when both fit
+    (:func:`_longest_paths` — a wave loop on a fixture-sized DAG is pure
+    job-scheduling overhead). Distributed path: same level-synchronous
+    relaxation as :func:`topo_levels` — one distributed join per wave
+    keeping the MAX accumulated weight per job, then a join to the
+    weights, which also drops jobs that are no job row — so iterations =
+    DAG depth. A job may be relaxed in several waves (diamonds); the
+    final groupBy keeps the longest path, which is exactly the
+    estimator's max-plus semiring."""
+    w = jobs.select("id", F.col(weight_col).cast("long").alias("_w"))
+    probe = _try_local_graph(w, deps, local_edge_cap) if strategy == "auto" else None
     if probe is not None:
         job_rows, edge_rows = probe
-        wt = {r["id"]: int(r["_w"]) for r in job_rows}
-        edges = [(r["job_id"], r["dep_id"]) for r in edge_rows]
-        indeg: dict[str, int] = {i: 0 for i in wt}
-        out_adj: dict[str, list[str]] = {}
-        for j, d in edges:
-            if j in indeg:
-                indeg[j] += 1
-                out_adj.setdefault(d, []).append(j)
-        # Kahn order; cp(j) = w(j) + max(cp(dep)) exactly as distributed
-        cp = {i: wt[i] for i, n in indeg.items() if n == 0}
-        queue = list(cp)
-        while queue:
-            d = queue.pop()
-            for j in out_adj.get(d, ()):
-                cand = wt[j] + cp[d]
-                if j not in cp or cand > cp[j]:
-                    cp[j] = cand
-                indeg[j] -= 1
-                if indeg[j] == 0:
-                    queue.append(j)
-        return local_frame(
-            spark, [(i, cp[i]) for i in sorted(cp)], schema="id string, cp long"
-        )
-    raw_deps = deps
-    deps = prepare_edges(deps, skew_mitigation)
-    try:
-        w = jobs.select("id", F.col(weight_col).cast("long").alias("_w"))
-        roots = w.join(
-            deps.select(F.col("job_id").alias("id")), "id", "left_anti"
-        ).select("id", F.col("_w").alias("cp"))
-        frontier = roots
-        acc = frontier
-        pinned: list[DataFrame] = []  # persisted frontiers awaiting release
-        for it in range(max_iterations):
-            nxt = (
-                deps.join(frontier, deps.dep_id == frontier.id)
+        cp = _longest_paths({i: int(x) for i, x in job_rows}, edge_rows)
+        return local_frame(jobs.sparkSession, sorted(cp.items()), schema="id string, cp long")
+
+    def relax(edges: DataFrame) -> DataFrame:
+        roots = w.join(edges.select(F.col("job_id").alias("id")), "id", "left_anti")
+        return _waves(
+            roots.select("id", F.col("_w").alias("cp")),
+            lambda frontier, _: (
+                edges.join(frontier, edges.dep_id == frontier.id)
                 .select(F.col("job_id").alias("id"), F.col("cp").alias("_base"))
                 .groupBy("id")
                 .agg(F.max("_base").alias("_base"))
                 .join(w, "id")
                 .select("id", (F.col("_base") + F.col("_w")).alias("cp"))
-            )
-            if checkpoint_every and (it + 1) % checkpoint_every == 0:
-                nxt = nxt.localCheckpoint(eager=True)
-                n = nxt.count()
-                acc = acc.union(nxt).localCheckpoint(eager=True)
-                # acc's lineage is now cut, so the interim persisted
-                # frontiers can be dropped without forcing recompute —
-                # cached blocks stay O(checkpoint_every), not O(depth)
-                for p in pinned:
-                    p.unpersist()
-                pinned.clear()
-            else:
-                nxt = nxt.persist()
-                n = nxt.count()
-                if n:
-                    pinned.append(nxt)
-                    acc = acc.union(nxt)
-            if n == 0:
-                nxt.unpersist()
-                break
-            frontier = nxt
-        out = acc.groupBy("id").agg(F.max("cp").cast("long").alias("cp"))
-        if pinned:
-            out = out.localCheckpoint(eager=True)
-            for p in pinned:
-                p.unpersist()
-        return out
-    finally:
-        _release_edges(deps, raw_deps)
+            ),
+            lambda acc: acc.groupBy("id").agg(F.max("cp").cast("long").alias("cp")),
+        )
+
+    return _with_prepared_edges(deps, relax)

@@ -314,7 +314,7 @@ def ivf_topk(
     quantizer is TRAINED (trained_centroids — seeded k-means on a
     deterministic sample), not the first-k-by-id shortcut.
     """
-    centroids = eager_cache(trained_centroids(corpus, n_cells, id_col, vec_col))
+    centroids = trained_centroids(corpus, n_cells, id_col, vec_col)
     assigned = assign_cells(corpus, n_cells, id_col, vec_col, centroids)
     cents = centroids.select(F.col(id_col).alias("cell"), F.col(vec_col).alias("_cvec"))
     q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qvec"))
@@ -946,7 +946,7 @@ def ivfpq_topk(
     is written partitioned by cell (the ann_index.py pattern) so the
     probe is static partition pruning; here it is an equi-join on cell."""
     spark = corpus.sparkSession
-    centroids = eager_cache(trained_centroids(corpus, n_cells, id_col, vec_col))
+    centroids = trained_centroids(corpus, n_cells, id_col, vec_col)
     assigned = assign_cells(corpus, n_cells, id_col, vec_col, centroids)
     codes = pq_encode(corpus, books, id_col, vec_col)
     cellcodes = codes.join(assigned.select(id_col, "cell"), id_col)

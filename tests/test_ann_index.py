@@ -1297,3 +1297,18 @@ def test_ivf_lsh_ivfpq_serves_and_compaction_leave_nothing_cached(
             assert _cache_manager(spark).isEmpty()
     finally:
         shutil.rmtree(d, ignore_errors=True)
+
+
+def test_ivf_build_and_in_memory_ivf_topk_leave_nothing_cached(spark, emb):
+    """The trained centroids are a driver-built local relation: neither an
+    IVF index build nor an in-memory ivf_topk caches them."""
+    d = tempfile.mkdtemp(prefix="ivf_uncached_build_")
+    try:
+        spark.catalog.clearCache()
+        AI.build_ivf_index(emb, d, n_cells=N_CELLS)
+        assert _cache_manager(spark).isEmpty()
+        queries = emb.filter(F.col("vec_id") < 10)
+        _rows(ivf_topk(emb, queries, k=3, n_cells=N_CELLS, n_probe=N_PROBE))
+        assert _cache_manager(spark).isEmpty()
+    finally:
+        shutil.rmtree(d, ignore_errors=True)

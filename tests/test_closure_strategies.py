@@ -57,14 +57,10 @@ def test_strategies_match_python(spark, dag, strategy, seed):
 
 
 def test_bfs_deep_closure_with_checkpointing(spark, dag):
-    """One deep-seed BFS run exercising the localCheckpoint path."""
+    """One deep-seed BFS run exercising the localCheckpoint path: the j0
+    closure is deeper than the 4 waves between lineage cuts."""
     df, edges = dag
-    got = {
-        r["id"]
-        for r in transitive_dependents(
-            df, ["j0"], strategy="bfs", checkpoint_every=3
-        ).collect()
-    }
+    got = {r["id"] for r in transitive_dependents(df, ["j0"], strategy="bfs").collect()}
     assert got == py_dependents(edges, "j0")
 
 
@@ -191,7 +187,6 @@ def test_detect_cycles_kahn(spark):
         assert detect_cycles(jobs2, deps2, strategy=strategy).count() == 0
 
 
-@pytest.mark.slow
 def test_critical_path_strategies_agree(spark, dag):
     """critical_path: the driver-side Kahn fast path and the distributed
     wave relaxation produce identical max-plus longest paths on the
@@ -233,6 +228,60 @@ def test_detect_cycles_dangling_dep_parity(spark):
         assert stuck == {"a"}, strategy
 
 
+@pytest.mark.parametrize(
+    "edges,levels",
+    [
+        # an edge from a job that is no job row: the phantom job is never
+        # emitted (the distributed topo_levels leg used to put it at level 1)
+        ([("b", "a"), ("ghost", "a")], {"a": 0, "b": 1}),
+        # a dep that is no job row is never reached: c waits forever, d is
+        # reached through b, and so is e behind d
+        (
+            [("b", "a"), ("c", "ghost"), ("d", "c"), ("d", "b"), ("e", "d")],
+            {"a": 0, "b": 1, "d": 2, "e": 3},
+        ),
+    ],
+    ids=["unknown_job", "unknown_dep"],
+)
+def test_longest_path_legs_agree_on_unknown_ids(spark, edges, levels):
+    """topo_levels and critical_path return the same rows from the
+    driver-side and the distributed leg when an edge names an id that is
+    no job row."""
+    from overseer_spark.operators.scheduling import critical_path, topo_levels
+    from overseer_spark.session import local_frame
+
+    names = sorted({n for e in edges for n in e} - {"ghost"})
+    weight = {n: 2 + i for i, n in enumerate(names)}
+    jobs = local_frame(spark, sorted(weight.items()), "id string, weight long")
+    deps = local_frame(spark, edges, "job_id string, dep_id string")
+    cp = {}
+    for n in sorted(levels, key=levels.get):
+        cp[n] = weight[n] + max(
+            (cp[d] for j, d in edges if j == n and d in cp), default=0
+        )
+    for strategy in ("auto", "distributed"):
+        got = {r.id: r.level for r in topo_levels(jobs, deps, strategy=strategy).collect()}
+        assert got == levels, strategy
+        got = {r.id: r.cp for r in critical_path(jobs, deps, strategy=strategy).collect()}
+        assert got == cp, strategy
+
+
+def test_dataframe_seeds_above_cap_route_distributed(spark, dag):
+    """The local leg bounds the seed frame like the edge table: a
+    DataFrame seed set larger than local_edge_cap takes the distributed
+    leg even when every edge fits, and still matches the reference."""
+    df, edges = dag
+    cap = len(edges)
+    ids = ["j150"] + [f"ghost{i}" for i in range(cap)]
+    seeds = spark.createDataFrame([(i,) for i in ids], schema="id string")
+    with pytest.raises(ValueError):
+        transitive_dependents(df, seeds, strategy="local", local_edge_cap=cap)
+    want = py_dependents(edges, "j150") - set(ids)
+    for strategy in ("auto", "bfs"):
+        got = transitive_dependents(df, seeds, strategy=strategy, local_edge_cap=cap)
+        assert {r["id"] for r in got.collect()} == want, strategy
+
+
 @pytest.fixture(scope="module")
 def sparse_graph(spark):
     """Edge-sparse, node-heavy: the 100 TB ingest shape that breaks an
@@ -252,14 +301,14 @@ def test_probe_bounds_nodes_not_just_edges(spark, sparse_graph):
     JOBS table exceeds the cap even though the edge table is tiny —
     otherwise jobs.select('id').collect() is unbounded on an edge-sparse
     100 TB jobs table."""
-    from overseer_spark.operators.scheduling import _local_graph_ok
+    from overseer_spark.operators.scheduling import _try_local_graph
 
     jobs, deps, nodes, _ = sparse_graph
-    assert not _local_graph_ok(jobs, deps, cap=10)  # 3 edges pass, 60 nodes don't
-    assert _local_graph_ok(jobs, deps, cap=100)  # both bounded -> local ok
+    ids = jobs.select("id")
+    assert _try_local_graph(ids, deps, cap=10) is None  # 3 edges pass, 60 nodes don't
+    assert _try_local_graph(ids, deps, cap=100) is not None  # both bounded -> local ok
 
 
-@pytest.mark.slow
 def test_edge_sparse_auto_routes_distributed_and_matches(spark, sparse_graph):
     """With cap=10 the sparse graph (3 edges / 60 nodes) must take the
     distributed leg (probe unit-tested above gates exactly this) and every
@@ -296,3 +345,33 @@ def test_edge_sparse_auto_routes_distributed_and_matches(spark, sparse_graph):
     assert set(pr_dist) == set(pr_local) == set(nodes)
     for n in nodes:
         assert abs(pr_dist[n] - pr_local[n]) < 1e-9, n
+
+
+def test_distributed_legs_leave_nothing_cached(spark):
+    """The distributed leg of every graph operator releases what it
+    persisted: after each call the CacheManager is empty. The chain is
+    deeper than the waves between two lineage cuts, so the loops both cut
+    and end with persisted frontiers still pinned."""
+    from overseer_spark.operators.scheduling import (
+        critical_path,
+        detect_cycles,
+        pagerank,
+        topo_levels,
+    )
+    from overseer_spark.session import local_frame
+
+    names = [f"c{i}" for i in range(7)]
+    edges = list(zip(names[1:], names)) + [("c3", "c1")]
+    jobs = local_frame(spark, [(n, 1) for n in names], "id string, weight long")
+    deps = local_frame(spark, edges, "job_id string, dep_id string")
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    for name, run in (
+        ("transitive_dependents", lambda: transitive_dependents(deps, ["c0"], strategy="bfs")),
+        ("topo_levels", lambda: topo_levels(jobs, deps, strategy="distributed")),
+        ("pagerank", lambda: pagerank(jobs, deps, strategy="distributed")),
+        ("detect_cycles", lambda: detect_cycles(jobs, deps, strategy="distributed")),
+        ("critical_path", lambda: critical_path(jobs, deps, strategy="distributed")),
+    ):
+        run().collect()
+        assert cache.isEmpty(), name

@@ -228,8 +228,8 @@ def test_variant_extraction_stays_jvm(spark):
 
 def test_pagerank_plan_is_bounded(spark):
     """PageRank's returned plan must not grow with iteration count beyond
-    the checkpoint horizon: after 10 iterations with checkpoint_every=4,
-    the final lineage holds at most ~2 join rounds, not 10."""
+    the checkpoint horizon: after 10 iterations with a lineage cut every
+    4, the final lineage holds at most ~2 join rounds, not 10."""
     from overseer_spark.operators.scheduling import pagerank
     from overseer_spark.plans import explain_str
     from overseer_spark.queries import fixtures as FX

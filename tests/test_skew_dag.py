@@ -85,7 +85,9 @@ def test_hub_wave_join_has_no_straggler_after_declustering(spark):
 def test_hub_closure_and_topo_levels_stay_correct(spark):
     """Correctness at hub scale: the distributed BFS closure of 'hub' is
     exactly its 1e5 dependents, and topo_levels puts roots at 0 and the
-    1e5 hub dependents (+ uniform dependents) at 1."""
+    1e5 hub dependents (+ uniform dependents) at 1. Both release the
+    declustered edge copy prepare_edges persisted."""
+    spark.catalog.clearCache()
     deps = _hub_edges(spark)
     closure = transitive_dependents(deps, ["hub"], strategy="bfs")
     assert closure.count() == N_HUB
@@ -105,3 +107,4 @@ def test_hub_closure_and_topo_levels_stay_correct(spark):
     }
     # roots: hub + the 1e5 p-nodes; level 1: 1e5 j-nodes + 1e5 x-nodes
     assert by_level == {0: N_HUB + 1, 1: 2 * N_HUB}
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

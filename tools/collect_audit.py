@@ -99,10 +99,6 @@ WAIVERS: dict[str, str] = {
     "embedding_mmr_topk": "collects the bounded ANN candidate shortlist",
     # WARC stream fixture build: one payload row per source group (20)
     "stream_warc_ingest": "build_warc emits one row per source group",
-    # transitive closure adaptive 'local' strategy: collect guarded by
-    # limit(cap+1) count probes on BOTH edge and job tables
-    # (operators/scheduling.py) with a distributed BFS fallback
-    "q33_transitive_closure": "closure local path: edge/job cap probes + distributed fallback",
     # tokenizer artifact reload: the merge table has exactly n_merges rows
     # (one per training step — 5 here, ~vocab-sized in production, never
     # corpus-sized); broadcast-ranks application needs it driver-side
