@@ -136,13 +136,11 @@ def _try_local_graph(
     Each fetch is one LocalLimit-bounded scan (cap+1 rows max per task),
     cheap over an arbitrarily large table.
 
-    Returning the fetched rows is the amortization: a passing probe IS
-    the data the local leg needs, so the fast path pays two Spark jobs
-    total — the same count as an unprobed collect — instead of the two
-    probe counts + two collects it cost before (the dag_pagerank bench
-    regression in r4). ``nodes`` (the jobs, or the closure's seed set)
-    must be pre-projected to the columns the caller wants back (``id``
-    [+ weight]); edge rows are (job_id, dep_id)."""
+    A passing probe IS the data the local leg needs, so the fast path
+    pays two Spark jobs total, the same as an unprobed collect. ``nodes``
+    (the jobs, or the closure's seed set) must be pre-projected to the
+    columns the caller wants back (``id`` [+ weight]); edge rows are
+    (job_id, dep_id)."""
     edge_rows = deps.select("job_id", "dep_id").limit(cap + 1).collect()
     if len(edge_rows) > cap:
         return None
@@ -177,18 +175,29 @@ def _kahn_order(ids, edges) -> list:
 def _longest_paths(w: dict[str, int], edges) -> dict[str, int]:
     """Driver-side max-plus recurrence ``cp(j) = w(j) + max(cp(dep))``
     (roots: ``cp = w``), in Kahn order. Same relaxation as the distributed
-    wave loops: a job with any edge is no root, a dep that is no job row
-    is never reached, and a job gets a value once ANY dep has one."""
-    known = [(j, d) for j, d in edges if j in w and d in w]
-    deps_of: dict[str, list[str]] = {}
+    wave loops: only edges from job rows count, a job with one is no root,
+    and the recurrence runs over the jobs reachable from the roots. A dep
+    that is no job row, or that sits on or behind an unreached cycle, is
+    never reached and never holds back a job that a reached dep relaxes."""
+    known = [(j, d) for j, d in edges if j in w]
+    out_adj: dict[str, list[str]] = {}
     for j, d in known:
+        out_adj.setdefault(d, []).append(j)
+    has_edge = {j for j, _ in known}
+    reached = [i for i in w if i not in has_edge]
+    seen = set(reached)
+    for d in reached:  # reached jobs are appended while iterating
+        for j in out_adj.get(d, ()):
+            if j not in seen:
+                seen.add(j)
+                reached.append(j)
+    inner = [(j, d) for j, d in known if d in seen]
+    deps_of: dict[str, list[str]] = {}
+    for j, d in inner:
         deps_of.setdefault(j, []).append(d)
-    has_edge = {j for j, _ in edges}
     cp: dict[str, int] = {}
-    for j in _kahn_order(w, known):
-        reached = [cp[d] for d in deps_of.get(j, ()) if d in cp]
-        if reached or j not in has_edge:
-            cp[j] = w[j] + max(reached, default=0)
+    for j in _kahn_order(reached, inner):
+        cp[j] = w[j] + max((cp[d] for d in deps_of.get(j, ())), default=0)
     return cp
 
 
@@ -201,37 +210,37 @@ def _waves(start: DataFrame, step, finish) -> DataFrame:
     One action per wave: the wave is persisted and counted. Every
     ``_CHECKPOINT_EVERY`` waves the wave and ``acc`` are
     local-checkpointed instead, which truncates lineage so plans don't
-    grow with graph depth, and the frontiers persisted since the last cut
+    grow with graph depth, and the frames persisted since the last cut
     are released — cached blocks stay O(_CHECKPOINT_EVERY), not
-    O(depth). A result whose lineage still reads persisted frontiers is
-    cut once before they are released, so nothing stays cached."""
-    frontier = acc = start
-    pinned: list[DataFrame] = []  # persisted frontiers awaiting release
+    O(depth). ``start`` is persisted with the first waves, so the steps
+    before the first cut read it from cache instead of recomputing it. A
+    result whose lineage still reads persisted waves is cut once before
+    they are released, so nothing stays cached; when the first wave is
+    already empty the result is ``finish(start)``, left lazy."""
+    frontier = acc = start.persist()
+    pinned = [start]  # persisted frames awaiting release
     for wave in range(1, _MAX_WAVES + 1):
         nxt = step(frontier, acc)
-        if wave % _CHECKPOINT_EVERY == 0:
-            nxt = nxt.localCheckpoint(eager=True)
-            n = nxt.count()
-            if n:
-                acc = acc.union(nxt).localCheckpoint(eager=True)
+        cut = wave % _CHECKPOINT_EVERY == 0
+        nxt = nxt.localCheckpoint(eager=True) if cut else nxt.persist()
+        n = nxt.count()
+        if n == 0:
+            nxt.unpersist()
+            break
+        acc = acc.union(nxt)
+        if cut:
+            acc = acc.localCheckpoint(eager=True)
             for p in pinned:
                 p.unpersist()
             pinned.clear()
         else:
-            nxt = nxt.persist()
-            n = nxt.count()
-            if n:
-                pinned.append(nxt)
-                acc = acc.union(nxt)
-        if n == 0:
-            nxt.unpersist()
-            break
+            pinned.append(nxt)
         frontier = nxt
     out = finish(acc)
-    if pinned:
+    if acc is not start and pinned:
         out = out.localCheckpoint(eager=True)
-        for p in pinned:
-            p.unpersist()
+    for p in pinned:
+        p.unpersist()
     return out
 
 
@@ -384,8 +393,12 @@ def topo_levels(
             lambda acc: acc.groupBy("id").agg(F.max("level").cast("long").alias("level")),
         )
 
-    known = deps.join(ids.select(F.col("id").alias("job_id")), "job_id", "left_semi")
-    return _with_prepared_edges(known, levels)
+    # the waves and the skew probe all read the restricted edges: join once
+    known = deps.join(ids.select(F.col("id").alias("job_id")), "job_id", "left_semi").persist()
+    try:
+        return _with_prepared_edges(known, levels)
+    finally:
+        known.unpersist()
 
 
 def pagerank(
@@ -467,12 +480,9 @@ def pagerank(
                 ranks = ranks.localCheckpoint(eager=True)
         if edges is not deps:
             # prepare_edges pinned a declustered edge cache that is about
-            # to be released: cut the returned plan loose so later actions
-            # reuse materialized ranks instead of recomputing the whole
-            # iteration chain (correct either way — lineage replays the
-            # repartition — but wastefully). NOTE this one path returns an
-            # EAGERLY materialized result; the uncached path stays lazy
-            # like the other graph ops.
+            # to be released: cut the result loose so later actions don't
+            # replay the iteration chain. This one path returns an eagerly
+            # materialized result; the uncached path stays lazy.
             ranks = ranks.localCheckpoint(eager=True)
         return ranks
 

@@ -240,13 +240,19 @@ def test_detect_cycles_dangling_dep_parity(spark):
             [("b", "a"), ("c", "ghost"), ("d", "c"), ("d", "b"), ("e", "d")],
             {"a": 0, "b": 1, "d": 2, "e": 3},
         ),
+        # a dep on a cycle no root reaches is never reached either: x and y
+        # never get a value, d is reached through b
+        (
+            [("b", "a"), ("x", "y"), ("y", "x"), ("d", "x"), ("d", "b")],
+            {"a": 0, "b": 1, "d": 2},
+        ),
     ],
-    ids=["unknown_job", "unknown_dep"],
+    ids=["unknown_job", "unknown_dep", "unreached_cycle"],
 )
 def test_longest_path_legs_agree_on_unknown_ids(spark, edges, levels):
     """topo_levels and critical_path return the same rows from the
     driver-side and the distributed leg when an edge names an id that is
-    no job row."""
+    no job row, or a dep that no root reaches."""
     from overseer_spark.operators.scheduling import critical_path, topo_levels
     from overseer_spark.session import local_frame
 
@@ -375,3 +381,29 @@ def test_distributed_legs_leave_nothing_cached(spark):
     ):
         run().collect()
         assert cache.isEmpty(), name
+
+
+@pytest.mark.parametrize("op", ["closure", "topo_levels", "critical_path", "detect_cycles"])
+def test_wave_loop_cuts_result_when_empty_wave_is_a_cut_wave(spark, op):
+    """On a chain whose empty wave is the 4th, a lineage-cut wave, the
+    result is still cut before the waves persisted since the last cut
+    are released: its plan holds no join left to replay per action."""
+    from overseer_spark.operators.scheduling import (
+        critical_path,
+        detect_cycles,
+        topo_levels,
+    )
+    from overseer_spark.session import local_frame
+
+    names = [f"c{i}" for i in range(4)]  # waves 1-3 reach c1-c3
+    jobs = local_frame(spark, [(n, 1) for n in names], "id string, weight long")
+    deps = local_frame(spark, list(zip(names[1:], names)), "job_id string, dep_id string")
+    run = {
+        "closure": lambda: transitive_dependents(deps, ["c0"], strategy="bfs"),
+        "topo_levels": lambda: topo_levels(jobs, deps, strategy="distributed"),
+        "critical_path": lambda: critical_path(jobs, deps, strategy="distributed"),
+        "detect_cycles": lambda: detect_cycles(jobs, deps, strategy="distributed"),
+    }[op]
+    out = run()
+    assert "Join" not in out._jdf.queryExecution().optimizedPlan().toString()
+    assert out.count() == (0 if op == "detect_cycles" else 4 - (op == "closure"))
