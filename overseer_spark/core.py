@@ -42,16 +42,6 @@ STATUS_NAMES = {
 }
 STATUS_CODES = {v: k for k, v in STATUS_NAMES.items()}
 
-# Legal FSM transitions (from-status -> allowed to-statuses); reference
-# state diagram overseer/core.clj:86-106.
-TRANSITIONS = {
-    STATUS_UNSTARTED: {STATUS_STARTED, STATUS_ABORTED},
-    STATUS_STARTED: {STATUS_FINISHED, STATUS_FAILED, STATUS_UNSTARTED, STATUS_ABORTED},
-    STATUS_FINISHED: set(),
-    STATUS_FAILED: set(),
-    STATUS_ABORTED: set(),
-}
-
 JOBS_SCHEMA = T.StructType(
     [
         T.StructField("id", T.StringType(), nullable=False),
@@ -105,14 +95,31 @@ class Job:
             "type": self.type,
             "args": json.dumps(self.args, sort_keys=True) if self.args is not None else None,
             "status": self.status,
-            "failure": json.dumps(self.failure, sort_keys=True, default=str)
-            if self.failure is not None
-            else None,
+            "failure": encode_failure(self.failure),
             "heartbeat": self.heartbeat,
             "lock_version": self.lock_version,
             "created_at": None,
             "updated_at": None,
         }
+
+    @classmethod
+    def from_row(cls, row: Mapping[str, Any]) -> "Job":
+        """Inverse of :meth:`to_row`: decode a stored row (a dict, a
+        ``pyspark.sql.Row`` or a ``sqlite3.Row``) with JSON-text payloads."""
+        return cls(
+            id=row["id"],
+            type=row["type"],
+            args=json.loads(row["args"]) if row["args"] else None,
+            status=row["status"],
+            failure=json.loads(row["failure"]) if row["failure"] else None,
+            heartbeat=row["heartbeat"],
+            lock_version=row["lock_version"],
+        )
+
+
+def encode_failure(failure: Mapping[str, Any] | None) -> str | None:
+    """The stored JSON text of a failure struct (None stays None)."""
+    return json.dumps(failure, sort_keys=True, default=str) if failure is not None else None
 
 
 def valid_job(job: Job) -> bool:

@@ -323,7 +323,8 @@ def transitive_dependents(
 
 def _dependents_recursive_cte(deps: DataFrame, seeds: DataFrame) -> DataFrame:
     """Single-plan reachability via Spark 4 ``WITH RECURSIVE`` (UNION ALL
-    recursion + outer DISTINCT — safe on validated acyclic graphs)."""
+    recursion + outer DISTINCT — safe on validated acyclic graphs). A
+    seed that another seed reaches is left out, as in the other legs."""
     import uuid
 
     dview = f"_deps_{uuid.uuid4().hex[:12]}"
@@ -337,7 +338,8 @@ def _dependents_recursive_cte(deps: DataFrame, seeds: DataFrame) -> DataFrame:
               WHERE d.dep_id IN (SELECT id FROM {sview})
               UNION ALL
               SELECT d.job_id FROM {dview} d JOIN reach r ON d.dep_id = r.id)
-            SELECT DISTINCT id FROM reach"""
+            SELECT DISTINCT r.id FROM reach r
+            LEFT ANTI JOIN {sview} s ON r.id = s.id"""
     )
     # spark.sql analyzes eagerly — the plan no longer needs the views
     spark.catalog.dropTempView(dview)

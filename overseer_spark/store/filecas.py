@@ -23,14 +23,16 @@ re-expresses the same CAS on a shared filesystem:
 Scale stance: the job table is *metadata* (one tiny JSON per transition —
 the same rows a 100 TB deployment would keep in Postgres). The backend
 targets any shared POSIX filesystem where link(2) is atomic (local disks,
-NFSv3+, EFS, Lustre). Set queries go through the same DataFrame operators
-as ``SparkLogStore`` (operators/scheduling.py) so ready/dead/closure plan
-identically; point ops are O(1) directory listings. ``compact()`` mirrors
-SparkLogStore retention (insert + first-started + latest version per job).
+NFSv3+, EFS, Lustre). The state is read on the driver, so the set
+queries (ready/dead/closure) are the in-driver ones of ``store/base.py``
+over one scan of the newest version files, with or without a session;
+point ops are O(1) directory listings. ``compact()`` mirrors SparkLogStore
+retention (insert + first-started + latest version per job).
 
-Writes need no SparkSession — worker OS processes construct
-``FileCASStore(None, path)`` and coordinate purely through the filesystem;
-only the DataFrame read surface requires ``spark``.
+Neither writes nor set queries need a SparkSession — worker OS processes
+construct ``FileCASStore(None, path)`` and coordinate purely through the
+filesystem; only the ``jobs_df()``/``deps_df()`` analytics views require
+``spark``.
 """
 
 from __future__ import annotations
@@ -39,7 +41,7 @@ import json
 import os
 import time
 import uuid
-from typing import AbstractSet, Any, Iterable, Mapping
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -47,16 +49,14 @@ from pyspark.sql import types as T
 
 from overseer_spark.core import (
     DEPENDENCIES_SCHEMA,
-    STATUS_ABORTED,
-    STATUS_FAILED,
-    STATUS_FINISHED,
+    JOBS_SCHEMA,
     STATUS_STARTED,
-    STATUS_UNSTARTED,
     Job,
     JobGraph,
+    encode_failure,
 )
 from overseer_spark.session import local_frame
-from overseer_spark.store.base import IllegalTransition, Store
+from overseer_spark.store.base import Store
 
 # On-file payload: args/failure stay JSON-encoded strings (the JOBS_SCHEMA
 # representation), timestamps are epoch microseconds so the Spark JSON read
@@ -85,8 +85,8 @@ def _now_micros() -> int:
 class FileCASStore(Store):
     """Store with real cross-process CAS (see module docstring).
 
-    ``spark`` may be None for write-only use (worker processes); the
-    DataFrame accessors and Spark-planned set queries then raise.
+    ``spark`` may be None (worker processes); only the DataFrame
+    accessors then raise.
     ``fsync`` forces payload durability before publish (off by default —
     the reference delegates durability to its DB; turn on for stores that
     must survive power loss mid-transition).
@@ -157,40 +157,22 @@ class FileCASStore(Store):
         self._seen[job_id] = (newest, cur)
         return cur
 
-    @staticmethod
-    def _to_job(p: Mapping[str, Any]) -> Job:
-        return Job(
-            id=p["id"],
-            type=p["type"],
-            args=json.loads(p["args"]) if p["args"] else None,
-            status=p["status"],
-            failure=json.loads(p["failure"]) if p["failure"] else None,
-            heartbeat=p["heartbeat"],
-            lock_version=p["lock_version"],
-        )
-
-    def _cas_retry(
-        self,
-        job_id: str,
-        from_status: Iterable[int] | None,
-        **changes: Any,
-    ) -> dict | None:
-        """Retry-loop CAS: re-read on version conflict, give up when the
-        precondition no longer holds. Returns the published payload, or
-        None when ``from_status`` stopped matching (the caller decides
-        whether that is an IllegalTransition or a silent race loss)."""
+    def _transition(
+        self, job_id: str, from_status: int | None, **changes: Any
+    ) -> Job | None:
+        """Publish the next version file; on a lost publish re-read and
+        retry while the precondition holds."""
+        if "failure" in changes:
+            changes["failure"] = encode_failure(changes["failure"])
         for _ in range(_MAX_RETRIES):
             cur = self._latest(job_id)
-            if cur is None:
+            if cur is None or (from_status is not None and cur["status"] != from_status):
                 return None
-            if from_status is not None and cur["status"] not in from_status:
-                return None
-            nxt = dict(cur)
-            nxt.update(changes)
+            nxt = {**cur, **changes}
             nxt["lock_version"] = cur["lock_version"] + 1
             nxt["updated_at"] = _now_micros()
             if self._publish(job_id, nxt["lock_version"], nxt):
-                return nxt
+                return Job.from_row(nxt)
         raise RuntimeError(f"CAS livelock on job {job_id} after {_MAX_RETRIES} tries")
 
     # -- writes ------------------------------------------------------------
@@ -229,76 +211,11 @@ class FileCASStore(Store):
                 os.unlink(tmp)
         return graph
 
-    def reserve_job(self, job_id: str) -> Job | None:
-        """Single-shot CAS unstarted→started (jdbc.clj:190-195): the loser
-        of a race — or any non-unstarted state — returns None."""
-        cur = self._latest(job_id)
-        if cur is None or cur["status"] != STATUS_UNSTARTED:
-            return None
-        nxt = dict(cur)
-        nxt.update(
-            status=STATUS_STARTED,
-            heartbeat=int(time.time()),
-            lock_version=cur["lock_version"] + 1,
-            updated_at=_now_micros(),
-        )
-        if self._publish(job_id, nxt["lock_version"], nxt):
-            return self._to_job(nxt)
-        return None  # lost the race
-
-    def finish_job(self, job_id: str) -> None:
-        if self._cas_retry(job_id, (STATUS_STARTED,), status=STATUS_FINISHED) is None:
-            raise IllegalTransition(f"finish_job: {job_id} not in started state")
-
-    def fail_job(self, job_id: str, failure: Mapping[str, Any] | None = None) -> None:
-        encoded = (
-            json.dumps(failure, sort_keys=True, default=str)
-            if failure is not None
-            else None
-        )
-        if (
-            self._cas_retry(
-                job_id, (STATUS_STARTED,), status=STATUS_FAILED, failure=encoded
-            )
-            is None
-        ):
-            raise IllegalTransition(f"fail_job: {job_id} not in started state")
-
-    def reset_job(self, job_id: str) -> Job | None:
-        out = self._cas_retry(
-            job_id,
-            (STATUS_STARTED,),
-            status=STATUS_UNSTARTED,
-            heartbeat=int(time.time()),
-        )
-        return self._to_job(out) if out is not None else None
-
-    def heartbeat_job(self, job_id: str) -> None:
-        # any-status heartbeat, like the reference's update-job (which bumps
-        # lock_version on every write, jdbc.clj:76)
-        self._cas_retry(job_id, None, heartbeat=int(time.time()))
-
-    def abort_job(self, job_id: str) -> None:
-        for jid in sorted({job_id} | self.dependents(job_id)):
-            self._cas_retry(jid, None, status=STATUS_ABORTED)
-
-    # -- point/scan reads (no Spark required) ------------------------------
+    # -- reads (no Spark required) -----------------------------------------
 
     def job_info(self, job_id: str) -> Job | None:
         cur = self._latest(job_id)
-        return self._to_job(cur) if cur is not None else None
-
-    def _all_latest(self) -> list[dict]:
-        try:
-            ids = os.listdir(self._jobs_dir)
-        except FileNotFoundError:
-            return []
-        out = []
-        for jid in ids:
-            cur = self._latest(jid)
-            if cur is not None:
-                out.append(cur)
-        return out
+        return Job.from_row(cur) if cur is not None else None
 
     def _all_edges(self) -> list[tuple[str, str]]:
         try:
@@ -318,10 +235,19 @@ class FileCASStore(Store):
             edges.extend(parsed)
         return edges
 
-    def jobs_with_status(self, status: int) -> list[str]:
-        return sorted(p["id"] for p in self._all_latest() if p["status"] == status)
+    def _snapshot(self):
+        try:
+            ids = os.listdir(self._jobs_dir)
+        except FileNotFoundError:
+            ids = []
+        rows = []
+        for jid in ids:
+            p = self._latest(jid)
+            if p is not None:
+                rows.append((p["id"], p["type"], p["status"], p["heartbeat"]))
+        return rows, self._all_edges()
 
-    # -- set queries (Spark-planned when a session is attached) ------------
+    # -- analytics views (require Spark) -----------------------------------
 
     def jobs_df(self) -> DataFrame:
         """Current state as a DataFrame (JOBS_SCHEMA) — the same derived
@@ -348,8 +274,6 @@ class FileCASStore(Store):
                 )
             )
         except Exception:
-            from overseer_spark.core import JOBS_SCHEMA
-
             return local_frame(self.spark, [], schema=JOBS_SCHEMA)
 
     def deps_df(self) -> DataFrame:
@@ -360,57 +284,6 @@ class FileCASStore(Store):
             return df
         except Exception:
             return local_frame(self.spark, [], schema=DEPENDENCIES_SCHEMA)
-
-    def jobs_ready(
-        self, limit: int | None = None, types: AbstractSet[str] | None = None
-    ) -> list[str]:
-        if self.spark is not None:
-            from overseer_spark.operators.scheduling import ready_jobs
-
-            df = ready_jobs(self.jobs_df(), self.deps_df(), limit, types)
-            return sorted(r["id"] for r in df.collect())
-        # Spark-less worker path: same truth table computed in-driver
-        latest = self._all_latest()
-        unfinished = {p["id"] for p in latest if p["status"] != STATUS_FINISHED}
-        blocked = {a for a, b in self._all_edges() if b in unfinished}
-        ready = sorted(
-            p["id"]
-            for p in latest
-            if p["status"] == STATUS_UNSTARTED
-            and p["id"] not in blocked
-            and (types is None or p["type"] in types)
-        )
-        return ready[:limit] if limit else ready
-
-    def jobs_dead(self, threshold: int, limit: int | None = None) -> list[str]:
-        if self.spark is not None:
-            from overseer_spark.operators.scheduling import dead_jobs
-
-            df = dead_jobs(self.jobs_df(), threshold, limit)
-            return sorted(r["id"] for r in df.collect())
-        dead = sorted(
-            p["id"]
-            for p in self._all_latest()
-            if p["status"] == STATUS_STARTED
-            and p["heartbeat"] is not None
-            and p["heartbeat"] < threshold
-        )
-        return dead[:limit] if limit else dead
-
-    def dependents(self, job_id: str) -> set[str]:
-        if self.spark is not None:
-            from overseer_spark.operators.scheduling import transitive_dependents
-
-            df = transitive_dependents(self.deps_df(), [job_id])
-            return {r["id"] for r in df.collect()}
-        edges = self._all_edges()
-        out: set[str] = set()
-        frontier = {job_id}
-        while frontier:
-            nxt = {a for a, b in edges if b in frontier and a not in out}
-            out |= nxt
-            frontier = nxt
-        return out
 
     # -- maintenance -------------------------------------------------------
 

@@ -36,8 +36,8 @@ writer re-reads its slot and only reports success if its own
 recovery path (below) and, on object stores, any retried-PUT ambiguity.
 
 Checkpoints (``_log/{N:020d}.ckpt.json``) snapshot the full replayed
-state every ``checkpoint_every`` commits, Delta-style, so replay cost is
-O(checkpoint_every), not O(history); ``compact()`` additionally deletes
+state every ``CHECKPOINT_EVERY`` commits, Delta-style, so replay cost is
+O(CHECKPOINT_EVERY), not O(history); ``compact()`` additionally deletes
 log entries already covered by the newest checkpoint. Readers that race
 ``compact()`` and hit a deleted entry simply re-list and retry from the
 newest checkpoint. A handle caches its last replayed head state, and head
@@ -60,14 +60,14 @@ protocol is crash-safe even on the weakest local approximation.
 
 Scale stance: identical to FileCASStore — the job table is metadata (one
 tiny JSON per transition; the same rows the reference keeps in Postgres/
-Datomic). Set queries go through the same DataFrame operators
-(operators/scheduling.py) so ready/dead/closure plan identically; the
-state fed to them is the replayed snapshot, parallelized from the driver
-exactly as a JDBC scan of the reference's job table would be.
+Datomic). Every read replays that table on the driver, so the set queries
+(ready/dead/closure) are the in-driver ones of ``store/base.py`` over the
+replayed state, with or without a session.
 
-Writes need no SparkSession — worker OS processes construct
-``ManifestCASStore(None, path)`` and coordinate purely through
-conditional writes; only the DataFrame read surface requires ``spark``.
+Neither writes nor set queries need a SparkSession — worker OS processes
+construct ``ManifestCASStore(None, path)`` and coordinate purely through
+conditional writes; only the ``jobs_df()``/``deps_df()`` analytics views
+(the replayed state parallelized from the driver) require ``spark``.
 """
 
 from __future__ import annotations
@@ -78,26 +78,24 @@ import json
 import os
 import time
 import uuid
-from typing import AbstractSet, Any, Mapping, Protocol
+from typing import Any, Protocol
 
 from pyspark.sql import DataFrame, SparkSession
 
 from overseer_spark.core import (
     DEPENDENCIES_SCHEMA,
     JOBS_SCHEMA,
-    STATUS_ABORTED,
-    STATUS_FAILED,
-    STATUS_FINISHED,
-    STATUS_STARTED,
-    STATUS_UNSTARTED,
     Job,
     JobGraph,
+    encode_failure,
 )
 from overseer_spark.session import local_frame
-from overseer_spark.store.base import IllegalTransition, Store
+from overseer_spark.store.base import Store
 
 _MAX_RETRIES = 256
 _ENTRY_W = 20  # zero-padded width => lexicographic == numeric order
+CHECKPOINT_EVERY = 32  # commits between two checkpoints
+TORN_GRACE_S = 2.0  # age after which an unparseable entry is quarantined
 
 
 class ConditionalWriter(Protocol):
@@ -284,9 +282,8 @@ class _State:
 class ManifestCASStore(Store):
     """Store with object-store-safe cross-process CAS (module docstring).
 
-    ``spark`` may be None for write-only use (worker processes); the
-    DataFrame accessors then raise and set queries fall back to the
-    in-driver truth table (same as FileCASStore).
+    ``spark`` may be None (worker processes); only the DataFrame
+    accessors then raise, as in FileCASStore.
     """
 
     LOG = "_log"
@@ -296,14 +293,10 @@ class ManifestCASStore(Store):
         spark: SparkSession | None,
         path: str,
         fsync: bool = False,
-        checkpoint_every: int = 32,
-        torn_grace_s: float = 2.0,
         client: ConditionalWriter | None = None,
     ) -> None:
         self.spark = spark
         self.path = path
-        self.checkpoint_every = checkpoint_every
-        self.torn_grace_s = torn_grace_s
         self.client: ConditionalWriter = client or LocalConditionalWriter(
             path, fsync=fsync
         )
@@ -358,7 +351,7 @@ class ManifestCASStore(Store):
         period, then quarantined via atomic rename, which frees the slot
         for the next proposer. The original writer's version fencing
         detects the loss."""
-        deadline = time.monotonic() + self.torn_grace_s
+        deadline = time.monotonic() + TORN_GRACE_S
         key = self._entry_key(version)
         while True:
             data = self.client.get(key)
@@ -368,7 +361,7 @@ class ManifestCASStore(Store):
             if entry is not None:
                 return entry
             age = self.client.age_seconds(key)
-            if age is not None and age > self.torn_grace_s:
+            if age is not None and age > TORN_GRACE_S:
                 self.client.rename_away(
                     key, f"{self.LOG}/.quarantine-{version}-{uuid.uuid4().hex}"
                 )
@@ -488,7 +481,7 @@ class ManifestCASStore(Store):
         return entry is not None and _entry_crc(entry) == head_crc
 
     def _maybe_checkpoint(self, state: _State) -> None:
-        if state.version >= 0 and (state.version + 1) % self.checkpoint_every == 0:
+        if state.version >= 0 and (state.version + 1) % CHECKPOINT_EVERY == 0:
             self.client.put_if_absent(
                 self._ckpt_key(state.version), _encode_entry(state.snapshot())
             )
@@ -534,40 +527,28 @@ class ManifestCASStore(Store):
             return entry, state
         raise RuntimeError(f"commit livelock after {_MAX_RETRIES} tries")
 
-    def _cas_retry(
-        self,
-        job_id: str,
-        from_status: tuple[int, ...] | None,
-        **changes: Any,
-    ) -> dict | None:
-        """Optimistic-retry CAS, FileCASStore._cas_retry semantics: retry
-        on commit conflicts, give up (None) when the precondition stops
-        holding; the caller decides if that is IllegalTransition."""
+    def _transition(
+        self, job_id: str, from_status: int | None, **changes: Any
+    ) -> Job | None:
+        """Commit one ``cas`` action; a lost slot re-replays and retries
+        while the precondition holds."""
+        if "failure" in changes:
+            changes["failure"] = encode_failure(changes["failure"])
         changes["updated_at"] = _now_micros()
 
         def build(state: _State) -> list[dict] | None:
             cur = state.jobs.get(job_id)
-            if cur is None:
-                return None
-            if from_status is not None and cur["status"] not in from_status:
+            if cur is None or (from_status is not None and cur["status"] != from_status):
                 return None
             return [
-                {
-                    "op": "cas",
-                    "id": job_id,
-                    "expect": cur["lock_version"],
-                    "set": changes,
-                }
+                {"op": "cas", "id": job_id, "expect": cur["lock_version"], "set": changes}
             ]
 
         entry, state = self._commit(build)
         if entry is None:
             return None
         cur = state.jobs[job_id]
-        nxt = dict(cur)
-        nxt.update(changes)
-        nxt["lock_version"] = cur["lock_version"] + 1
-        return nxt
+        return Job.from_row({**cur, **changes, "lock_version": cur["lock_version"] + 1})
 
     # -- writes ------------------------------------------------------------
 
@@ -594,85 +575,7 @@ class ManifestCASStore(Store):
         self._commit(build)
         return graph
 
-    def reserve_job(self, job_id: str) -> Job | None:
-        """Single-shot CAS unstarted→started (jdbc.clj:190-195): returns
-        None on a lost race or any non-unstarted state. Commit conflicts
-        on *unrelated* log slots retry; once the job itself leaves
-        unstarted, the race is lost."""
-        changes = {
-            "status": STATUS_STARTED,
-            "heartbeat": int(time.time()),
-            "updated_at": _now_micros(),
-        }
-
-        def build(state: _State) -> list[dict] | None:
-            cur = state.jobs.get(job_id)
-            if cur is None or cur["status"] != STATUS_UNSTARTED:
-                return None  # lost the race (or never reservable)
-            return [
-                {
-                    "op": "cas",
-                    "id": job_id,
-                    "expect": cur["lock_version"],
-                    "set": changes,
-                }
-            ]
-
-        entry, state = self._commit(build)
-        if entry is None:
-            return None
-        nxt = dict(state.jobs[job_id])
-        nxt.update(changes)
-        nxt["lock_version"] = state.jobs[job_id]["lock_version"] + 1
-        return self._to_job(nxt)
-
-    def finish_job(self, job_id: str) -> None:
-        if self._cas_retry(job_id, (STATUS_STARTED,), status=STATUS_FINISHED) is None:
-            raise IllegalTransition(f"finish_job: {job_id} not in started state")
-
-    def fail_job(self, job_id: str, failure: Mapping[str, Any] | None = None) -> None:
-        encoded = (
-            json.dumps(failure, sort_keys=True, default=str)
-            if failure is not None
-            else None
-        )
-        if (
-            self._cas_retry(
-                job_id, (STATUS_STARTED,), status=STATUS_FAILED, failure=encoded
-            )
-            is None
-        ):
-            raise IllegalTransition(f"fail_job: {job_id} not in started state")
-
-    def reset_job(self, job_id: str) -> Job | None:
-        out = self._cas_retry(
-            job_id,
-            (STATUS_STARTED,),
-            status=STATUS_UNSTARTED,
-            heartbeat=int(time.time()),
-        )
-        return self._to_job(out) if out is not None else None
-
-    def heartbeat_job(self, job_id: str) -> None:
-        self._cas_retry(job_id, None, heartbeat=int(time.time()))
-
-    def abort_job(self, job_id: str) -> None:
-        for jid in sorted({job_id} | self.dependents(job_id)):
-            self._cas_retry(jid, None, status=STATUS_ABORTED)
-
     # -- reads -------------------------------------------------------------
-
-    @staticmethod
-    def _to_job(p: Mapping[str, Any]) -> Job:
-        return Job(
-            id=p["id"],
-            type=p["type"],
-            args=json.loads(p["args"]) if p["args"] else None,
-            status=p["status"],
-            failure=json.loads(p["failure"]) if p["failure"] else None,
-            heartbeat=p["heartbeat"],
-            lock_version=p["lock_version"],
-        )
 
     def current_version(self) -> int:
         """Last committed log version (-1 on an empty store) — the
@@ -681,12 +584,14 @@ class ManifestCASStore(Store):
 
     def job_info(self, job_id: str) -> Job | None:
         cur = self._replay().jobs.get(job_id)
-        return self._to_job(cur) if cur is not None else None
+        return Job.from_row(cur) if cur is not None else None
 
-    def jobs_with_status(self, status: int) -> list[str]:
-        return sorted(
-            p["id"] for p in self._replay().jobs.values() if p["status"] == status
-        )
+    def _snapshot(self):
+        state = self._replay()
+        rows = [
+            (p["id"], p["type"], p["status"], p["heartbeat"]) for p in state.jobs.values()
+        ]
+        return rows, state.edges
 
     def jobs_df(self, as_of_version: int | None = None) -> DataFrame:
         """State as a DataFrame (JOBS_SCHEMA) — replayed snapshot
@@ -716,58 +621,6 @@ class ManifestCASStore(Store):
         assert self.spark is not None, "deps_df requires a SparkSession"
         rows = [{"job_id": a, "dep_id": b} for a, b in self._replay().edges]
         return local_frame(self.spark, rows, schema=DEPENDENCIES_SCHEMA)
-
-    def jobs_ready(
-        self, limit: int | None = None, types: AbstractSet[str] | None = None
-    ) -> list[str]:
-        if self.spark is not None:
-            from overseer_spark.operators.scheduling import ready_jobs
-
-            df = ready_jobs(self.jobs_df(), self.deps_df(), limit, types)
-            return sorted(r["id"] for r in df.collect())
-        state = self._replay()
-        unfinished = {
-            i for i, p in state.jobs.items() if p["status"] != STATUS_FINISHED
-        }
-        blocked = {a for a, b in state.edges if b in unfinished}
-        ready = sorted(
-            i
-            for i, p in state.jobs.items()
-            if p["status"] == STATUS_UNSTARTED
-            and i not in blocked
-            and (types is None or p["type"] in types)
-        )
-        return ready[:limit] if limit else ready
-
-    def jobs_dead(self, threshold: int, limit: int | None = None) -> list[str]:
-        if self.spark is not None:
-            from overseer_spark.operators.scheduling import dead_jobs
-
-            df = dead_jobs(self.jobs_df(), threshold, limit)
-            return sorted(r["id"] for r in df.collect())
-        dead = sorted(
-            i
-            for i, p in self._replay().jobs.items()
-            if p["status"] == STATUS_STARTED
-            and p["heartbeat"] is not None
-            and p["heartbeat"] < threshold
-        )
-        return dead[:limit] if limit else dead
-
-    def dependents(self, job_id: str) -> set[str]:
-        if self.spark is not None:
-            from overseer_spark.operators.scheduling import transitive_dependents
-
-            df = transitive_dependents(self.deps_df(), [job_id])
-            return {r["id"] for r in df.collect()}
-        edges = self._replay().edges
-        out: set[str] = set()
-        frontier = {job_id}
-        while frontier:
-            nxt = {a for a, b in edges if b in frontier and a not in out}
-            out |= nxt
-            frontier = nxt
-        return out
 
     # -- maintenance -------------------------------------------------------
 

@@ -18,7 +18,7 @@ Why this is the right shape for Spark at scale:
 - **Heartbeats** are log appends too; "current heartbeat" is just the max
   seq row — the reference's R10 note in SURVEY.md §2.A.
 - **CAS** remains driver-serialized (single-writer per SURVEY.md §7);
-  ``reserve_job`` checks current status then appends, under a lock. The
+  ``_transition`` checks current status then appends, under a lock. The
   return-None-on-lost-race *interface* is preserved so a multi-writer
   backend (Delta MERGE with a status predicate) can swap in.
 
@@ -26,7 +26,7 @@ At sf-test scale the per-append overhead dominates, so the driver keeps a
 write-through cache of current state; the DataFrame path is exercised by
 ``jobs_df()``/``deps_df()`` and the protocol tests assert both views agree.
 
-The cache is a *bounded* LRU (``cache_capacity``, default 100k jobs): a
+The cache is a *bounded* LRU (``CACHE_CAPACITY`` = 100k jobs): a
 miss falls back to a predicate-pushed point lookup on the log (id filter
 reaches the parquet scan, then last-seq-wins), so the driver's memory
 ceiling is the cap — not the job count. A 10⁸-job log never materializes
@@ -37,9 +37,9 @@ from __future__ import annotations
 
 import os
 import threading
-import time
+from collections import OrderedDict
 from dataclasses import replace
-from typing import AbstractSet, Any, Mapping
+from typing import AbstractSet, Any
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -49,10 +49,7 @@ from overseer_spark.core import (
     DEPENDENCIES_SCHEMA,
     JOBS_SCHEMA,
     STATUS_ABORTED,
-    STATUS_FAILED,
-    STATUS_FINISHED,
     STATUS_STARTED,
-    STATUS_UNSTARTED,
     Job,
     JobGraph,
 )
@@ -62,7 +59,9 @@ from overseer_spark.operators.scheduling import (
     transitive_dependents,
 )
 from overseer_spark.session import local_frame
-from overseer_spark.store.base import IllegalTransition, Store
+from overseer_spark.store.base import Store
+
+CACHE_CAPACITY = 100_000  # jobs kept in the driver's write-through LRU
 
 LOG_SCHEMA = T.StructType(
     list(JOBS_SCHEMA.fields) + [T.StructField("seq", T.LongType(), nullable=False)]
@@ -70,9 +69,7 @@ LOG_SCHEMA = T.StructType(
 
 
 class SparkLogStore(Store):
-    def __init__(
-        self, spark: SparkSession, path: str, cache_capacity: int = 100_000
-    ) -> None:
+    def __init__(self, spark: SparkSession, path: str) -> None:
         self.spark = spark
         self.path = path
         self._jobs_log = os.path.join(path, "jobs_log")
@@ -82,15 +79,12 @@ class SparkLogStore(Store):
         # bounded write-through LRU of current job state; consistent under
         # the single-writer contract because every write appends to the log
         # before returning — a miss re-reads the log (point lookup).
-        self._capacity = cache_capacity
-        from collections import OrderedDict
-
         self._lru: "OrderedDict[str, Job]" = OrderedDict()
 
     def _lru_put(self, job: Job) -> None:
         self._lru[job.id] = job
         self._lru.move_to_end(job.id)
-        while len(self._lru) > self._capacity:
+        while len(self._lru) > CACHE_CAPACITY:
             self._lru.popitem(last=False)
 
     def _current(self, job_id: str) -> Job | None:
@@ -100,8 +94,6 @@ class SparkLogStore(Store):
         if job is not None:
             self._lru.move_to_end(job_id)
             return job
-        import json as _json
-
         rows = (
             self._log_df()
             .filter(F.col("id") == job_id)
@@ -111,16 +103,7 @@ class SparkLogStore(Store):
         )
         if not rows:
             return None
-        r = rows[0]
-        job = Job(
-            id=r["id"],
-            type=r["type"],
-            args=_json.loads(r["args"]) if r["args"] else None,
-            status=r["status"],
-            failure=_json.loads(r["failure"]) if r["failure"] else None,
-            heartbeat=r["heartbeat"],
-            lock_version=r["lock_version"],
-        )
+        job = Job.from_row(rows[0])
         self._lru_put(job)
         return job
 
@@ -287,52 +270,17 @@ class SparkLogStore(Store):
     ) -> Job | None:
         """Single-writer CAS: check current state, append the new row,
         write through the LRU. None when the precondition fails."""
-        job = self._current(job_id)
-        if job is None or (from_status is not None and job.status != from_status):
-            return None
-        updated = replace(job, lock_version=job.lock_version + 1, **changes)
-        self._append_jobs([updated])
-        self._lru_put(updated)
-        return updated
-
-    def reserve_job(self, job_id: str) -> Job | None:
         with self._lock:
-            return self._transition(
-                job_id,
-                STATUS_UNSTARTED,
-                status=STATUS_STARTED,
-                heartbeat=int(time.time()),
-            )
-
-    def finish_job(self, job_id: str) -> None:
-        with self._lock:
-            if self._transition(job_id, STATUS_STARTED, status=STATUS_FINISHED) is None:
-                raise IllegalTransition(f"finish_job: {job_id} not in started state")
-
-    def fail_job(self, job_id: str, failure: Mapping[str, Any] | None = None) -> None:
-        with self._lock:
-            if (
-                self._transition(
-                    job_id, STATUS_STARTED, status=STATUS_FAILED, failure=failure
-                )
-                is None
-            ):
-                raise IllegalTransition(f"fail_job: {job_id} not in started state")
-
-    def reset_job(self, job_id: str) -> Job | None:
-        with self._lock:
-            return self._transition(
-                job_id,
-                STATUS_STARTED,
-                status=STATUS_UNSTARTED,
-                heartbeat=int(time.time()),
-            )
-
-    def heartbeat_job(self, job_id: str) -> None:
-        with self._lock:
-            self._transition(job_id, None, heartbeat=int(time.time()))
+            job = self._current(job_id)
+            if job is None or (from_status is not None and job.status != from_status):
+                return None
+            updated = replace(job, lock_version=job.lock_version + 1, **changes)
+            self._append_jobs([updated])
+            self._lru_put(updated)
+            return updated
 
     def abort_job(self, job_id: str) -> None:
+        """The whole cascade as one log append."""
         with self._lock:
             targets = sorted({job_id} | self.dependents(job_id))
             updated = []

@@ -11,13 +11,16 @@ operation for operation:
   same columns and the same three secondary indexes
   (``jdbc.clj:131-154`` ``install'``): jobs-by-status, deps-by-job_id,
   deps-by-dep_id.
-- **Optimistic CAS** — every transition reads the row's
-  ``lock_version`` then issues ``UPDATE ... WHERE id=? AND
-  lock_version=? AND <state guard>`` and inspects the updated-row
-  count (``jdbc.clj:62-87`` ``update-job``): 1 row ⇒ won, 0 rows ⇒
-  stale, lost the race.  ``reserve_job`` returns None on a lost race;
-  ``finish_job``/``fail_job`` raise; ``reset_job`` is silently None
-  (``jdbc.clj:190-231``).
+- **CAS** — every transition is one guarded statement, ``UPDATE ...
+  SET ..., lock_version = lock_version + 1 WHERE id=? [AND status=?]
+  RETURNING ...``: a returned row ⇒ won, none ⇒ the precondition
+  failed (the reference's ``update-job`` returning 0 rows,
+  ``jdbc.clj:62-87``).  sqlite serializes writers, so the status guard
+  is evaluated against the row as of the write and needs no
+  read-then-retry; a concurrent heartbeat never fails a ``finish_job``.
+  ``reserve_job`` returns None on a lost race; ``finish_job``/
+  ``fail_job`` raise; ``reset_job`` is silently None
+  (``jdbc.clj:190-231``, the state machine in ``store/base.py``).
 - **Idempotent all-or-nothing transact** — job + dependency rows insert
   in one transaction; a duplicate primary key rolls the whole
   transaction back and returns the graph unchanged
@@ -31,29 +34,30 @@ Concurrency model: one connection per thread (sqlite3 connections are
 not thread-safe to share), WAL journal + busy timeout so a masterless
 pool of worker processes can point at one database file — the exact
 deployment the reference targets with sqlite/MySQL.  Writes serialize
-in the engine; correctness comes from the lock_version CAS, not from
+in the engine; correctness comes from the guarded UPDATE, not from
 any in-process lock, so the same code is safe across OS processes
 (tests/test_sqlite_race.py mirrors ``jdbc_test.clj:42-60``).
 """
 
 from __future__ import annotations
 
-import json
 import sqlite3
 import threading
 import time
-from typing import AbstractSet, Any, Mapping
+from typing import AbstractSet, Any
 
 from overseer_spark.core import (
     STATUS_ABORTED,
-    STATUS_FAILED,
     STATUS_FINISHED,
     STATUS_STARTED,
     STATUS_UNSTARTED,
     Job,
     JobGraph,
+    encode_failure,
 )
-from overseer_spark.store.base import IllegalTransition, Store
+from overseer_spark.store.base import Store
+
+BUSY_TIMEOUT_MS = 30_000  # how long a writer waits for the database lock
 
 _DDL = [
     """CREATE TABLE IF NOT EXISTS overseer_jobs (
@@ -83,26 +87,12 @@ _DDL = [
 _JOB_COLS = "id, type, args, status, failure, heartbeat, lock_version"
 
 
-def _row_to_job(row: tuple) -> Job:
-    id_, type_, args, status, failure, heartbeat, lock_version = row
-    return Job(
-        id=id_,
-        type=type_,
-        args=json.loads(args) if args is not None else None,
-        status=status,
-        failure=json.loads(failure) if failure is not None else None,
-        heartbeat=heartbeat,
-        lock_version=lock_version,
-    )
-
-
 class SqliteStore(Store):
     """``Store`` over a sqlite database file (or ``:memory:`` for tests
     that stay in one thread)."""
 
-    def __init__(self, path: str, busy_timeout_ms: int = 30_000) -> None:
+    def __init__(self, path: str) -> None:
         self._path = path
-        self._busy_timeout_ms = busy_timeout_ms
         self._local = threading.local()
 
     # -- connection management --------------------------------------------
@@ -110,12 +100,13 @@ class SqliteStore(Store):
     def _conn(self) -> sqlite3.Connection:
         conn = getattr(self._local, "conn", None)
         if conn is None:
-            conn = sqlite3.connect(self._path, timeout=self._busy_timeout_ms / 1000)
-            conn.execute(f"PRAGMA busy_timeout={self._busy_timeout_ms}")
+            conn = sqlite3.connect(self._path, timeout=BUSY_TIMEOUT_MS / 1000)
+            conn.execute(f"PRAGMA busy_timeout={BUSY_TIMEOUT_MS}")
             # WAL lets readers proceed under a writer — the multi-process
             # worker-pool deployment; no-op (and harmless) for :memory:
             conn.execute("PRAGMA journal_mode=WAL")
             conn.isolation_level = None  # manual transaction control
+            conn.row_factory = sqlite3.Row  # rows decode with Job.from_row
             self._local.conn = conn
         return conn
 
@@ -144,24 +135,9 @@ class SqliteStore(Store):
                 "INSERT INTO overseer_jobs"
                 " (id, type, args, status, failure, heartbeat, lock_version,"
                 "  created_at, updated_at)"
-                " VALUES (?, ?, ?, ?, ?, ?, 0, ?, ?)",
-                [
-                    (
-                        j.id,
-                        j.type,
-                        json.dumps(j.args, sort_keys=True)
-                        if j.args is not None
-                        else None,
-                        j.status,
-                        json.dumps(j.failure, sort_keys=True, default=str)
-                        if j.failure is not None
-                        else None,
-                        j.heartbeat,
-                        now,
-                        now,
-                    )
-                    for j in graph.jobs
-                ],
+                " VALUES (:id, :type, :args, :status, :failure, :heartbeat, 0,"
+                "  :now, :now)",
+                [{**j.to_row(), "now": now} for j in graph.jobs],
             )
             conn.executemany(
                 "INSERT INTO overseer_dependencies (job_id, dep_id) VALUES (?, ?)",
@@ -177,77 +153,23 @@ class SqliteStore(Store):
             raise
         return graph
 
-    def _cas_update(
-        self,
-        job_id: str,
-        where_status: int | None,
-        set_clauses: str,
-        set_params: tuple,
-    ) -> bool:
-        """jdbc.clj:62-87 ``update-job``: read lock_version, then update
-        guarded on (id, lock_version [, status]); True iff 1 row updated."""
-        conn = self._conn()
-        row = conn.execute(
-            "SELECT lock_version FROM overseer_jobs WHERE id=?", (job_id,)
-        ).fetchone()
-        if row is None:
-            return False
-        (lock_version,) = row
-        where = "id=? AND lock_version=?"
-        params: tuple = set_params + (int(time.time()), lock_version + 1, job_id, lock_version)
-        if where_status is not None:
-            where += " AND status=?"
-            params = params + (where_status,)
-        cur = conn.execute(
-            f"UPDATE overseer_jobs SET {set_clauses}, updated_at=?, lock_version=?"
-            f" WHERE {where}",
-            params,
+    def _transition(
+        self, job_id: str, from_status: int | None, **changes: Any
+    ) -> Job | None:
+        if "failure" in changes:
+            changes["failure"] = encode_failure(changes["failure"])
+        sets = "".join(f"{col}=?, " for col in changes)
+        sql = (
+            f"UPDATE overseer_jobs SET {sets}updated_at=?,"
+            " lock_version=lock_version+1 WHERE id=?"
         )
-        return cur.rowcount == 1
-
-    def reserve_job(self, job_id: str) -> Job | None:
-        won = self._cas_update(
-            job_id,
-            STATUS_UNSTARTED,
-            "status=?, heartbeat=?",
-            (STATUS_STARTED, int(time.time())),
-        )
-        return self.job_info(job_id) if won else None
-
-    def finish_job(self, job_id: str) -> None:
-        if not self._cas_update(
-            job_id, STATUS_STARTED, "status=?", (STATUS_FINISHED,)
-        ):
-            raise IllegalTransition(f"finish_job: {job_id} not in started state")
-
-    def fail_job(self, job_id: str, failure: Mapping[str, Any] | None = None) -> None:
-        if not self._cas_update(
-            job_id,
-            STATUS_STARTED,
-            "status=?, failure=?",
-            (
-                STATUS_FAILED,
-                json.dumps(failure, sort_keys=True, default=str)
-                if failure is not None
-                else None,
-            ),
-        ):
-            raise IllegalTransition(f"fail_job: {job_id} not in started state")
-
-    def reset_job(self, job_id: str) -> Job | None:
-        won = self._cas_update(
-            job_id,
-            STATUS_STARTED,
-            "status=?, heartbeat=?",
-            (STATUS_UNSTARTED, int(time.time())),
-        )
-        return self.job_info(job_id) if won else None
-
-    def heartbeat_job(self, job_id: str) -> None:
-        self._conn().execute(
-            "UPDATE overseer_jobs SET heartbeat=?, updated_at=? WHERE id=?",
-            (int(time.time()), int(time.time()), job_id),
-        )
+        params = (*changes.values(), int(time.time()), job_id)
+        if from_status is not None:
+            sql += " AND status=?"
+            params += (from_status,)
+        # fetchall() steps the statement to completion, ending its autocommit
+        rows = self._conn().execute(f"{sql} RETURNING {_JOB_COLS}", params).fetchall()
+        return Job.from_row(rows[0]) if rows else None
 
     def abort_job(self, job_id: str) -> None:
         targets = sorted({job_id} | self.dependents(job_id))
@@ -265,7 +187,7 @@ class SqliteStore(Store):
         row = self._conn().execute(
             f"SELECT {_JOB_COLS} FROM overseer_jobs WHERE id=?", (job_id,)
         ).fetchone()
-        return _row_to_job(row) if row is not None else None
+        return Job.from_row(row) if row is not None else None
 
     def jobs_ready(
         self, limit: int | None = None, types: AbstractSet[str] | None = None

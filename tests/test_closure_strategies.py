@@ -56,6 +56,18 @@ def test_strategies_match_python(spark, dag, strategy, seed):
     assert got == py_dependents(edges, seed), f"{strategy} wrong for {seed}"
 
 
+@pytest.mark.parametrize("strategy", ["recursive_cte", "bfs", "local", "auto"])
+def test_seed_reached_from_another_seed_is_left_out(spark, strategy):
+    """Every leg leaves out all seeds, also one that another seed reaches
+    (b behind seed a); auto runs above the cap, so it takes the CTE."""
+    from overseer_spark.session import local_frame
+
+    deps = local_frame(spark, [("b", "a"), ("c", "b")], "job_id string, dep_id string")
+    cap = 1 if strategy == "auto" else 100
+    got = transitive_dependents(deps, ["a", "b"], strategy=strategy, local_edge_cap=cap)
+    assert [r["id"] for r in got.collect()] == ["c"]
+
+
 def test_bfs_deep_closure_with_checkpointing(spark, dag):
     """One deep-seed BFS run exercising the localCheckpoint path: the j0
     closure is deeper than the 4 waves between lineage cuts."""

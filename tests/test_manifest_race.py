@@ -25,6 +25,7 @@ from overseer_spark.core import (
     Job,
     JobGraph,
 )
+from overseer_spark.store import manifest
 from overseer_spark.store.manifest import ManifestCASStore, _decode_entry
 from tests.conftest import child_results, children_started
 
@@ -151,12 +152,13 @@ def test_eight_process_reserve_storm(tmp_path):
     assert parent.job_info("hot").lock_version == 1
 
 
-def test_multi_process_drain_runs_each_job_exactly_once(tmp_path):
+def test_multi_process_drain_runs_each_job_exactly_once(tmp_path, monkeypatch):
     """Four worker processes drain a 60-job two-level DAG through the
-    commit log; every job finishes exactly once. checkpoint_every is set
+    commit log; every job finishes exactly once. CHECKPOINT_EVERY is set
     low so the drain also crosses several checkpoint writes."""
+    monkeypatch.setattr(manifest, "CHECKPOINT_EVERY", 16)
     path = str(tmp_path / "cas")
-    parent = ManifestCASStore(None, path, checkpoint_every=16)
+    parent = ManifestCASStore(None, path)
     parent.install()
     roots = [f"r{i}" for i in range(20)]
     leaves = [f"l{i}" for i in range(40)]
@@ -237,9 +239,10 @@ def test_kill9_mid_commit_leaves_log_replayable(tmp_path):
             assert _decode_entry(f.read()) is not None, name
 
 
-def test_compact_checkpoints_and_preserves_state(tmp_path):
+def test_compact_checkpoints_and_preserves_state(tmp_path, monkeypatch):
+    monkeypatch.setattr(manifest, "CHECKPOINT_EVERY", 8)
     path = str(tmp_path / "store")
-    store = ManifestCASStore(None, path, checkpoint_every=8)
+    store = ManifestCASStore(None, path)
     store.install()
     ids = [f"j{i}" for i in range(10)]
     store.transact_graph(_graph(ids))
@@ -263,11 +266,12 @@ def test_compact_checkpoints_and_preserves_state(tmp_path):
     assert fresh.job_info(ids[6]).status == STATUS_FINISHED
 
 
-def test_compact_concurrent_with_drain(tmp_path):
+def test_compact_concurrent_with_drain(tmp_path, monkeypatch):
     """compact() racing active writers must not lose transitions: run a
     drain in one process while the parent compacts repeatedly."""
+    monkeypatch.setattr(manifest, "CHECKPOINT_EVERY", 4)
     path = str(tmp_path / "store")
-    parent = ManifestCASStore(None, path, checkpoint_every=4)
+    parent = ManifestCASStore(None, path)
     parent.install()
     ids = [f"j{i}" for i in range(30)]
     parent.transact_graph(_graph(ids))
@@ -287,12 +291,13 @@ def test_compact_concurrent_with_drain(tmp_path):
     assert parent.jobs_with_status(STATUS_FINISHED) == sorted(ids)
 
 
-def test_time_travel_replays_historical_versions(tmp_path):
+def test_time_travel_replays_historical_versions(tmp_path, monkeypatch):
     """jobs_with_status via _replay(upto): states at recorded versions
     match what the store looked like then; compaction truncates history
     below its checkpoint but keeps head reads exact."""
+    monkeypatch.setattr(manifest, "CHECKPOINT_EVERY", 1000)
     path = str(tmp_path / "store")
-    store = ManifestCASStore(None, path, checkpoint_every=1000)
+    store = ManifestCASStore(None, path)
     store.install()
     store.transact_graph(_graph(["a", "b", "c"]))
     v0 = store.current_version()
@@ -337,15 +342,16 @@ def test_store_manifest_time_travel_entry_histograms(spark):
     ]
 
 
-def test_time_travel_pre_compaction_version_raises(tmp_path):
+def test_time_travel_pre_compaction_version_raises(tmp_path, monkeypatch):
     """A version older than the retained history must raise an explicit
     error, not silently replay to an empty state (which would be
     indistinguishable from an actually-empty store)."""
+    monkeypatch.setattr(manifest, "CHECKPOINT_EVERY", 4)
     import pytest
 
     from overseer_spark.store.manifest import TimeTravelUnavailable
 
-    store = ManifestCASStore(None, str(tmp_path / "tt"), checkpoint_every=4)
+    store = ManifestCASStore(None, str(tmp_path / "tt"))
     store.install()
     store.transact_graph(_graph(["a", "b", "c"]))
     v_early = store.current_version()
@@ -422,19 +428,20 @@ def _same_state(a: ManifestCASStore, path: str) -> None:
     )
 
 
-def test_warm_handle_replay_follows_other_handles(tmp_path):
+def test_warm_handle_replay_follows_other_handles(tmp_path, monkeypatch):
     """O(delta) head replays never drift: after each of handle B's
     reserve, heartbeat, finish, compact() (also one that truncates the log
     past A's cached head) and a quarantine-and-rewrite of B's newest slot,
     warm handle A replays exactly the state a fresh handle replays from a
     full listing."""
+    monkeypatch.setattr(manifest, "CHECKPOINT_EVERY", 4)
     from overseer_spark.store.manifest import _encode_entry
 
     path = str(tmp_path / "store")
-    a = ManifestCASStore(None, path, checkpoint_every=4)
+    a = ManifestCASStore(None, path)
     a.install()
     a.transact_graph(_graph(["p", "q", "r"], [("r", "q")]))
-    b = ManifestCASStore(None, path, checkpoint_every=4)
+    b = ManifestCASStore(None, path)
     _same_state(a, path)  # warm A's cache
 
     def rewrite_head():

@@ -66,7 +66,8 @@ def store(request, spark, tmp_path):
     ]
 )
 def any_store(request, spark, tmp_path):
-    """Every backend, including each CAS store's Spark-less read path."""
+    """Every backend; each CAS store also as the Spark-less handle a
+    worker process opens."""
     return _make_store(request.param, spark, tmp_path)
 
 
@@ -152,6 +153,97 @@ def test_heartbeat_updates(store):
     job = store.reserve_job("a")
     store.heartbeat_job("a")
     assert store.job_info("a").heartbeat >= job.heartbeat
+
+
+def test_every_transition_bumps_lock_version_by_one(any_store):
+    """Each of the six transitions, heartbeat included, is one CAS write:
+    lock_version rises by exactly one per applied transition (the
+    reference's update-job, jdbc.clj:62-87) and not at all on a refused one."""
+    any_store.transact_graph(graph_of(("a", []), ("b", []), ("c", ["b"])))
+
+    def lv(jid):
+        return any_store.job_info(jid).lock_version
+
+    assert (lv("a"), lv("b"), lv("c")) == (0, 0, 0)
+    assert any_store.reserve_job("a").lock_version == 1
+    any_store.heartbeat_job("a")
+    assert lv("a") == 2
+    assert any_store.reset_job("a").lock_version == 3
+    assert any_store.reserve_job("a").lock_version == 4
+    any_store.finish_job("a")
+    assert lv("a") == 5
+    assert any_store.reserve_job("a") is None and any_store.reset_job("a") is None
+    with pytest.raises(IllegalTransition):
+        any_store.fail_job("a", {"reason": "late"})
+    assert lv("a") == 5
+    any_store.reserve_job("b")
+    any_store.fail_job("b", {"reason": "boom"})
+    assert lv("b") == 2
+    any_store.abort_job("b")
+    assert (lv("b"), lv("c")) == (3, 1)
+    assert any_store.job_info("c").status == STATUS_ABORTED
+
+
+@pytest.mark.parametrize("kind", ["filecas", "manifest"])
+def test_cas_store_set_queries_start_no_spark_job(spark, tmp_path, kind):
+    """A CAS store reads its state on the driver, so with a session
+    attached its set queries still run no Spark job."""
+    s = _make_store(kind, spark, tmp_path)
+    s.transact_graph(graph_of(("a", []), ("b", ["a"]), ("c", ["b"]), ("d", [])))
+    s.reserve_job("a")
+    s.finish_job("a")
+    s.reserve_job("d")
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    assert s.jobs_ready() == ["b"]
+    assert s.jobs_ready(limit=1, types={"t-b"}) == ["b"]
+    assert s.jobs_dead(threshold=2**62) == ["d"]
+    assert s.dependents("a") == {"b", "c"}
+    assert s.jobs_with_status(STATUS_FINISHED) == ["a"]
+    assert set(tracker.getJobIdsForGroup()) == before
+    spark.range(1).count()  # the tracker does see a job started here
+    assert set(tracker.getJobIdsForGroup()) != before
+
+
+@pytest.mark.parametrize("kind", ["memory", "sqlite", "filecas", "manifest"])
+def test_heartbeat_thread_never_fails_the_workers_finish(spark, tmp_path, kind):
+    """Heartbeat threads beat the running job in a tight loop while the
+    worker reserves and finishes 200 jobs: since heartbeats bump
+    lock_version, a transition that gave up on any concurrent write would
+    raise IllegalTransition here (three beating threads make a read-then-
+    CAS finish lose in nearly every run). SparkLogStore runs every
+    transition under one lock, so the two cannot interleave there."""
+    import threading
+
+    s = _make_store(kind, spark, tmp_path)
+    ids = [f"j{i:03d}" for i in range(200)]
+    s.transact_graph(graph_of(*((i, []) for i in ids)))
+    running: list[str] = []
+    stop = threading.Event()
+    errors: list[BaseException] = []
+
+    def beat():
+        try:
+            while not stop.is_set():
+                if running:
+                    s.heartbeat_job(running[-1])
+        except BaseException as e:  # noqa: BLE001
+            errors.append(e)
+
+    threads = [threading.Thread(target=beat) for _ in range(3)]
+    for t in threads:
+        t.start()
+    try:
+        for jid in ids:
+            assert s.reserve_job(jid) is not None
+            running.append(jid)
+            s.finish_job(jid)
+    finally:
+        stop.set()
+        for t in threads:
+            t.join()
+    assert not errors
+    assert s.jobs_with_status(STATUS_FINISHED) == ids
 
 
 # -- ready set truth table (datomic_test.clj:14-64 / FIXTURES.md §B) -------
@@ -380,13 +472,15 @@ def test_created_at_survives_transitions_and_compact(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_bounded_cache_with_10k_job_graph(spark, tmp_path):
+def test_bounded_cache_with_10k_job_graph(spark, tmp_path, monkeypatch):
     """Driver mirror is a bounded LRU: a 10k-job graph runs correctly with
     a 100-job cap — misses fall back to predicate-pushed log lookups, so
     the driver's memory ceiling is the cap, not the job count."""
+    from overseer_spark.store import sparklog
     from overseer_spark.store.sparklog import SparkLogStore
 
-    s = SparkLogStore(spark, str(tmp_path / "big"), cache_capacity=100)
+    monkeypatch.setattr(sparklog, "CACHE_CAPACITY", 100)
+    s = SparkLogStore(spark, str(tmp_path / "big"))
     s.install()
     jobs = [Job(id=f"j{i:05d}", type="t") for i in range(10_000)]
     s.transact_graph(JobGraph(jobs=jobs, edges=[]))
@@ -401,7 +495,7 @@ def test_bounded_cache_with_10k_job_graph(spark, tmp_path):
     assert len(s._lru) <= 100
 
     # duplicate transact stays all-or-nothing with a cold cache
-    s2 = SparkLogStore(spark, str(tmp_path / "big"), cache_capacity=100)
+    s2 = SparkLogStore(spark, str(tmp_path / "big"))
     s2.load()  # recovers only the seq counter — no full-table collect
     s2.transact_graph(
         JobGraph(jobs=[Job(id="j00001", type="t"), Job(id="brand-new", type="t")],
