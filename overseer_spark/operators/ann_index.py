@@ -29,7 +29,12 @@ from overseer_spark.functions.vectors import cosine_similarity
 from overseer_spark.operators.similarity import assign_cells, trained_centroids
 from overseer_spark.operators.util import eager_cache
 from overseer_spark.session import local_frame
-from overseer_spark.sources.tables import data_files, dir_memo, hadoop_fs
+from overseer_spark.sources.tables import (
+    data_files,
+    dir_memo,
+    hadoop_fs,
+    read_parquet,
+)
 
 
 def build_ivf_index(
@@ -108,18 +113,17 @@ def probed_cells(
 
 
 def _tombstone_files(spark: SparkSession, path: str):
-    """(fs, [Path]) of the index's current tombstone DATA files. The file
-    list — not just the directory — is the unit compact_ivf_index
-    snapshots, so deletes appended while a compaction is rewriting are
-    never swept away with the folded ones."""
-    fs, files = data_files(spark, f"{path}/tombstones")
-    return fs, [st.getPath() for st in files]
+    """(fs, [FileStatus]) of the index's current tombstone DATA files.
+    The file list — not just the directory — is the unit
+    compact_ivf_index snapshots, so deletes appended while a compaction
+    is rewriting are never swept away with the folded ones."""
+    return data_files(spark, f"{path}/tombstones")
 
 
-def _read_tombstones(spark: SparkSession, tomb_files, id_col: str):
+def _read_tombstones(spark: SparkSession, path: str, tomb_files, id_col: str):
     """The distinct ``id_col`` values of the given tombstone files."""
     return (
-        spark.read.parquet(*[p.toString() for p in tomb_files])
+        read_parquet(spark, f"{path}/tombstones", tomb_files)
         .select(id_col)
         .distinct()
     )
@@ -137,7 +141,7 @@ def _drop_from_tombstones(spark: SparkSession, path: str, id_col: str, ids):
     fs, tomb_files = _tombstone_files(spark, path)
     if not tomb_files:
         return
-    tomb = spark.read.parquet(*[p.toString() for p in tomb_files])
+    tomb = read_parquet(spark, f"{path}/tombstones", tomb_files)
     if tomb.filter(F.col(id_col).isin(ids)).count() == 0:
         return
     remaining = eager_cache(tomb.filter(~F.col(id_col).isin(ids)).distinct())
@@ -145,8 +149,8 @@ def _drop_from_tombstones(spark: SparkSession, path: str, id_col: str, ids):
         remaining.repartition(1).write.mode("append").parquet(
             f"{path}/tombstones"
         )
-    for p in tomb_files:
-        fs.delete(p, False)
+    for st in tomb_files:
+        fs.delete(st.getPath(), False)
     remaining.unpersist()
 
 
@@ -156,7 +160,7 @@ def _tombstones(spark: SparkSession, path: str, id_col: str):
     FileSystem of ``path`` itself, matching how delete_from_ivf_index
     writes."""
     _, files = _tombstone_files(spark, path)
-    return _read_tombstones(spark, files, id_col) if files else None
+    return _read_tombstones(spark, path, files, id_col) if files else None
 
 
 def _swap_in(spark: SparkSession, current: str, tmp_out: str, old: str) -> None:
@@ -186,8 +190,8 @@ def _clear_tombstone_files(spark: SparkSession, path: str, tomb_files) -> None:
     markers remains; the final delete is NON-recursive, so it refuses a
     dir a concurrent delete repopulated."""
     fs, tomb_dir = hadoop_fs(spark, f"{path}/tombstones")
-    for p in tomb_files:
-        fs.delete(p, False)
+    for st in tomb_files:
+        fs.delete(st.getPath(), False)
     if fs.exists(tomb_dir):
         rest = fs.listStatus(tomb_dir)
         if all(st.getPath().getName().startswith(("_", ".")) for st in rest):
@@ -216,19 +220,21 @@ def ivf_index_topk(
     candidate set before scoring — logical deletion at probe time, the
     same read path FAISS's IDSelector and every LSM store use between
     compactions."""
-    # lazy local checkpoint + collect (r13, guide §1.2): the collect below
-    # is the first consumer and materializes the checkpoint in its own
-    # job; the only other consumer (the broadcast into the scored join)
-    # runs later in the final action and reads the checkpointed blocks —
-    # an eager count() would be one extra fixed-cost job per probe. A
-    # checkpoint, not .cache(): nothing is left in the CacheManager after
-    # the serve, and no later probe can match this frame's plan by the
-    # index's root path (see _ivf_centroids)
+    # lazy local checkpoint + collect (r13, guide §1.2). "Lazy" defers
+    # only the final stage: under AQE, localCheckpoint(eager=False) runs
+    # every shuffle and broadcast stage of its plan at the call (2 jobs
+    # here). The collect below then materializes the checkpoint blocks
+    # in its own job, and the only other consumer (the broadcast into
+    # the scored join) reads those blocks in the final action — an eager
+    # count() would be one extra fixed-cost job per probe. A checkpoint,
+    # not .cache(): nothing is left in the CacheManager after the serve,
+    # and no later probe can match this frame's plan by the index's root
+    # path (see _ivf_centroids)
     qcells = probed_cells(
         spark, path, queries, n_probe, id_col, vec_col
     ).localCheckpoint(eager=False)
     cells = [r["cell"] for r in qcells.select("cell").distinct().collect()]
-    vectors = spark.read.parquet(f"{path}/vectors").filter(
+    vectors = read_parquet(spark, f"{path}/vectors").filter(
         F.col("cell").isin(cells)  # static partition pruning at the scan
     )
     tomb = _tombstones(spark, path, id_col)
@@ -467,7 +473,7 @@ def upsert_into_ivf_index(
     id_list = [r[0] for r in ids_df.collect()]  # batch-sized, driver-safe
     vectors = f"{path}/vectors"
     hit = (
-        spark.read.parquet(vectors)
+        read_parquet(spark, vectors)
         .filter(F.col(id_col).isin(id_list))
         .select("cell")
         .distinct()
@@ -477,7 +483,7 @@ def upsert_into_ivf_index(
         # rewrite the affected cell dirs minus the upserted ids; the
         # source scan lists only those cell directories
         keep = (
-            spark.read.parquet(vectors)
+            read_parquet(spark, vectors)
             .filter(F.col("cell").isin(cells))
             .filter(~F.col(id_col).isin(id_list))
         )
@@ -569,9 +575,9 @@ def compact_ivf_index(
     # snapshot the tombstone file list BEFORE reading: only these files
     # are folded into the rewrite, so only these files are cleared after
     _, tomb_files = _tombstone_files(spark, path)
-    df = spark.read.parquet(vectors)
+    df = read_parquet(spark, vectors)
     if tomb_files:
-        tomb = _read_tombstones(spark, tomb_files, id_col)
+        tomb = _read_tombstones(spark, path, tomb_files, id_col)
         df = df.join(tomb.localCheckpoint(), id_col, "left_anti")
     plan = compact_partitioned(spark, vectors, tmp_out, ["cell"], df=df)
     _swap_in(spark, vectors, tmp_out, f"{path}/vectors__old")
@@ -760,7 +766,7 @@ def graph_index_topk(
     delete semantics; compact_graph_index physically removes them."""
     from overseer_spark.operators.graph import graph_beam_topk  # noqa: PLC0415
 
-    qv = spark.read.parquet(f"{path}/qv")
+    qv = read_parquet(spark, f"{path}/qv")
     meta = _graph_index_meta(spark, path)
     if meta["edges_buckets"]:
         # bucketed serving layout: read through the catalog table so the
@@ -768,8 +774,8 @@ def graph_index_topk(
         tbl = _register_bucketed_edges(spark, path, int(meta["edges_buckets"]))
         edges = spark.table(tbl)
     else:
-        edges = spark.read.parquet(f"{path}/edges")
-    entries = spark.read.parquet(f"{path}/entries")
+        edges = read_parquet(spark, f"{path}/edges")
+    entries = read_parquet(spark, f"{path}/entries")
     if hops is None:
         hops = int(meta["tree_depth"]) + fine_hops
     if queries is None:
@@ -862,7 +868,7 @@ def insert_into_graph_index(
         ).select(F.col(id_col).alias("vec_id"), "q").cache()
         id_list = [r[0] for r in nq.select("vec_id").collect()]
         clash = (
-            spark.read.parquet(f"{path}/qv")
+            read_parquet(spark, f"{path}/qv")
             .filter(F.col("vec_id").isin(id_list))
             .count()
         )
@@ -943,8 +949,8 @@ def compact_graph_index(
     _, tomb_files = _tombstone_files(spark, path)
     if not tomb_files and not force:
         return {"n_deleted": 0, "n_bridge_edges": 0}
-    qv = spark.read.parquet(f"{path}/qv")
-    edges = spark.read.parquet(f"{path}/edges")
+    qv = read_parquet(spark, f"{path}/qv")
+    edges = read_parquet(spark, f"{path}/edges")
     if not tomb_files:
         # Force-fold with an EMPTY delete set — the streaming-ingest
         # trigger's common case (r12 measurement: the general path spent
@@ -989,10 +995,10 @@ def compact_graph_index(
         # lazy cache + captured count (r13, guide §1.2): the count is the
         # first consumer and doubles as the stats value — eager_cache plus
         # the stats' re-count was two extra jobs per compact
-        tomb = _read_tombstones(spark, tomb_files, "vec_id").cache()
+        tomb = _read_tombstones(spark, path, tomb_files, "vec_id").cache()
         n_deleted = tomb.count()
         dead = tomb.withColumnRenamed("vec_id", "_dead")
-        entries = spark.read.parquet(f"{path}/entries")
+        entries = read_parquet(spark, f"{path}/entries")
 
         kept_qv = qv.join(tomb, "vec_id", "left_anti")
     # surviving neighborhoods of each deleted node — out_of_dead CACHED
@@ -1159,7 +1165,7 @@ def lsh_index_topk(
     in tests/test_ann_index.py)."""
     from overseer_spark.operators.similarity import rp_signatures
 
-    planes_df = spark.read.parquet(f"{path}/planes")
+    planes_df = read_parquet(spark, f"{path}/planes")
     qsig = rp_signatures(
         queries, F.broadcast(planes_df), id_col, vec_col, out_id="query_id"
     ).localCheckpoint()  # not cached: see graph_index_topk
@@ -1167,7 +1173,7 @@ def lsh_index_topk(
         (r["table"], r["sig"])
         for r in qsig.select("table", "sig").distinct().collect()
     ]
-    vectors = spark.read.parquet(f"{path}/vectors").filter(
+    vectors = read_parquet(spark, f"{path}/vectors").filter(
         bucket_predicate(buckets)
     )
     q = queries.select(
@@ -1242,7 +1248,7 @@ def build_ivfpq_index(
 def _load_codebooks(spark: SparkSession, path: str):
     import numpy as np  # noqa: PLC0415
 
-    rows = spark.read.parquet(f"{path}/codebooks").collect()
+    rows = read_parquet(spark, f"{path}/codebooks").collect()
     m = max(r["j"] for r in rows) + 1
     ks = max(r["c"] for r in rows) + 1
     sub = len(rows[0]["cvec"])
@@ -1279,7 +1285,7 @@ def ivfpq_index_topk(
         .localCheckpoint()  # not cached: see graph_index_topk
     )
     cells = [r["cell"] for r in qcells.select("cell").distinct().collect()]
-    codes = spark.read.parquet(f"{path}/codes").filter(
+    codes = read_parquet(spark, f"{path}/codes").filter(
         F.col("cell").isin(cells) if cells else F.lit(False)
     )
     _, _adc = _adc_lut_udf(spark, queries, books, id_col, vec_col)

@@ -149,12 +149,11 @@ def quantized_vectors(
     return emb.select(*cols)
 
 
-def iq_dot(a, b):
-    """Integer dot product of two quantized BIGINT vectors."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
+# graph_beam_topk's SQL expressions: the integer dot of a query vector
+# ``qv`` and a node vector ``nq`` (quantized BIGINT coordinates), and the
+# beam order (sim DESC, ties → min id) within each query
+_IQ_DOT = "aggregate(zip_with(qv, nq, (x, y) -> x * y), 0L, (acc, v) -> acc + v)"
+_BEAM_RANK = "row_number() OVER (PARTITION BY query_id ORDER BY s DESC, node)"
 
 
 def knn_graph_edges(
@@ -447,12 +446,13 @@ def graph_beam_topk(
 ) -> DataFrame:
     """Deterministic beam search over a kNN graph — HNSW-layer-0 serving
     semantics as dataflow: score the dimension-sized entry layer, keep
-    the ``entry_top`` best, then ``hops`` synchronous rounds of
-    (frontier ⋈ edges → score new candidates → union-distinct into the
-    visited set → beam = top-``beam`` of visited). Returns
-    (query_id, vec_id, sim_q, rank) — the top-``k`` of everything
-    visited, integer-quantized sims, ties → min id, so the result is a
-    pure function of its inputs (the PY-provenance pin convention).
+    the ``entry_top`` best, then ``hops`` synchronous rounds of (expand
+    the top-``beam`` visited nodes along their out-edges → score the
+    unseen neighbours → add them to the visited set; the first round
+    expands the whole entry layer). Returns (query_id, vec_id, sim_q,
+    rank) — the top-``k`` of everything visited, integer-quantized
+    sims, ties → min id, so the result is a pure function of its inputs
+    (the PY-provenance pin convention).
 
     Per-query work is BOUNDED by entry_top + hops·beam·max_deg candidate
     scorings regardless of corpus size, where max_deg is the edge set's
@@ -460,10 +460,31 @@ def graph_beam_topk(
     serving_knn_graph's construction (the degree-capped hub tree; the
     bound is asserted flat across the scale ladder in
     tests/test_similarity.py). That property is what makes graph serving
-    the billion-vector path. Each hop is one equi-join of the beam-sized
-    frontier against the edge set (at scale: the edge relation bucketed
-    by src, so the probe is an index join) plus one broadcast rescore;
-    only (query_id, node, sim) triples ever shuffle.
+    the billion-vector path.
+
+    Cost: the whole search is ONE plan that grows linearly with
+    ``hops``, and one action runs it. Each hop reads the previous
+    visited state (query_id, node, s) exactly once: rank it, left-join
+    it to the edges on ``node = src AND rank <= beam``, explode every
+    row into itself plus its neighbour (s NULL), keep max(s) per
+    (query_id, node), and score only the rows whose s is still NULL
+    (a left join to qv guarded by ``s IS NULL``, plus the broadcast
+    query vectors), dropping nodes qv does not hold. The entry layer's
+    rank window shuffles the state by query_id once; while qv and the
+    edges broadcast, every later join keeps that partitioning and the
+    (query_id, node) aggregate is satisfied by it, so no hop adds a
+    shuffle, and the edge, qv and query broadcasts are built once and
+    reused by every hop. Spark jobs per search are then flat in
+    ``hops`` (7 at hops 2-8 on the smoke index, pinned in
+    tests/test_plans.py), where the per-hop checkpoint loop this
+    replaces ran 8 + 6·hops: under AQE a lazy localCheckpoint still
+    runs every shuffle and broadcast stage of its plan at the call.
+    The plan string grows by about 20 KB per hop (59 KB at 4 hops,
+    137 KB at 8), never doubling, so there is no lineage to cut.
+    The expressions are SQL strings, parsed in the JVM: a select of
+    the integer dot built from Column lambdas took 31-37 ms of driver
+    time against 10-13 ms as a string (warm, local[2]), and the plan
+    holds one per hop.
 
     ``queries``: (query_id, qv). ``entries``: (node). ``qv``:
     (vec_id, q) quantized corpus vectors. ``exclude``: optional (node)
@@ -473,16 +494,21 @@ def graph_beam_topk(
     until a compaction physically removes it); applied BEFORE the final
     rank, so the top-k stays dense.
     """
-    nodes_q = qv.select(F.col("vec_id").alias("node"), F.col("q").alias("nq"))
-    w_rank = Window.partitionBy("query_id").orderBy(F.desc("s"), "node")
+    # the entry layer's join to qv is planned as an inner join, which
+    # filters q IS NOT NULL; the same filter here lets every hop reuse
+    # that one qv broadcast
+    nodes = qv.selectExpr("vec_id", "q AS nq").filter("nq IS NOT NULL")
+    links = edges.select("src", "dst")
+    bq = F.broadcast(queries.select("query_id", "qv"))
 
-    def score(cand: DataFrame) -> DataFrame:
+    def scored(cand: DataFrame) -> DataFrame:
+        """(query_id, node, s) with every NULL s scored; nodes absent
+        from qv leave."""
         return (
-            cand.join(nodes_q, "node")
-            .join(F.broadcast(queries), "query_id")
-            .select(
-                "query_id", "node", iq_dot(F.col("qv"), F.col("nq")).alias("s")
-            )
+            cand.join(nodes, F.expr("node = vec_id AND s IS NULL"), "left")
+            .filter("s IS NOT NULL OR nq IS NOT NULL")
+            .join(bq, "query_id")
+            .selectExpr("query_id", "node", f"coalesce(s, {_IQ_DOT}) AS s")
         )
 
     # The query's own node (when it is in the corpus) is a legal
@@ -492,67 +518,32 @@ def graph_beam_topk(
     # hub→cell-members path to its near-duplicate neighbors (recall
     # 0.0 at 10x). Greedy graph search in HNSW/DiskANN converges
     # THROUGH the query's position; self is dropped at result time.
-    e0 = (
-        score(
+    visited = (
+        scored(
             queries.select("query_id")
             .crossJoin(F.broadcast(entries.select("node").distinct()))
+            .selectExpr("query_id", "node", "CAST(NULL AS BIGINT) AS s")
         )
-        .withColumn("rk", F.row_number().over(w_rank))
-        .filter(F.col("rk") <= entry_top)
+        .selectExpr("*", f"{_BEAM_RANK} AS rk")
+        .filter(f"rk <= {entry_top}")
         .drop("rk")
     )
-    # Lineage + heap hygiene: the visited set is iterative state, so a
-    # cached-only loop nests the plan one union-distinct-score deeper per
-    # hop; Spark's SQL listener retains a plan STRING per execution, and
-    # a session running several graph entries back to back (the driver's
-    # 50-entry correctness prefix; the oracle-parity suite) OOMed a
-    # default-sized 1g driver heap building those strings (observed
-    # round 10). localCheckpoint per hop is the same discipline the
-    # iterative operators already follow (SCALING.md "iterative ML /
-    # graph" row): it materializes the hop (the eager step the old
-    # eager_cache paid anyway), TRUNCATES the lineage so every plan stays
-    # shallow, and the superseded hop blocks are dropped by the context
-    # cleaner when their references die at function exit. The visited
-    # state is query-batch-sized (≤ queries × visited nodes), never
-    # corpus-sized.
-    #
-    # r12: the checkpoints are LAZY (eager=False). The per-hop
-    # truncation itself is non-negotiable — visited is referenced twice
-    # per hop (anti-join + union), so an untruncated loop embeds the
-    # previous plan twice and grows 2^hops copies of the entry subtree —
-    # but eager=False truncates the logical plan at creation just the
-    # same while letting ONE action at the end drive every hop
-    # (checkpoint blocks materialize mid-job) instead of hops+1 driver
-    # round trips per serve. Interleaved A/B: identical results,
-    # min 2.24 s vs 2.59 s per serve on the persisted session index.
-    visited = e0.localCheckpoint(eager=False)
-    frontier = visited.select("query_id", "node")
+    expand = entry_top  # the first hop expands the whole entry layer
     for _ in range(hops):
-        cand = (
-            frontier.select("query_id", F.col("node").alias("src"))
-            .join(edges, "src")
-            .select("query_id", F.col("dst").alias("node"))
-            .distinct()
+        visited = scored(
+            visited.selectExpr("*", f"{_BEAM_RANK} AS rk")
+            .join(links, F.expr(f"node = src AND rk <= {expand}"), "left")
+            .selectExpr(
+                "query_id",
+                "explode(array(named_struct('node', node, 's', s), "
+                "named_struct('node', dst, 's', CAST(NULL AS BIGINT)))) AS c",
+            )
+            .filter("c.node IS NOT NULL")
+            .groupBy("query_id", "c.node")
+            .agg(F.max("c.s").alias("s"))
         )
-        # r12: score only UNSEEN candidates — the visited set is
-        # batch-sized (≤ queries × visited nodes), so the anti-join is a
-        # broadcast, while the previous union-DISTINCT re-shuffled and
-        # re-deduped the whole growing visited set every hop and
-        # re-scored nodes it already held. The set is identical: e0 is
-        # duplicate-free by construction, each hop unions only pairs
-        # provably absent, and sims are a pure function of
-        # (query, node) — so a disjoint union needs no dedup.
-        new = cand.join(
-            visited.select("query_id", "node"), ["query_id", "node"],
-            "left_anti",
-        )
-        visited = visited.unionByName(score(new)).localCheckpoint(eager=False)
-        frontier = (
-            visited.withColumn("rk", F.row_number().over(w_rank))
-            .filter(F.col("rk") <= beam)
-            .select("query_id", "node")
-        )
-    res = visited.filter(F.col("node") != F.col("query_id"))
+        expand = beam
+    res = visited.filter("node != query_id")
     if exclude is not None:
         # no broadcast hint: the exclude set is the index's tombstone
         # backlog, unbounded between compactions — forcing a broadcast
@@ -561,15 +552,7 @@ def graph_beam_topk(
         # small and degrades to a shuffled anti-join when it isn't; the
         # left side is the batch-sized visited set either way.
         res = res.join(exclude.select("node").distinct(), "node", "left_anti")
-    return (
-        res
-        .withColumn("rank", F.row_number().over(w_rank).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col("node").alias("vec_id"),
-            F.col("s").alias("sim_q"),
-            "rank",
-        )
-        .localCheckpoint(eager=False)
-    )
+    return res.selectExpr(
+        "query_id", "node AS vec_id", "s AS sim_q",
+        f"CAST({_BEAM_RANK} AS BIGINT) AS rank",
+    ).filter(f"rank <= {k}")

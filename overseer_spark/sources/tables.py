@@ -9,8 +9,7 @@ columnar lakehouse itself.)
 
 Inferring a table's schema costs a Spark job that reads the parquet
 footers, so ``load_table`` infers it once per version of the table's
-files (see ``dir_memo``) and reads with ``spark.read.schema(s)``; a
-partitioned directory infers on every read.
+files (see ``read_parquet``) and reads with ``spark.read.schema(s)``.
 """
 
 from __future__ import annotations
@@ -51,17 +50,24 @@ def hadoop_fs(spark: SparkSession, path: str):
 
 
 def data_files(spark: SparkSession, path: str):
-    """(fs, [FileStatus]) of the DATA files directly under ``path``
-    (hidden and marker files excluded), or of ``path`` itself when it is
-    a file; a missing path lists as empty."""
+    """(fs, [FileStatus]) of the DATA files under ``path``, descending
+    into subdirectories (a partitioned layout's ``col=value``
+    directories; hidden and marker files and directories excluded), or
+    of ``path`` itself when it is a file; a missing path lists as
+    empty."""
     fs, d = hadoop_fs(spark, path)
     if not fs.exists(d):
         return fs, []
-    return fs, [
-        st
-        for st in fs.listStatus(d)
-        if not st.getPath().getName().startswith(("_", "."))
-    ]
+    found, dirs = [], [d]
+    while dirs:
+        for st in fs.listStatus(dirs.pop()):
+            if st.getPath().getName().startswith(("_", ".")):
+                continue
+            if st.isDirectory():
+                dirs.append(st.getPath())
+            else:
+                found.append(st)
+    return fs, found
 
 
 # Directory memo: key -> loaded value, least recently used first. The
@@ -106,21 +112,25 @@ def dir_memo(spark: SparkSession, path: str, load, files=None):
     return value
 
 
-def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet(path)`` with the schema inferred once per
-    version of the files. A directory with subdirectories (a partitioned
-    layout, whose partition columns come from the directory names)
-    infers on every read."""
-    _, files = data_files(spark, path)
-    if any(st.isDirectory() for st in files):
-        return spark.read.parquet(path)
-    schema = dir_memo(spark, path, lambda p: spark.read.parquet(p).schema, files)
-    return spark.read.schema(schema).parquet(path)
+def read_parquet(spark: SparkSession, path: str, files=None) -> DataFrame:
+    """``spark.read.parquet`` of the directory ``path``, or of its data
+    files ``files`` (FileStatus, as ``data_files`` lists them), with the
+    schema inferred once per version of the files (``dir_memo``) and
+    every read made with ``spark.read.schema(s)``: an inferred read
+    starts a Spark job that reads the parquet footers, a known-schema
+    read starts none. A partitioned layout (``col=value``
+    subdirectories) is fingerprinted by its leaf data files, and its
+    memoized schema holds the partition columns too."""
+    paths = [path] if files is None else [st.getPath().toString() for st in files]
+    schema = dir_memo(
+        spark, path, lambda _: spark.read.parquet(*paths).schema, files
+    )
+    return spark.read.schema(schema).parquet(*paths)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     configure_for_oracle(spark)
-    df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         # events.ts is TIMESTAMP(NANOS) parquet, which Spark's vectorized
         # reader rejects; nanosAsLong (set in configure_for_oracle) reads it

@@ -935,7 +935,6 @@ def test_ivf_lifecycle_random_sequence_content_parity(spark, emb):
         shutil.rmtree(d, ignore_errors=True)
 
 
-@pytest.mark.slow
 def test_graph_lifecycle_random_sequence_content_parity(spark, emb):
     """Seeded random interleaving of insert / delete / compact on the
     GRAPH index vs a pure-Python id-set model: the servable node set
@@ -1277,6 +1276,55 @@ def test_graph_index_replaced_at_same_path_serves_new_query_vectors(
     finally:
         shutil.rmtree(d, ignore_errors=True)
         shutil.rmtree(other, ignore_errors=True)
+
+
+def _replace_part(df, part, partition_by=()):
+    """Write ``df`` to a side directory and move it in over ``part``, as
+    another process's rewrite of the part looks to this session."""
+    side = tempfile.mkdtemp(prefix="index_part_side_")
+    shutil.rmtree(side)
+    df.write.partitionBy(*partition_by).parquet(side)
+    shutil.rmtree(part)
+    shutil.move(side, part)
+
+
+def test_index_parts_rewritten_with_a_new_schema_are_read_fresh(
+    spark, emb, graph_index_path, index_path
+):
+    """Each index part read with a memoized schema (the graph index's
+    qv, edges, entries and tombstones; the IVF index's partitioned
+    vectors) is rewritten at the same path with a changed schema: one
+    column more and the columns reordered. The warm read then carries
+    the new schema, and the warm serve equals the serve before."""
+    g = _copy(graph_index_path, "graph_fresh_parts_")
+    v = _copy(index_path, "ivf_fresh_vectors_")
+
+    def graph_serve():
+        return _all_rows(AI.graph_index_topk(spark, g, query_ids=range(5), k=5))
+
+    try:
+        AI.delete_from_graph_index(spark, g, [7])
+        before = graph_serve()  # memoizes every part's schema
+        for part in ("qv", "edges", "entries", "tombstones"):
+            old = spark.read.parquet(f"{g}/{part}")
+            new = old.select(F.lit(1).alias("_v"), *reversed(old.columns))
+            _replace_part(new, f"{g}/{part}")
+            assert tables.read_parquet(spark, f"{g}/{part}").columns == new.columns
+            assert graph_serve() == before, part
+
+        before = _probe(spark, emb, v)
+        old = spark.read.parquet(f"{v}/vectors")
+        _replace_part(
+            old.select(F.lit(1).alias("_v"), "embedding", "vec_id", "cell"),
+            f"{v}/vectors", ["cell"],
+        )
+        assert tables.read_parquet(spark, f"{v}/vectors").columns == [
+            "_v", "embedding", "vec_id", "cell",
+        ]
+        assert _probe(spark, emb, v) == before
+    finally:
+        shutil.rmtree(g, ignore_errors=True)
+        shutil.rmtree(v, ignore_errors=True)
 
 
 def test_ivf_lsh_ivfpq_serves_and_compaction_leave_nothing_cached(

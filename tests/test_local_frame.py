@@ -256,21 +256,34 @@ def test_rewritten_table_file_is_read_fresh(spark, tmp_path):
     assert got.collect() == [("p", "x"), ("q", "y")]
 
 
-def test_partitioned_table_directory_still_infers(spark, tmp_path):
+def test_partitioned_table_directory_is_read_with_memoized_schema(
+    spark, tmp_path
+):
+    """A partitioned directory's memoized schema holds the partition
+    column, and a rewrite of the leaf files is read fresh."""
     d = str(tmp_path)
     path = os.path.join(d, "p.parquet")
     spark.createDataFrame([(1, "a"), (2, "b")], "v int, k string").write.partitionBy(
         "k"
     ).parquet(path)
     got = tables.load_table(spark, d, "p")
-    assert sorted(got.columns) == ["k", "v"]
+    assert got.columns == ["v", "k"]
     assert sorted(got.collect()) == [(1, "a"), (2, "b")]
-    assert _memo_keys(path) == []
+    assert len(_memo_keys(path)) == 1
+    assert _jobs_run_by(spark, lambda: tables.load_table(spark, d, "p")) == []
+
+    spark.createDataFrame([(3, "x", 5)], "v int, w string, k int").write.mode(
+        "overwrite"
+    ).partitionBy("k").parquet(path)
+    got = tables.load_table(spark, d, "p")
+    assert got.columns == ["v", "w", "k"]
+    assert got.schema["k"].dataType == T.IntegerType()
+    assert got.collect() == [(3, "x", 5)]
 
 
 def _inferred(spark, sf_dir, name, monkeypatch):
     with monkeypatch.context() as m:
-        m.setattr(tables, "_read_parquet", lambda spark, p: spark.read.parquet(p))
+        m.setattr(tables, "read_parquet", lambda spark, p: spark.read.parquet(p))
         return tables.load_table(spark, sf_dir, name)
 
 

@@ -770,6 +770,10 @@ def test_lm_family_scan_counts_pinned(spark):
         "text_bm25_search": 3,
         "text_bigram_pmi": 4,
         "text_ccnet_buckets": 4,
+        # graph_beam_topk is one plan: each of its 4 hops prints its own
+        # qv and edge scans under broadcasts that exchange reuse builds
+        # once (jobs flat in hops: test_graph_beam_is_one_plan_flat_in_hops)
+        "ann_graph_bucketed_index_topk": 10,
     }
     over = {}
     for name, budget in budgets.items():
@@ -812,6 +816,7 @@ def test_new_entries_pass_scan_audit(spark):
         "text_js_divergence_by_source", "q_mad_outliers", "text_dsir_scores",
         "text_perplexity_bigram", "text_perplexity_unigram", "text_chi2_terms",
         "text_bm25_search", "text_bigram_pmi", "text_ccnet_buckets",
+        "ann_graph_bucketed_index_topk",
     }
     over = {}
     for name in CATALOG:
@@ -969,4 +974,56 @@ def test_graph_bucketed_layout_is_immutable(spark):
         assert victim not in post
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def test_graph_beam_is_one_plan_flat_in_hops(spark):
+    """graph_beam_topk is one plan whose hops add no Spark job and no
+    shuffle: each hop reads the previous visited state once, its joins
+    to the broadcast edges, qv and queries keep the entry layer's
+    query_id partitioning, and the broadcasts are built once and reused
+    by every hop. A per-hop checkpoint loop ran 8 + 6·hops jobs (20 at
+    hops=2, 44 at hops=6)."""
+    import shutil
+    import tempfile
+
+    from overseer_spark.operators import ann_index as AI
+    from overseer_spark.operators.graph import graph_beam_topk
+    from overseer_spark.sources.tables import load_table
+
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    d = tempfile.mkdtemp(prefix="gidx_beam_plan_")
+    try:
+        AI.build_graph_index(emb, d, n_cells=4, n_probe=2, edge_k=6)
+        qv = spark.read.parquet(f"{d}/qv")
+        edges = spark.read.parquet(f"{d}/edges")
+        entries = spark.read.parquet(f"{d}/entries")
+        queries = (
+            qv.filter("vec_id < 5")
+            .selectExpr("vec_id AS query_id", "q AS qv")
+            .localCheckpoint()
+        )
+        sc = spark.sparkContext
+        shape = {}
+        for hops in (2, 6):
+            group = f"graph-beam-hops-{hops}"
+            sc.setJobGroup(group, group)
+            try:
+                # the call is inside the group: a lazy localCheckpoint
+                # runs its plan's shuffle and broadcast stages at the call
+                beam = graph_beam_topk(qv, edges, queries, entries, hops=hops)
+                assert len(beam.collect()) == 50
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            plan = beam._jdf.queryExecution().executedPlan().toString()
+            plan = plan.split("== Initial Plan ==")[0]  # AQE's final plan
+            shape[hops] = (
+                len(sc.statusTracker().getJobIdsForGroup(group)),
+                len(re.findall(r"\bExchange\b", plan)),
+                len(re.findall(r"- BroadcastExchange\b", plan)),
+            )
+        assert shape[2] == shape[6], (
+            f"(jobs, shuffle exchanges, broadcast builds) by hops: {shape}"
+        )
+    finally:
         shutil.rmtree(d, ignore_errors=True)
